@@ -10,10 +10,14 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 Structured Streaming source for the MaxScale CDC
@@ -44,9 +48,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * silently skipped.
   *
   * Scale note: one TCP subscription is inherently a single-reader
-  * stream — the parallelism lever is downstream (`repartition` after
-  * `load()`), matching how one binlog shard maps onto one source task;
-  * multi-table fan-in = one source per table, unioned.
+  * stream, matching how one binlog shard maps onto one receiver;
+  * multi-table fan-in = one source per table, unioned. The receiver
+  * encodes each event once into `UnsafeRow` bytes, and a large
+  * micro-batch is handed out as up to default-parallelism contiguous
+  * partitions (a small one stays one partition), so the per-event work
+  * of every job that reads the batch spreads over the workers.
   */
 object MaxScaleCdc {
   val schema: StructType = StructType(Seq(
@@ -63,25 +70,48 @@ object MaxScaleCdc {
     StructField("schema_version", IntegerType), // set on ddl events
     StructField("payload", StringType))) // raw event JSON / error text
 
-  /** Serializable row snapshot buffered on the driver. */
-  final case class EventRow(
-      kind: String, database: String, table: String, op: String,
-      domain: java.lang.Integer, serverId: java.lang.Integer,
-      sequence: java.lang.Long, eventNumber: java.lang.Long,
-      tsMicros: java.lang.Long, gtid: String,
-      schemaVersion: java.lang.Integer, payload: String)
+  /** Encodes receiver events into the `UnsafeRow` bytes of [[schema]],
+    * once per event as it arrives: a micro-batch partition is then a
+    * blob of these rows, read back by pointing one reused `UnsafeRow`
+    * at each (no per-event objects, no per-job Java serialization of
+    * rows). One instance per receiver thread; not thread-safe. */
+  final class RowEncoder(database: String, table: String) {
+    private val writer = new UnsafeRowWriter(schema.length, 256)
 
-  def toRow(db: String, tbl: String, ev: Either[String, CdcEvent]): EventRow = ev match {
-    case Right(d: DdlEvent) =>
-      EventRow("ddl", d.database, d.table, null, null, null, null, null, null,
-        d.gtid, d.version, d.rawJson)
-    case Right(m: DmlEvent) =>
-      EventRow("dml", db, tbl, m.eventKind, m.domain, m.serverId, m.sequence,
-        m.eventNumber, m.timestamp * 1000000L,
-        s"${m.domain}-${m.serverId}-${m.sequence}", null, m.rawJson)
-    case Left(err) =>
-      EventRow("corrupt", db, tbl, null, null, null, null, null, null, null, null, err)
+    private def str(i: Int, s: String): Unit =
+      if (s == null) writer.setNullAt(i) else writer.write(i, UTF8String.fromString(s))
+
+    private def int(i: Int, v: Integer): Unit =
+      if (v == null) writer.setNullAt(i) else writer.write(i, v.intValue)
+
+    /** The row of `ev`; `version` is the schema version in effect at
+      * ingest, stamped onto DML rows (DDL rows carry their own). */
+    def encode(ev: Either[String, CdcEvent], version: Integer): Array[Byte] = {
+      writer.reset()
+      writer.zeroOutNullBytes()
+      ev match {
+        case Right(d: DdlEvent) =>
+          str(0, "ddl"); str(1, d.database); str(2, d.table)
+          (3 to 8).foreach(writer.setNullAt)
+          str(9, d.gtid); int(10, d.version); str(11, d.rawJson)
+        case Right(m: DmlEvent) =>
+          str(0, "dml"); str(1, database); str(2, table); str(3, m.eventKind)
+          writer.write(4, m.domain); writer.write(5, m.serverId)
+          writer.write(6, m.sequence); writer.write(7, m.eventNumber)
+          writer.write(8, m.timestamp * 1000000L)
+          str(9, gtidOf(m)); int(10, version); str(11, m.rawJson)
+        case Left(err) =>
+          str(0, "corrupt"); str(1, database); str(2, table)
+          (3 to 10).foreach(writer.setNullAt)
+          str(11, err)
+      }
+      // copy: the writer's buffer is reused for the next event
+      writer.getRow.copy().getBytes
+    }
   }
+
+  /** A DML event's GTID, `domain-server_id-sequence`. */
+  def gtidOf(m: DmlEvent): String = s"${m.domain}-${m.serverId}-${m.sequence}"
 }
 
 final class MaxScaleCdcProvider extends TableProvider with DataSourceRegister {
@@ -175,17 +205,16 @@ final class MaxScaleCdcMicroBatchStream(options: Map[String, String])
   val registry = new SchemaRegistry
 
   // Driver-side receiver, like Spark's own socket source: the TCP pump
-  // fills `buffer`; micro-batches slice [start, end) out of it.
-  private val buffer = mutable.ArrayBuffer.empty[MaxScaleCdc.EventRow]
+  // fills `buffer`; micro-batches slice [start, end) out of it. Each
+  // entry holds the event's encoded row plus the resume position
+  // (gtid, schema version) in effect AFTER it; `baseResume` = the
+  // position at index `base` (advanced on commit, seeded from options
+  // or an adopted checkpoint). Guarded by the buffer lock.
+  private val buffer = mutable.ArrayBuffer.empty[MaxScaleCdcMicroBatchStream.Buffered]
   private var base = 0L // events trimmed after commit
   private val stopped = new AtomicBoolean(false)
   @volatile private var receiverError: Throwable = _
 
-  // Resume positions in lockstep with `buffer`: resumeBuf(j) = (gtid,
-  // schema version) in effect AFTER buffer(j); `baseResume` = the
-  // position at index `base` (advanced on commit, seeded from options
-  // or an adopted checkpoint). Guarded by the buffer lock.
-  private val resumeBuf = mutable.ArrayBuffer.empty[(String, Integer)]
   private var baseResume: (String, Integer) =
     (options.get("gtid").orNull, options.get("version").map(v => Int.box(v.toInt)).orNull)
   // checkpoint adoption window: deserializeOffset calls arriving BEFORE
@@ -232,17 +261,17 @@ final class MaxScaleCdcMicroBatchStream(options: Map[String, String])
   /** Registered wire format, exposed for option-passthrough tests. */
   private[cdc] def clientWireType: String = client.wireType
 
-  /** Blocking bounded append (see `maxBufferedEvents` above); the resume
-    * position after the row is tracked in lockstep (DML rows carry their
-    * own GTID; DDL/corrupt rows inherit the previous one when absent). */
-  private def append(row: MaxScaleCdc.EventRow): Unit = buffer.synchronized {
+  /** Blocking bounded append (see `maxBufferedEvents` above) of one
+    * encoded row; the resume position after it is its own `gtid` /
+    * `version` where the event carries one, else the previous one. */
+  private def append(row: Array[Byte], ddl: Boolean, gtid: String,
+      version: Integer): Unit = buffer.synchronized {
     while (buffer.size >= maxBufferedEvents && !stopped.get) buffer.wait(100)
     if (!stopped.get) {
-      val prev = if (resumeBuf.nonEmpty) resumeBuf.last else baseResume
-      val g = if (row.gtid != null && row.gtid.nonEmpty) row.gtid else prev._1
-      val v = if (row.schemaVersion != null) row.schemaVersion else prev._2
-      buffer += row
-      resumeBuf += ((g, v))
+      val prev = if (buffer.nonEmpty) (buffer.last.gtid, buffer.last.version) else baseResume
+      val g = if (gtid != null && gtid.nonEmpty) gtid else prev._1
+      val v = if (version != null) version else prev._2
+      buffer += MaxScaleCdcMicroBatchStream.Buffered(row, ddl, g, v)
       buffer.notifyAll() // wake a planInputPartitions waiting on replay
     }
   }
@@ -259,6 +288,7 @@ final class MaxScaleCdcMicroBatchStream(options: Map[String, String])
       // row even across in-band schema evolution (SURVEY.md §7.3);
       // seeded from the adopted/configured resume position
       var currentVersion: java.lang.Integer = buffer.synchronized(baseResume._2)
+      val enc = new MaxScaleCdc.RowEncoder(database, table)
       while (!stopped.get && !eof) {
         val res = client.poll()
         eof = res.eof
@@ -266,17 +296,17 @@ final class MaxScaleCdcMicroBatchStream(options: Map[String, String])
           case e @ Right(d: DdlEvent) =>
             registry.register(d)
             currentVersion = Int.box(d.version)
-            append(MaxScaleCdc.toRow(database, table, e))
-          case e @ Right(_: DmlEvent) =>
-            append(MaxScaleCdc.toRow(database, table, e)
-              .copy(schemaVersion = currentVersion))
+            append(enc.encode(e, currentVersion), ddl = true, d.gtid, currentVersion)
+          case e @ Right(m: DmlEvent) =>
+            append(enc.encode(e, currentVersion), ddl = false, MaxScaleCdc.gtidOf(m),
+              currentVersion)
           case e @ Left(err) =>
             CdcWarnings.emit(s"$database.$table", s"decode: $err")
-            append(MaxScaleCdc.toRow(database, table, e))
+            append(enc.encode(e, null), ddl = false, null, null)
         }
         res.serverMessages.foreach { m =>
           CdcWarnings.emit(s"$database.$table", s"server: $m")
-          append(MaxScaleCdc.toRow(database, table, Left(s"server: $m")))
+          append(enc.encode(Left(s"server: $m"), null), ddl = false, null, null)
         }
       }
     } catch {
@@ -289,11 +319,10 @@ final class MaxScaleCdcMicroBatchStream(options: Map[String, String])
   /** Offset for `idx` with the resume position of its last event (the
     * buffer lock must be held). */
   private def offsetAtLocked(idx: Long): CdcOffset =
-    if (idx <= base || resumeBuf.isEmpty) CdcOffset(idx, baseResume._1, baseResume._2)
+    if (idx <= base || buffer.isEmpty) CdcOffset(idx, baseResume._1, baseResume._2)
     else {
-      val j = math.min((idx - 1 - base).toInt, resumeBuf.size - 1)
-      val (g, v) = resumeBuf(j)
-      CdcOffset(idx, g, v)
+      val b = buffer(math.min((idx - 1 - base).toInt, buffer.size - 1))
+      CdcOffset(idx, b.gtid, b.version)
     }
 
   override def initialOffset(): Offset = {
@@ -356,7 +385,7 @@ final class MaxScaleCdcMicroBatchStream(options: Map[String, String])
     var i = math.max(from + 1, base)
     var cut = until
     while (i < until && cut == until) {
-      if (buffer((i - base).toInt).kind == "ddl") cut = i
+      if (buffer((i - base).toInt).ddl) cut = i
       i += 1
     }
     cut
@@ -431,7 +460,13 @@ final class MaxScaleCdcMicroBatchStream(options: Map[String, String])
       val hi = math.max(lo, math.min(buffer.size, (e - base).toInt))
       buffer.slice(lo, hi).toArray
     }
-    Array(CdcInputPartition(rows))
+    // contiguous ranges in order, so a batch's collect() order is the
+    // wire order however many partitions it spans
+    val parallelism = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.defaultParallelism).getOrElse(1)
+    val n = MaxScaleCdcMicroBatchStream.splits(rows.length, parallelism)
+    def bound(p: Int) = (p.toLong * rows.length / n).toInt
+    Array.tabulate[InputPartition](n)(p => CdcInputPartition.of(rows, bound(p), bound(p + 1)))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new CdcReaderFactory
@@ -443,9 +478,7 @@ final class MaxScaleCdcMicroBatchStream(options: Map[String, String])
       baseResume = (o.gtid, o.version)
       val drop = (e - base).toInt
       if (drop > 0) {
-        val d = math.min(drop, buffer.size)
-        buffer.remove(0, d)
-        resumeBuf.remove(0, math.min(d, resumeBuf.size))
+        buffer.remove(0, math.min(drop, buffer.size))
         base = e
       }
       buffer.notifyAll() // wake a receiver blocked on the full buffer
@@ -459,21 +492,51 @@ final class MaxScaleCdcMicroBatchStream(options: Map[String, String])
   }
 }
 
-final case class CdcInputPartition(rows: Array[MaxScaleCdc.EventRow]) extends InputPartition
+object MaxScaleCdcMicroBatchStream {
+  /** One buffered event: its encoded row, whether it is a DDL (for the
+    * `splitBatchesAtDdl` cut) and the resume position after it. */
+  final case class Buffered(row: Array[Byte], ddl: Boolean, gtid: String, version: Integer)
+
+  /** Rows per partition above which a batch is split: a smaller batch is
+    * one partition (one task per job that reads it), a larger one is
+    * spread over up to the session's default parallelism. */
+  val RowsPerSplit = 2048
+
+  /** Partitions for a batch of `rows` rows. */
+  def splits(rows: Int, parallelism: Int): Int =
+    math.max(1, math.min((rows + RowsPerSplit - 1) / RowsPerSplit, parallelism))
+}
+
+/** A contiguous run of encoded rows: row `i` is `blob[ends(i-1), ends(i))`
+  * (`ends(-1)` = 0). */
+final case class CdcInputPartition(blob: Array[Byte], ends: Array[Int]) extends InputPartition
+
+object CdcInputPartition {
+  /** The rows `[from, until)` of `rows`, concatenated. */
+  def of(rows: Array[MaxScaleCdcMicroBatchStream.Buffered], from: Int,
+      until: Int): CdcInputPartition = {
+    val out = new java.io.ByteArrayOutputStream()
+    val ends = Array.tabulate(until - from) { i => out.write(rows(from + i).row); out.size }
+    CdcInputPartition(out.toByteArray, ends)
+  }
+}
 
 final class CdcReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val rows = partition.asInstanceOf[CdcInputPartition].rows
+    val p = partition.asInstanceOf[CdcInputPartition]
     new PartitionReader[InternalRow] {
+      private val row = new UnsafeRow(MaxScaleCdc.schema.length)
       private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = {
-        val r = rows(i)
-        def s(x: String) = if (x == null) null else UTF8String.fromString(x)
-        InternalRow(s(r.kind), s(r.database), s(r.table), s(r.op),
-          r.domain, r.serverId, r.sequence, r.eventNumber, r.tsMicros,
-          s(r.gtid), r.schemaVersion, s(r.payload))
+      override def next(): Boolean = {
+        i += 1
+        if (i >= p.ends.length) false
+        else {
+          val from = if (i == 0) 0 else p.ends(i - 1)
+          row.pointTo(p.blob, Platform.BYTE_ARRAY_OFFSET + from, p.ends(i) - from)
+          true
+        }
       }
+      override def get(): InternalRow = row
       override def close(): Unit = ()
     }
   }

@@ -25,9 +25,10 @@ import org.apache.spark.sql.types.StructType
   * Readers only trust directories carrying Spark's `_SUCCESS` marker,
   * so a crash mid-write can never surface a torn snapshot as latest.
   *
-  * Scale shape: the merge is one shuffle on the key (anti-join +
-  * union — see CdcMaterializer); the rewrite cost is the snapshot
-  * size, the standard CoW trade (cheap reads, write amplification).
+  * Scale shape: the merge is one shuffle on the key (old rows and
+  * the batch's events in one window — see CdcMaterializer); the
+  * rewrite cost is the snapshot size, the standard CoW trade (cheap
+  * reads, write amplification).
   * At 100 TB the snapshot would be partitioned by a key prefix so a
   * batch rewrites only touched partitions, and [[prune]] would run on
   * a retention schedule; both are orthogonal to the mechanism here.
@@ -37,17 +38,30 @@ final class CdcSnapshotTable(path: String, keys: Seq[String], payload: StructTyp
   private def hfs(s: SparkSession) = new org.apache.hadoop.fs.Path(path)
     .getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** Committed snapshot batch ids (dirs with a `_SUCCESS` marker),
-    * ascending. */
-  def snapshotIds(s: SparkSession): Seq[Long] = {
+  /** Ids of every `snap_<id>` directory, committed or not (one listing
+    * of names). */
+  private def dirIds(s: SparkSession): Seq[Long] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = hfs(s)
     if (!fs.exists(root)) Nil
     else fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("snap_"))
-      .filter(st => fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("snap_").toLong).sorted
+      .map(_.getPath.getName.stripPrefix("snap_").toLong)
   }
+
+  private def committed(s: SparkSession, id: Long): Boolean =
+    hfs(s).exists(new org.apache.hadoop.fs.Path(s"$path/snap_$id/_SUCCESS"))
+
+  /** Committed snapshot batch ids (dirs with a `_SUCCESS` marker),
+    * ascending. */
+  def snapshotIds(s: SparkSession): Seq[Long] = dirIds(s).filter(committed(s, _)).sorted
+
+  /** The latest committed id below `bound`: walks the listed ids down
+    * and stops at the first with a `_SUCCESS` marker, so a batch pays
+    * one listing and (torn directories aside) one marker check however
+    * many snapshots the table keeps. */
+  private[streaming] def latestCommittedBelow(s: SparkSession, bound: Long): Option[Long] =
+    dirIds(s).filter(_ < bound).sorted(Ordering[Long].reverse).find(committed(s, _))
 
   private def empty(s: SparkSession): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[Row], payload)
@@ -57,36 +71,39 @@ final class CdcSnapshotTable(path: String, keys: Seq[String], payload: StructTyp
 
   /** Latest committed snapshot (empty relation before the first batch). */
   def snapshot(s: SparkSession): DataFrame =
-    snapshotIds(s).lastOption.map(snapshotAt(s, _)).getOrElse(empty(s))
+    latestCommittedBelow(s, Long.MaxValue).map(snapshotAt(s, _)).getOrElse(empty(s))
 
   /** Latest snapshot committed STRICTLY before `batchId` — what a
     * (possibly replayed) batch `batchId` must merge into. */
   def snapshotBefore(s: SparkSession, batchId: Long): DataFrame =
-    snapshotIds(s).filter(_ < batchId).lastOption
-      .map(snapshotAt(s, _)).getOrElse(empty(s))
+    latestCommittedBelow(s, batchId).map(snapshotAt(s, _)).getOrElse(empty(s))
 
   /** foreachBatch hook: merge one micro-batch of projected CDC rows
     * (envelope `op, sequence, event_number` + the payload columns)
     * into the snapshot. Safe to call again with the same `batchId`
     * (restart replay / foreachBatch retry): the inputs are identical,
-    * so the rewritten `snap_<batchId>` is identical. */
+    * so the rewritten `snap_<batchId>` is identical. Runs under
+    * [[graft.util.Confs.withMicroBatchExec]] like the other state
+    * hooks: the merge is one shuffle, and one job writes it. */
   def applyBatch(cdc: DataFrame, batchId: Long): Unit = {
     val s = cdc.sparkSession
-    // empty-batch fast exit (guide §2.4): a DDL-only micro-batch has
-    // zero DML rows for the table — merging them would rewrite the
-    // whole snapshot UNCHANGED (the full CoW cost for a no-op). With
-    // no snap_<batchId> written, later reads resolve to the previous
-    // committed snapshot, which holds identical content; a replay of
-    // the empty batch skips again, so idempotence is preserved.
-    if (cdc.isEmpty) return
-    val prev = snapshotBefore(s, batchId)
-    val next = CdcMaterializer.applyBatch(
-      prev,
-      cdc.select((Seq("op", "sequence", "event_number") ++ payload.fieldNames).map(col): _*),
-      keys)
-    // fixture snapshots are small; at scale this coalesce becomes a
-    // partitioned write of only the touched key ranges
-    next.coalesce(4).write.mode("overwrite").parquet(s"$path/snap_$batchId")
+    graft.util.Confs.withMicroBatchExec(s) {
+      // empty-batch fast exit (guide §2.4): a DDL-only micro-batch has
+      // zero DML rows for the table — merging them would rewrite the
+      // whole snapshot UNCHANGED (the full CoW cost for a no-op). With
+      // no snap_<batchId> written, later reads resolve to the previous
+      // committed snapshot, which holds identical content; a replay of
+      // the empty batch skips again, so idempotence is preserved.
+      if (!cdc.isEmpty) {
+        val next = CdcMaterializer.applyBatch(
+          snapshotBefore(s, batchId),
+          cdc.select((Seq("op", "sequence", "event_number") ++ payload.fieldNames).map(col): _*),
+          keys)
+        // fixture snapshots are small; at scale this coalesce becomes a
+        // partitioned write of only the touched key ranges
+        next.coalesce(4).write.mode("overwrite").parquet(s"$path/snap_$batchId")
+      }
+    }
   }
 
   /** Drop all but the last `keepLast` committed snapshots — retention,

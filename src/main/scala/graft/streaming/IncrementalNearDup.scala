@@ -695,9 +695,13 @@ final class IncrementalNearDup(statePath: String,
       "pairs" -> Seq("doc_a", "doc_b"),
       "bands" -> Seq("band", "key"),
       "sets" -> Seq("doc_id"))
+    // an append of an empty batch leaves a dir with no parquet file:
+    // nothing to compact there, and no schema to infer
+    def hasData(dir: String): Boolean =
+      StateLayout.exists(spark, dir) && StateLayout.parquetFileCount(spark, dir) > 0
     Seq("pairs", "bands", "sets").foreach { t =>
       val dir = s"$statePath/$t"
-      if (StateLayout.exists(spark, dir)) {
+      if (hasData(dir)) {
         // inferred read + drop of the layout column handles each dir's
         // schema (bands' key struct is fixture-shaped); the rewrite
         // restores the bucketed layout
@@ -722,7 +726,7 @@ final class IncrementalNearDup(statePath: String,
     // have anti-joined them anyway, this just sheds the bytes)
     poisonedOpt(spark).foreach(p => StateLayout.overwriteSmall(
       p.distinct().localCheckpoint(true), s"$statePath/poisoned"))
-    if (StateLayout.exists(spark, s"$statePath/ledger"))
+    if (hasData(s"$statePath/ledger"))
       StateLayout.overwriteSmall(
         spark.read.parquet(s"$statePath/ledger").distinct()
           .join(tombs, Seq("doc_id"), "left_anti").localCheckpoint(true),
@@ -732,7 +736,7 @@ final class IncrementalNearDup(statePath: String,
     // guard must over-approximate — a tombstoned doc's replayed insert
     // is dropped by the `live` filter BEFORE the guard, so shedding
     // those ids from the sidecar cannot re-admit it
-    if (StateLayout.exists(spark, s"$statePath/bands"))
+    if (hasData(s"$statePath/bands"))
       StateLayout.rebuildBloom(spark,
         StateLayout.bloomSidecar(s"$statePath/bands"),
         spark.read.parquet(s"$statePath/bands").select("doc_id"), "doc_id")

@@ -33,15 +33,18 @@ object BenchAb {
     }
     val results = collection.mutable.Map[(String, Boolean), List[Double]]()
       .withDefaultValue(Nil)
-    for (p <- 1 to passes; aqe <- Seq(true, false)) {
-      graft.util.Confs.microBatchAqeOverride = Some(aqe)
-      defs.foreach { q =>
-        val t = once(q)
-        results((q.name, aqe)) ::= t
-        println(f"pass $p aqe=$aqe ${q.name}%-32s $t%7.2f s")
+    // reset even when an entry throws, so the override cannot stay
+    // pinned for the rest of the JVM
+    try {
+      for (p <- 1 to passes; aqe <- Seq(true, false)) {
+        graft.util.Confs.microBatchAqeOverride = Some(aqe)
+        defs.foreach { q =>
+          val t = once(q)
+          results((q.name, aqe)) ::= t
+          println(f"pass $p aqe=$aqe ${q.name}%-32s $t%7.2f s")
+        }
       }
-    }
-    graft.util.Confs.microBatchAqeOverride = None
+    } finally graft.util.Confs.microBatchAqeOverride = None
     println("\n==== min per arm ====")
     defs.foreach { q =>
       val on = results((q.name, true)).min

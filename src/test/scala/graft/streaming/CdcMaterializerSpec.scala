@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,6 +34,71 @@ class CdcMaterializerSpec extends AnyFunSuite with SparkTestSession {
     val state = Seq.empty[(Long, String)].toDF("id", "name")
     val cdc = Seq(CdcRow("insert", 1, 1, 1, "a"), CdcRow("insert", 2, 1, 2, "b")).toDF()
     assert(CdcMaterializer.applyBatch(state, cdc, Seq("id")).count() == 2)
+  }
+
+  private def applied(state: Map[Long, String], cdc: Seq[CdcRow]): DataFrame = {
+    import spark.implicits._
+    CdcMaterializer.applyBatch(state.toSeq.toDF("id", "name"), cdc.toDF(), Seq("id"))
+  }
+
+  /** The merged state as a map, failing on a duplicated key. */
+  private def asMap(df: DataFrame): Map[Long, String] = {
+    val rows = df.collect().map(r => r.getLong(0) -> r.getString(1))
+    assert(rows.map(_._1).distinct.length == rows.length, s"duplicate keys: ${rows.toSeq}")
+    rows.toMap
+  }
+
+  /** The reference semantics: replay the batch in `(sequence,
+    * event_number)` order over the state. */
+  private def fold(state: Map[Long, String], cdc: Seq[CdcRow]): Map[Long, String] =
+    cdc.sortBy(r => (r.sequence, r.event_number)).foldLeft(state) { (m, r) =>
+      r.op match {
+        case "insert" | "update_after" => m.updated(r.id, r.name)
+        case "delete" => m - r.id
+        case _ => m // update_before
+      }
+    }
+
+  test("applyBatch edge cases: a lone update_before, a delete then re-insert, a replay") {
+    val state = Map(1L -> "one", 2L -> "two")
+    val cdc = Seq(
+      CdcRow("update_before", 5, 1, 1, "one"), // its after never arrives
+      CdcRow("insert", 7, 1, 2, "TWO"), // re-insert after ...
+      CdcRow("delete", 6, 1, 2, "two")) // ... the delete, rows out of order
+    val once = asMap(applied(state, cdc))
+    assert(once == Map(1L -> "one", 2L -> "TWO"))
+    assert(asMap(applied(once, cdc)) == once) // the same batch again
+  }
+
+  test("property: applyBatch equals a fold over random insert/update/delete scripts") {
+    import org.scalacheck.{Gen, Prop, Test}
+    val ops = Seq("insert", "update_before", "update_after", "delete")
+    // a few keys, so batches hit the same key several times
+    val genState = Gen.mapOf(Gen.zip(Gen.choose(0L, 5L), Gen.alphaLowerStr.map(_.take(3))))
+    def genBatch(b: Int) = for {
+      n <- Gen.choose(0, 14)
+      evs <- Gen.listOfN(n, Gen.zip(Gen.choose(0L, 5L), Gen.oneOf(ops), Gen.choose(0, 99)))
+      order <- Gen.long
+    } yield new scala.util.Random(order).shuffle(evs.zipWithIndex.map {
+      case ((k, op, v), i) => CdcRow(op, 100L * b + i / 2, i % 2 + 1L, k, s"$op$v")
+    })
+    val genScript = for {
+      n <- Gen.choose(1, 3)
+      batches <- Gen.sequence[List[Seq[CdcRow]], Seq[CdcRow]]((0 until n).map(genBatch))
+    } yield batches
+    val prop = Prop.forAllNoShrink(genState, genScript) { (init, script) =>
+      script.foldLeft(init) { (state, batch) =>
+        val want = fold(state, batch)
+        val once = asMap(applied(state, batch))
+        assert(once == want, s"state $state, batch $batch")
+        assert(asMap(applied(once, batch)) == want, s"replayed batch $batch over $once")
+        want
+      }
+      true
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(30)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261018L)).withWorkers(1), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("upsertStream keeps latest row per key and drops deleted keys") {

@@ -83,6 +83,27 @@ class IncrementalNearDupSpec extends AnyFunSuite with SparkTestSession {
     assert(nFiles <= StateLayout.NumBuckets, s"pairs not compacted: $nFiles files")
   }
 
+  test("compact skips a state dir that an empty append left without parquet files") {
+    import spark.implicits._
+    val statePath = java.nio.file.Files.createTempDirectory("inc-neardup-empty").toString
+    val inc = new IncrementalNearDup(statePath)
+    val text = "the quick brown fox jumps over the lazy dog near the quiet river bank"
+    // two unrelated docs: no candidate pair, so pairs/ is created by an
+    // append of zero rows
+    inc.processBatch(Seq((1L, text),
+      (2L, "completely different words fill this second short document today"))
+      .toDF("doc_id", "text"), 0)
+    val pairsDir = s"$statePath/pairs"
+    assert(StateLayout.exists(spark, pairsDir))
+    assert(StateLayout.parquetFileCount(spark, pairsDir) == 0)
+    inc.compact(spark) // an inferred read of pairs/ threw UNABLE_TO_INFER_SCHEMA
+    // a duplicate then lands, and the state compacts and groups as usual
+    inc.processBatch(Seq((3L, text)).toDF("doc_id", "text"), 1)
+    inc.compact(spark)
+    assert(inc.groups(spark).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 3L -> 1L))
+  }
+
   test("retraction: components re-form as a fresh run over the survivors, interleaved with ingest") {
     // the q66b drill, with the delete wave INTERLEAVED between insert
     // waves (the entry retracts after full ingest): tombstones for
