@@ -24,9 +24,7 @@ object BucketedTables {
 
   private val cache = new SessionCache[(String, String)]()
 
-  /** Planner confs the bucketed layout relies on; applied by every
-    * graft session builder at construction so a session never changes
-    * planner configuration mid-flight (see the note in [[ensure]]).
+  /** The bucketed layout's planner confs:
     *
     *  - `legacy.bucketedTableScan.outputOrdering=true` exposes the
     *    buckets' sortBy order to the scan so the join skips its Sort;
@@ -40,9 +38,18 @@ object BucketedTables {
     *    PRUNING, the whole point of q100b. Only bucketed-table scans
     *    are affected, and the only bucketed tables in this app are the
     *    two written below. */
-  val sessionConfs: Seq[(String, String)] = Seq(
+  private val bucketingConfs: Seq[(String, String)] = Seq(
     "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
     "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
+
+  /** Confs every graft session builder applies at construction (Bench,
+    * Verify, BenchSome, the test session, the benchmark harness): the
+    * two planner confs the bucketed layout relies on, so a session
+    * never changes planner configuration mid-flight (see the note in
+    * [[ensure]]), plus the fork-free local filesystem
+    * ([[graft.util.NioLocalFs]]), which only takes effect when set
+    * before the session's first file access. */
+  val sessionConfs: Seq[(String, String)] = bucketingConfs ++ graft.util.NioLocalFs.sessionConfs
 
   /** Returns (ordersTable, lineitemTable) bucketed+sorted on the order
     * key, writing them on first use in this session. */
@@ -60,7 +67,7 @@ object BucketedTables {
       // the session's first query — no mid-session flip. The sets below
       // are then no-ops, kept only so the q100/q100b plan guards still
       // hold under an externally-built session.
-      sessionConfs.foreach { case (k, v) => s.conf.set(k, v) }
+      bucketingConfs.foreach { case (k, v) => s.conf.set(k, v) }
       val pfx = "graft_b" + buckets + "_" + WarehouseTables.dirDigest(dir)
       val orders = s"${pfx}_orders"
       val lineitem = s"${pfx}_lineitem"

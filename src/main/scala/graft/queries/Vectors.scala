@@ -817,18 +817,34 @@ object Vectors {
       d: String, nQueries: Int = 100, nThreads: Int = 4): Seq[Double] = {
     val (qvecs, serveOne) = servingSlaSetup(s, d, nQueries)
     serveOne(qvecs.head._1, qvecs.head._2) // codegen/broadcast warm-up
+    concurrentLatenciesMs(qvecs, nThreads)(serveOne)
+  }
+
+  /** Serves `qvecs` from `nThreads` threads (contiguous slices) and
+    * returns one latency per request. A worker that throws or does not
+    * finish in time fails the probe — with the first worker's error as
+    * the cause — instead of leaving a short sample to read as a p50. */
+  private[graft] def concurrentLatenciesMs(qvecs: Array[(Long, Array[Long])],
+      nThreads: Int)(serveOne: (Long, Array[Long]) => Double): Seq[Double] = {
     val lat = new java.util.concurrent.ConcurrentLinkedQueue[Double]
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val slices = qvecs.grouped(
       math.max(1, (qvecs.length + nThreads - 1) / nThreads)).toSeq
     val threads = slices.zipWithIndex.map { case (slice, i) =>
       val t = new Thread(() => {
-        slice.foreach { case (qid, xi) => lat.add(serveOne(qid, xi)) }
+        try slice.foreach { case (qid, xi) => lat.add(serveOne(qid, xi)) }
+        catch { case e: Throwable => errors.add(e) }
       }, s"serving-sla-$i")
       t.setDaemon(true); t.start(); t
     }
     threads.foreach(_.join(120000))
     import scala.jdk.CollectionConverters._
-    lat.asScala.toSeq
+    val out = lat.asScala.toSeq
+    if (out.size != qvecs.length)
+      throw new IllegalStateException(s"serving probe: ${out.size} of ${qvecs.length} " +
+        s"requests completed (${errors.size} worker(s) failed, " +
+        s"${threads.count(_.isAlive)} still running)", errors.peek())
+    out
   }
 
   /** Shared setup for the serving-SLA probes: load-and-pin the

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.StructType
+
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
 
 /** Copy-on-write snapshot table: the durable, restartable form of
   * [[CdcMaterializer.applyBatch]]. Each micro-batch merges into the
@@ -88,21 +91,27 @@ final class CdcSnapshotTable(path: String, keys: Seq[String], payload: StructTyp
   def applyBatch(cdc: DataFrame, batchId: Long): Unit = {
     val s = cdc.sparkSession
     graft.util.Confs.withMicroBatchExec(s) {
-      // empty-batch fast exit (guide §2.4): a DDL-only micro-batch has
-      // zero DML rows for the table — merging them would rewrite the
-      // whole snapshot UNCHANGED (the full CoW cost for a no-op). With
-      // no snap_<batchId> written, later reads resolve to the previous
-      // committed snapshot, which holds identical content; a replay of
-      // the empty batch skips again, so idempotence is preserved.
-      if (!cdc.isEmpty) {
-        val next = CdcMaterializer.applyBatch(
-          snapshotBefore(s, batchId),
-          cdc.select((Seq("op", "sequence", "event_number") ++ payload.fieldNames).map(col): _*),
-          keys)
-        // fixture snapshots are small; at scale this coalesce becomes a
-        // partitioned write of only the touched key ranges
-        next.coalesce(4).write.mode("overwrite").parquet(s"$path/snap_$batchId")
-      }
+      // the write job counts the batch's rows as they pass (no probe
+      // job of its own). A DDL-only micro-batch has zero DML rows for
+      // the table: its write rewrote the previous snapshot unchanged,
+      // so it is deleted again and later reads resolve to the previous
+      // committed snapshot, which holds identical content. A replay of
+      // the empty batch writes and deletes again, so idempotence holds.
+      // Keeping that copy is never wrong, only redundant — so a crash
+      // between write and delete, or a count that does not arrive
+      // (observed metrics come through the listener bus), keeps it.
+      val rows = Observation()
+      val next = CdcMaterializer.applyBatch(
+        snapshotBefore(s, batchId),
+        cdc.select((Seq("op", "sequence", "event_number") ++ payload.fieldNames).map(col): _*)
+          .observe(rows, count(lit(1)).as("n")),
+        keys)
+      val out = s"$path/snap_$batchId"
+      // fixture snapshots are small; at scale this coalesce becomes a
+      // partitioned write of only the touched key ranges
+      next.coalesce(4).write.mode("overwrite").parquet(out)
+      val n = scala.util.Try(Await.result(rows.future, 30.seconds).getLong(0))
+      if (n.toOption.contains(0L)) hfs(s).delete(new org.apache.hadoop.fs.Path(out), true)
     }
   }
 

@@ -963,9 +963,16 @@ object IncrementalNearDup {
       // all carry >= 2 tokens — nearDupState filtered them at ingest —
       // so every drop here is a genuinely missing corpus row, never
       // the size filter re-biting).
+      // The distinct count rides the same agg: a corpus repeating a
+      // doc_id inflates both counts above alike, so only the row count
+      // against the distinct ids can see duplicated rows about to be
+      // committed. Those are refused whatever allowCorpusDrops says.
       val cnts = joined.agg(count(lit(1)).as("n_live"),
-        count(col("ext")).as("n_wide")).head()
-      val (nLive, nWide) = (cnts.getLong(0), cnts.getLong(1))
+        count(col("ext")).as("n_wide"), countDistinct(col("doc_id")).as("n_ids")).head()
+      val (nLive, nWide, nIds) = (cnts.getLong(0), cnts.getLong(1), cnts.getLong(2))
+      require(nLive == nIds, s"widenMigrate at $statePath: the join holds $nLive rows " +
+        s"for $nIds distinct doc_ids - ${nLive - nIds} duplicate doc_id rows (a doc_id " +
+        "repeats in the corpus)")
       if (nWide != nLive) {
         val msg = s"widenMigrate at $statePath: corpus covers $nWide of " +
           s"$nLive live committed docs - ${nLive - nWide} would be dropped"

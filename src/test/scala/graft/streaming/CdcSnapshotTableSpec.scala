@@ -70,4 +70,28 @@ class CdcSnapshotTableSpec extends AnyFunSuite with SparkTestSession {
     snap.applyBatch(batch(CdcRow("insert", 2, 1, 2, "b")), 2)
     assert(contents(snap.snapshot(spark)) == Map(1L -> "a", 2L -> "b"))
   }
+
+  test("a non-empty batch runs exactly one Spark job") {
+    val dir = tmp()
+    val snap = new CdcSnapshotTable(dir, Seq("id"), payload)
+    snap.applyBatch(batch(CdcRow("insert", 1, 1, 1, "a")), 0)
+    val b1 = batch(CdcRow("update_before", 2, 1, 1, "a"), CdcRow("update_after", 2, 2, 1, "A"),
+      CdcRow("insert", 3, 1, 2, "b"))
+    val group = s"cdc-snap-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "applyBatch job count")
+      try snap.applyBatch(b1, 1) finally sc.clearJobGroup()
+      org.apache.spark.ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"applyBatch ran ${jobs.get} jobs")
+    assert(contents(snap.snapshot(spark)) == Map(1L -> "A", 2L -> "b"))
+  }
 }

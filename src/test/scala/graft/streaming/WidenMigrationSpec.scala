@@ -173,6 +173,28 @@ class WidenMigrationSpec extends AnyFunSuite with SparkTestSession {
     assert(sets.where(size(col("sig")) =!= 32).isEmpty)
   }
 
+  test("a corpus repeating a doc_id is refused, drops opted in or not") {
+    // a repeated doc_id inflates the join's row count and its covered
+    // count alike, so the coverage guard alone would pass and commit
+    // the duplicated rows into sets/ at a destructive rewrite
+    val docs = corpus.localCheckpoint(true)
+    val statePath = java.nio.file.Files
+      .createTempDirectory("widen-dup").toString
+    new IncrementalNearDup(statePath)
+      .processState(LlmText.nearDupState(docs).localCheckpoint(true), 0L)
+    val duplicated = docs.unionByName(docs.where(col("doc_id") === 20L))
+    Seq(false, true).foreach { allow =>
+      val e = intercept[IllegalArgumentException] {
+        IncrementalNearDup.widenMigrate(spark, statePath, duplicated, 8, 4,
+          allowCorpusDrops = allow)
+      }
+      assert(e.getMessage.contains("duplicate doc_id"), e.getMessage)
+    }
+    val sets = spark.read.parquet(s"$statePath/sets").drop(StateLayout.BucketCol)
+    assert(sets.where(size(col("sig")) =!= 16).isEmpty, "refusal leaves sets/ 16-wide")
+    assert(sets.count() == sets.select("doc_id").distinct().count())
+  }
+
   test("widening is idempotent (re-run after a mid-migration crash converges)") {
     val docs = corpus.localCheckpoint(true)
     val st = LlmText.nearDupState(docs).localCheckpoint(true)
