@@ -7,7 +7,7 @@ import org.apache.avro.io.DecoderFactory
 import scala.collection.mutable.ArrayBuffer
 
 /** Incremental framer for an Avro Object Container stream — the
-  * byte-level sibling of [[JsonFramer]], used when the CDC client
+  * byte-level sibling of `JsonFramer`, used when the CDC client
   * registers with `TYPE=AVRO` (an extension beyond the reference, which
   * only implements JSON — `gomaxscale.go:87-90`).
   *

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.mutable
 
-/** Byte-level JSON framer — the wire-rate sibling of [[JsonFramer]].
+/** Byte-level JSON framer — the wire-rate sibling of `JsonFramer`.
   *
   * Same frame semantics (string-aware brace depth over interleaved JSON
   * objects and free-form server text, objects split across arbitrary
@@ -18,7 +18,7 @@ import scala.collection.mutable
   *  - a straddling frame accumulates raw bytes in a carry buffer and is
   *    decoded once when it completes.
   *
-  * The char-level [[JsonFramer]] decodes every chunk up front and copies
+  * The char-level `JsonFramer` decodes every chunk up front and copies
   * frame chars through a StringBuilder — two extra passes per byte that
   * showed as the residual single-connection ingest ceiling after the
   * round-12 bulk-append/streaming-decode work. Byte scanning is UTF-8
@@ -28,7 +28,7 @@ import scala.collection.mutable
   * boundary splits it (the carry holds raw bytes; the single decode sees
   * the complete sequence).
   *
-  * [[JsonFramer]] is retained as the independent semantics oracle:
+  * `JsonFramer` is retained as the independent semantics oracle:
   * ByteJsonFramerSpec drives both framers over random inputs and random
   * BYTE-level splits (char splits can't land inside a code point) and
   * requires identical frame streams.

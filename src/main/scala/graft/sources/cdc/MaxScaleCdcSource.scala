@@ -416,7 +416,11 @@ final class MaxScaleCdcMicroBatchStream(options: Map[String, String])
   /** Restart path: offsets parsed before the receiver's first connection
     * adopt the EARLIEST position seen as the wire resume point — the
     * start of the uncommitted batch, so interrupted work is re-fetched
-    * from the server (at-least-once) rather than skipped. Legacy bare-
+    * from the server (at-least-once) rather than skipped. Adoption also
+    * numbers the feed: the buffer is still empty, so the first event
+    * the resumed wire delivers gets the adopted index. Numbering it by
+    * comparing the buffer's fill with the batch start (see
+    * [[rebaseIfBeyondLocked]]) would race the receiver. Legacy bare-
     * index offsets adopt nothing and keep the configured-GTID behavior. */
   override def deserializeOffset(json: String): Offset = {
     val off = CdcOffset.parse(json)
@@ -424,14 +428,20 @@ final class MaxScaleCdcMicroBatchStream(options: Map[String, String])
       if (!receiverStarted.get && off.index < adoptedIndex) {
         adoptedIndex = off.index
         baseResume = (off.gtid, off.version)
+        base = off.index
       }
     }
     off
   }
 
-  /** Checkpoint restart: a committed index beyond everything this fresh
-    * connection has buffered means the counter must continue from the
-    * checkpoint. Rebase so numbering resumes there; the wire position is
+  /** Events buffered and not yet committed. */
+  private[cdc] def bufferedEvents: Int = buffer.synchronized(buffer.size)
+
+  /** Checkpoint restart with a bare-index offset (one that carries no
+    * resume position, so [[deserializeOffset]] adopted nothing): a
+    * committed index beyond everything this fresh connection has
+    * buffered means the counter must continue from the checkpoint.
+    * Rebase so numbering resumes there; the wire position is
     * governed by the ADOPTED checkpoint GTID + schema version when the
     * offsets carry one (see [[deserializeOffset]]), else by the
     * configured GTID (the reference's WithGTID granularity,

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.queries.LlmText
 
@@ -27,7 +26,10 @@ import graft.queries.LlmText
   * per doc_id (every committed doc has grams at every n by
   * construction), so CHANGING `ns` over existing state would silently
   * skip the new resolution for already-seen docs — [[processBatch]]
-  * fails loudly instead (ADVICE r9); adding or removing a resolution
+  * fails loudly instead (ADVICE r9): each non-empty batch over existing
+  * state first checks the state's resolution set (one tiny distinct
+  * over the `n` column of the FULL state, so a batch whose buckets hold
+  * no committed rows still refuses); adding or removing a resolution
   * requires a state rebuild from the corpus.
   *
   * Unlike pair-based near-dup ([[IncrementalNearDup]]), there is no
@@ -55,151 +57,44 @@ import graft.queries.LlmText
   * retaining tombstones.
   */
 final class IncrementalDupSpans(statePath: String, ns: Seq[Int],
-    autoCompactFiles: Int = StateLayout.AutoCompactFiles) {
+    autoCompactFiles: Int = StateLayout.AutoCompactFiles)
+    extends KeyedState(statePath, "doc_id", autoCompactFiles) {
 
   def this(statePath: String) = this(statePath, Seq(5))
 
-  /** See [[IncrementalLineDedup.compactionCount]]. */
-  @volatile private var nCompactions = 0
-  def compactionCount: Int = nCompactions
+  private val grams: StateTable = StateTable("grams", Seq("doc_id"),
+    s => LlmText.dupSpanGrams(KeyedState.emptyDocs(s), ns: _*).schema,
+    fresh => {
+      requireResolutions(fresh.sparkSession)
+      LlmText.dupSpanGrams(fresh, ns: _*)
+    })
+  protected val tables = Seq(grams)
 
-  /** The automatic compaction policy (VERDICT r10 item 5) — see
-    * [[IncrementalLineDedup]]'s doc; same trigger, same safety. */
-  private def maybeCompact(spark: SparkSession): Unit =
-    if (StateLayout.autoCompactDue(spark, Seq(gramsDir, tombstonesDir),
-        autoCompactFiles))
-      compact(spark, StateLayout.NumBuckets)
-
-  private val gramsDir = s"$statePath/grams"
-  private val tombstonesDir = s"$statePath/tombstones"
-
-  private val tombSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType)))
-
-  private def tombstones(spark: SparkSession): DataFrame =
-    readStateOr(spark, tombstonesDir, tombSchema)
-
-  /** See [[StateLayout.readOpt]] — None until the first DELETE lands,
-    * so the common insert-only stream skips the tombstone machinery. */
-  private def tombstonesOpt(spark: SparkSession): Option[DataFrame] =
-    StateLayout.readOpt(spark, tombstonesDir, tombSchema)
-
-  /** foreachBatch hook for CDC DELETEs: `deletes` needs doc_id. O(1)
-    * per delete; span re-judgment is deferred to [[spans]]. Idempotent
-    * under replay. */
-  def retractBatch(deletes: DataFrame, batchId: Long): Unit = {
-    val spark = deletes.sparkSession
-    val ids = deletes.select(col("doc_id").cast("long").as("doc_id"))
-      .dropDuplicates(Seq("doc_id")) // intra-batch replay dedup
-      .localCheckpoint(true) // micro-batch sources are not re-scannable
-    // empty-slice fast exit (guide §2.4): insert-only batches route
-    // here with zero rows — an EMPTY append would still create the
-    // tombstone dir, re-engaging the per-batch tombstone machinery
-    // (dir-existence-gated) on every later batch for nothing
-    if (ids.isEmpty) return
-    val fresh = tombstonesOpt(spark)
-      .map(t => ids.join(t, Seq("doc_id"), "left_anti")).getOrElse(ids)
-    fresh.write.mode("append").parquet(tombstonesDir)
-    StateLayout.invalidateCount(tombstonesDir)
-    maybeCompact(spark)
-  }
-
-  private def readStateOr(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  /** foreachBatch hook: `batch` needs (doc_id, text). */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val docs = batch.select(col("doc_id"), col("text"))
-      // intra-batch replay dedup (ADVICE r9): a resumed connection can
-      // re-deliver an already-seen event in the SAME micro-batch as new
-      // ones — the committed-state anti-join below only guards against
-      // rows that landed in EARLIER batches
-      .dropDuplicates(Seq("doc_id"))
-      .localCheckpoint(true) // micro-batch sources are not re-scannable
-    // empty-slice fast exit (guide §2.4): a DDL-only or delete-only
-    // micro-batch reaches this hook with zero insert rows — skip the
-    // guard read and the empty append outright (the probe reads the
-    // checkpointed blocks, not the source)
-    if (docs.isEmpty) return
-    // replay guard BEFORE gramming: state rows are per-doc, so
-    // filtering the doc rows (one per doc) against seen doc_ids is
-    // equivalent to filtering the gram rows (dozens per doc × |ns|) —
-    // and a replayed doc skips tokenization entirely (r9: the
-    // gram-then-anti order shuffled the full gram relation per wave)
-    val gramSchema = LlmText.dupSpanGrams(docs.limit(0), ns: _*).schema
-    // guard read PRUNED to the batch's doc_id buckets (VERDICT r10
-    // item 2 — the state is bucket-partitioned on doc_id); None when
-    // nothing is committed yet (batch 0 skips the guard join — an
-    // anti-join against a provably empty side is the identity)
-    val oldOpt = StateLayout.readPrunedOpt(spark, gramsDir, gramSchema,
-      docs, Seq("doc_id"))
-    // the per-doc_id guard is only sound while the resolution set is
-    // the one the state was built with — an enlarged `ns` would skip
-    // already-seen docs entirely and the new n's grams would silently
-    // cover only later docs. Fail loudly instead: a resolution change
-    // is a state REBUILD, not an append. (One tiny distinct over the
-    // state's n column per batch — parquet reads just that column. The
-    // check deliberately reads the FULL state, not the pruned view: a
-    // batch whose buckets happen to hold no committed rows must still
-    // refuse to append mismatched resolutions.)
-    if (oldOpt.isDefined) {
-      val stateNs = StateLayout.read(spark, gramsDir, gramSchema)
+  private def requireResolutions(spark: SparkSession): Unit =
+    if (StateLayout.exists(spark, dir(grams.name))) {
+      val stateNs = read(spark, grams)
         .select(col("n")).distinct().collect().map(_.getInt(0)).toSet
       require(stateNs.isEmpty || stateNs == ns.toSet,
-        s"state at $gramsDir was built for resolutions $stateNs but this " +
+        s"state at ${dir(grams.name)} was built for resolutions $stateNs but this " +
           s"instance runs ${ns.toSet}: changing the resolution set over " +
           "existing state requires a rebuild from the corpus")
     }
-    // tombstones win: a replayed insert of a deleted doc appends
-    // nothing (see IncrementalLineDedup's re-insertion contract)
-    val guardSides = oldOpt.map(_.select("doc_id")).toSeq ++
-      tombstonesOpt(spark).map(_.select("doc_id"))
-    val fresh = guardSides.reduceOption(_ union _) match {
-      case Some(seen) => docs.join(seen.distinct(), Seq("doc_id"), "left_anti")
-      case None => docs
-    }
-    StateLayout.append(LlmText.dupSpanGrams(fresh, ns: _*), gramsDir,
-      Seq("doc_id"))
-    maybeCompact(spark)
-  }
+
+  /** foreachBatch hook: `batch` needs (doc_id, text). The replay guard
+    * runs on doc rows before gramming, so a replayed doc skips
+    * tokenization (r9: the gram-then-anti order shuffled the full gram
+    * relation per wave). */
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    ingest(batch.select(col("doc_id"), col("text")))
 
   /** Duplicate-span stats over every doc seen so far, one row per
     * affected (doc, n) — row-identical to batch q112/q112b on the same
     * corpus (the stream==batch hash-gate claim: same
-    * [[LlmText.dupSpanStats]] stage, same state rows). */
-  def spans(spark: SparkSession): DataFrame = {
-    val grams = StateLayout.read(spark, gramsDir,
-      LlmText.dupSpanGrams(
-        spark.createDataFrame(Seq.empty[(Long, String)]).toDF("doc_id", "text"),
-        ns: _*).schema)
-    // retraction: the shared-gram judgment runs over SURVIVORS only,
-    // so a deleted doc's grams stop making other docs' spans duplicated
-    val live = tombstonesOpt(spark)
-      .map(t => grams.join(t, Seq("doc_id"), "left_anti")).getOrElse(grams)
-    LlmText.dupSpanStats(live)
+    * [[LlmText.dupSpanStats]] stage, same state rows). Retraction: the
+    * shared-gram judgment runs over SURVIVORS only, so a deleted doc's
+    * grams stop making other docs' spans duplicated. */
+  def spans(spark: SparkSession): DataFrame =
+    LlmText.dupSpanStats(live(read(spark, grams)))
       .select(col("doc_id"), col("n"), col("n_spans"),
         col("dup_tokens"), col("n_tokens"))
-  }
-
-  /** Bound the state-file count (small-file compaction between waves);
-    * also the physical-delete point — tombstoned grams are dropped,
-    * tombstones retained (the IncrementalLineDedup contract). */
-  def compact(spark: SparkSession, parts: Int): Unit = {
-    val tombs = tombstones(spark).localCheckpoint(true)
-    val gramSchema = LlmText.dupSpanGrams(
-      spark.createDataFrame(Seq.empty[(Long, String)]).toDF("doc_id", "text"),
-      ns: _*).schema
-    val cur = StateLayout.read(spark, gramsDir, gramSchema)
-      .join(tombs, Seq("doc_id"), "left_anti").localCheckpoint(true)
-    StateLayout.overwriteCompacted(cur, gramsDir, Seq("doc_id"), parts)
-    if (StateLayout.exists(spark, tombstonesDir))
-      StateLayout.overwriteSmall(tombs, tombstonesDir)
-    nCompactions += 1
-  }
 }

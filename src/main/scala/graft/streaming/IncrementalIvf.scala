@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.operators.KMeansLloyd
 
@@ -32,7 +32,8 @@ import graft.operators.KMeansLloyd
   * assignment is a pure integer function of the data), assign MAP-ONLY
   * (centroids ride as plan literals — no join, no shuffle; the q73
   * recipe), anti-join against existing state so a replayed micro-batch
-  * (foreachBatch retry) is a no-op, append. Per-batch cost is one linear
+  * (foreachBatch retry) is a no-op ([[KeyedState]]), append. Per-batch
+  * cost is one linear
   * pass over the batch — nothing touches the accumulated members except
   * the replay guard's id anti-join.
   *
@@ -56,108 +57,22 @@ import graft.operators.KMeansLloyd
   * concern, exactly like base-side inserts.
   */
 final class IncrementalIvf(statePath: String, cents: Seq[KMeansLloyd.Centroid],
-    autoCompactFiles: Int = StateLayout.AutoCompactFiles) {
+    autoCompactFiles: Int = StateLayout.AutoCompactFiles)
+    extends KeyedState(statePath, "vec_id", autoCompactFiles) {
 
-  /** See [[IncrementalLineDedup.compactionCount]]. */
-  @volatile private var nCompactions = 0
-  def compactionCount: Int = nCompactions
-
-  /** The automatic compaction policy (VERDICT r10 item 5) — see
-    * [[IncrementalLineDedup]]'s doc; same trigger, same safety. */
-  private def maybeCompact(spark: SparkSession): Unit =
-    if (StateLayout.autoCompactDue(spark,
-        Seq(s"$statePath/members", s"$statePath/tombstones"),
-        autoCompactFiles))
-      compact(spark, StateLayout.NumBuckets)
-
-  private val tombSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("vec_id",
-      org.apache.spark.sql.types.LongType)))
-
-  private def tombstones(spark: SparkSession): DataFrame =
-    readStateOr(spark, s"$statePath/tombstones", tombSchema)
-
-  /** See [[StateLayout.readOpt]] — None until the first DELETE lands,
-    * so the common insert-only stream skips the tombstone machinery. */
-  private def tombstonesOpt(spark: SparkSession): Option[DataFrame] =
-    StateLayout.readOpt(spark, s"$statePath/tombstones", tombSchema)
-
-  /** foreachBatch hook for CDC DELETEs: `deletes` needs vec_id. O(1)
-    * per delete — appends a tombstone; removal from the probe view is
-    * [[members]]'s anti-join. Idempotent under replay. */
-  def retractBatch(deletes: DataFrame, batchId: Long): Unit = {
-    val spark = deletes.sparkSession
-    val ids = deletes.select(col("vec_id").cast("long").as("vec_id"))
-      .dropDuplicates(Seq("vec_id")) // intra-batch replay dedup
-      .localCheckpoint(true) // micro-batch sources are not re-scannable
-    // empty-slice fast exit (guide §2.4): insert-only batches route
-    // here with zero rows — an EMPTY append would still create the
-    // tombstone dir, re-engaging the per-batch tombstone machinery
-    // (dir-existence-gated) on every later batch for nothing
-    if (ids.isEmpty) return
-    val fresh = tombstonesOpt(spark)
-      .map(t => ids.join(t, Seq("vec_id"), "left_anti")).getOrElse(ids)
-    fresh.write.mode("append").parquet(s"$statePath/tombstones")
-    StateLayout.invalidateCount(s"$statePath/tombstones")
-    maybeCompact(spark)
-  }
-
-  private def readStateOr(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  private val memberTable = StateTable("members", Seq("vec_id"),
+    _ => StructType(Seq(StructField("vec_id", LongType), StructField("cell", IntegerType))),
+    KMeansLloyd.assign(_, cents).select(col("vec_id"), col("cell")))
+  protected val tables = Seq(memberTable)
 
   /** foreachBatch hook: `batch` needs (vec_id, embedding: array<numeric>). */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val vecs = batch
-      .select(col("vec_id"), KMeansLloyd.quantize(col("embedding")).as("xi"))
-      // intra-batch replay dedup (ADVICE r9): a resumed connection can
-      // re-deliver an already-seen event in the SAME micro-batch as new
-      // ones — the committed-state anti-join below only guards against
-      // rows that landed in EARLIER batches
-      .dropDuplicates(Seq("vec_id"))
-      .localCheckpoint(true) // micro-batch sources are not re-scannable
-    // empty-slice fast exit (guide §2.4): a DDL-only or delete-only
-    // micro-batch reaches this hook with zero insert rows — skip the
-    // guard read and the empty append outright (the probe reads the
-    // checkpointed blocks, not the source)
-    if (vecs.isEmpty) return
-    val assigned = KMeansLloyd.assign(vecs, cents)
-      .select(col("vec_id"), col("cell"))
-    // guard read PRUNED to the batch's vec_id buckets (VERDICT r10
-    // item 2 — members/ is bucket-partitioned on vec_id); batch 0
-    // skips the guard join entirely (identity against an empty side).
-    // Replayed micro-batch (foreachBatch retries after failure) is a
-    // no-op instead of doubling rows — same idempotent-append contract
-    // as IncrementalNearDup. Tombstones are guarded too (tombstones
-    // win): a replayed insert of a deleted vector appends nothing.
-    val guardSides =
-      StateLayout.readPrunedOpt(spark, s"$statePath/members",
-        assigned.schema, vecs, Seq("vec_id")).map(_.select("vec_id")).toSeq ++
-      tombstonesOpt(spark).map(_.select("vec_id"))
-    val fresh = guardSides.reduceOption(_ union _) match {
-      case Some(seen) => assigned.join(seen.distinct(), Seq("vec_id"), "left_anti")
-      case None => assigned
-    }
-    StateLayout.append(fresh, s"$statePath/members", Seq("vec_id"))
-    maybeCompact(spark)
-  }
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    ingest(batch.select(col("vec_id"), KMeansLloyd.quantize(col("embedding")).as("xi")))
 
   /** Accumulated streamed index members (vec_id, cell), minus
     * retracted vectors — the probe view a search reads. */
-  def members(spark: SparkSession): DataFrame = {
-    val schema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cell",
-        org.apache.spark.sql.types.IntegerType)))
-    val m = StateLayout.read(spark, s"$statePath/members", schema)
-    tombstonesOpt(spark)
-      .map(t => m.join(t, Seq("vec_id"), "left_anti")).getOrElse(m)
-  }
+  def members(spark: SparkSession): DataFrame =
+    live(read(spark, memberTable))
 
   /** Retrain boundary: true once the streamed membership exceeds
     * `num/den` of the base corpus the centroids were trained on
@@ -166,29 +81,4 @@ final class IncrementalIvf(statePath: String, cents: Seq[KMeansLloyd.Centroid],
   def retrainDue(spark: SparkSession, baseCount: Long,
       num: Long = 1L, den: Long = 4L): Boolean =
     members(spark).count() * den > baseCount * num
-
-  /** Compact the append-only member state (one small file set lands per
-    * micro-batch; periodic compaction is standard streaming-state
-    * hygiene — see [[IncrementalNearDup.compact]]). */
-  def compact(spark: SparkSession, parts: Int = 8): Unit = {
-    val dir = s"$statePath/members"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tombs = tombstones(spark).localCheckpoint(true)
-    if (fs.exists(p)) {
-      // physical removal of retracted codes (tombstones retained so a
-      // replayed insert of a deleted vector still appends nothing)
-      val memberSchema = StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cell",
-          org.apache.spark.sql.types.IntegerType)))
-      val snap = StateLayout.read(spark, dir, memberSchema)
-        .join(tombs, Seq("vec_id"), "left_anti").localCheckpoint(true)
-      StateLayout.overwriteCompacted(snap, dir, Seq("vec_id"), parts)
-    }
-    if (StateLayout.exists(spark, s"$statePath/tombstones"))
-      StateLayout.overwriteSmall(tombs, s"$statePath/tombstones")
-    nCompactions += 1
-  }
 }

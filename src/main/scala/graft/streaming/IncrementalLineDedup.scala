@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.queries.LlmText
 
@@ -50,116 +49,24 @@ import graft.queries.LlmText
   * re-use of doc ids would need per-event sequence numbers in the
   * state and is out of scope — documented, not hidden).
   *
-  * Replay safety: chunk appends are anti-joined on doc_id against
-  * committed chunks ∪ tombstones, tombstone appends against committed
-  * tombstones — a foreachBatch retry is a no-op for both.
+  * Replay safety, tombstones and compaction are [[KeyedState]]'s: chunk
+  * appends are anti-joined on doc_id against committed chunks ∪
+  * tombstones, tombstone appends against committed tombstones — a
+  * foreachBatch retry is a no-op for both.
   */
 final class IncrementalLineDedup(statePath: String,
-    autoCompactFiles: Int = StateLayout.AutoCompactFiles) {
+    autoCompactFiles: Int = StateLayout.AutoCompactFiles)
+    extends KeyedState(statePath, "doc_id", autoCompactFiles) {
 
-  /** Compactions this instance has run (policy-triggered or manual) —
-    * exposed so the drills can assert the policy actually fired. */
-  @volatile private var nCompactions = 0
-  def compactionCount: Int = nCompactions
+  private val chunks = StateTable("chunks", Seq("doc_id"),
+    s => LlmText.lineChunks(KeyedState.emptyDocs(s)).schema, LlmText.lineChunks)
+  protected val tables = Seq(chunks)
 
-  /** VERDICT r10 item 5 — the automatic compaction policy: polled at
-    * the end of every batch hook; fires when any state dir's file
-    * count exceeds `autoCompactFiles`. Content-preserving (hashes
-    * cannot move) and crash-safe (StateLayout's swap protocol), so
-    * firing mid-stream is always sound. */
-  private def maybeCompact(spark: SparkSession): Unit =
-    if (StateLayout.autoCompactDue(spark, Seq(chunksDir, tombstonesDir),
-        autoCompactFiles))
-      compact(spark, StateLayout.NumBuckets)
-
-  private val chunksDir = s"$statePath/chunks"
-  private val tombstonesDir = s"$statePath/tombstones"
-
-  private val tombSchema = StructType(Seq(StructField("doc_id", LongType)))
-
-  private def readStateOr(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  private def emptyChunks(spark: SparkSession): DataFrame =
-    LlmText.lineChunks(
-      spark.createDataFrame(Seq.empty[(Long, String)]).toDF("doc_id", "text"))
-
-  private def tombstones(spark: SparkSession): DataFrame =
-    readStateOr(spark, tombstonesDir, tombSchema)
-
-  /** See [[StateLayout.readOpt]] — None until the first DELETE lands,
-    * so the common insert-only stream skips the tombstone machinery. */
-  private def tombstonesOpt(spark: SparkSession): Option[DataFrame] =
-    StateLayout.readOpt(spark, tombstonesDir, tombSchema)
-
-  /** foreachBatch hook: `batch` needs (doc_id, text). */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val docs = batch.select(col("doc_id"), col("text"))
-      // intra-batch replay dedup (ADVICE r9): a resumed connection can
-      // re-deliver an already-seen event in the SAME micro-batch as new
-      // ones — the committed-state anti-join below only guards against
-      // rows that landed in EARLIER batches
-      .dropDuplicates(Seq("doc_id"))
-      .localCheckpoint(true) // micro-batch sources are not re-scannable
-    // one cheap count job off the checkpointed blocks serves both the
-    // empty-slice fast exit (guide §2.4: DDL-only / delete-only
-    // micro-batches land here with zero insert rows — skip the guard
-    // read, the chunk computation and the empty append outright) and
-    // the self-sized partition count (VERDICT r14 item 6)
-    val nRows = docs.count()
-    if (nRows == 0) return
-    graft.util.Confs.withShufflePartitions(spark,
-        graft.util.Confs.microBatchPartitionsFor(spark, nRows)) {
-      graft.util.Confs.withMicroBatchExec(spark) {
-        // replay guard BEFORE chunking: state rows are per-doc, so
-        // filtering doc rows against seen doc_ids equals filtering chunk
-        // rows — and a replayed doc skips chunking entirely. Tombstoned
-        // ids are guarded too (tombstones win): a replayed insert of a
-        // deleted doc must not resurrect its chunks. The guard read is
-        // PRUNED to the batch's doc_id buckets (VERDICT r10 item 2): the
-        // state is bucket-partitioned on doc_id, so this scans O(touched
-        // buckets) files, not the whole committed state. Batch 0 (nothing
-        // committed, no tombstones) skips the guard join entirely — the
-        // anti-join against a provably empty side is the identity.
-        val guardSides =
-          StateLayout.readPrunedOpt(spark, chunksDir, emptyChunks(spark).schema,
-            docs, Seq("doc_id")).map(_.select("doc_id")).toSeq ++
-          tombstonesOpt(spark).map(_.select("doc_id"))
-        val fresh = guardSides.reduceOption(_ union _) match {
-          case Some(seen) => docs.join(seen.distinct(), Seq("doc_id"), "left_anti")
-          case None => docs
-        }
-        StateLayout.append(LlmText.lineChunks(fresh), chunksDir, Seq("doc_id"))
-      }
-    }
-    maybeCompact(spark)
-  }
-
-  /** foreachBatch hook for CDC DELETEs: `deletes` needs doc_id. O(1)
-    * per delete — appends a tombstone; all re-ownership is deferred to
-    * [[lines]]. Idempotent under replay (anti-join on committed
-    * tombstones). */
-  def retractBatch(deletes: DataFrame, batchId: Long): Unit = {
-    val spark = deletes.sparkSession
-    val ids = deletes.select(col("doc_id").cast("long").as("doc_id"))
-      .dropDuplicates(Seq("doc_id")) // intra-batch replay dedup
-      .localCheckpoint(true) // micro-batch sources are not re-scannable
-    // empty-slice fast exit (guide §2.4): insert-only batches route
-    // here with zero rows — and an EMPTY append would create
-    // tombstones/, re-engaging the per-batch tombstone machinery
-    // (dir-existence-gated) on every later batch for nothing
-    if (ids.isEmpty) return
-    val fresh = tombstonesOpt(spark)
-      .map(t => ids.join(t, Seq("doc_id"), "left_anti")).getOrElse(ids)
-    fresh.write.mode("append").parquet(tombstonesDir)
-    StateLayout.invalidateCount(tombstonesDir)
-    maybeCompact(spark)
-  }
+  /** foreachBatch hook: `batch` needs (doc_id, text). Per-batch work is
+    * chunk-and-append; a replayed doc skips chunking (the guard runs
+    * on doc rows, before the chunk explode). */
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    ingest(batch.select(col("doc_id"), col("text")))
 
   /** Line-dedup stats + reconstruction over every doc seen so far,
     * MINUS retracted docs — row-identical to batch q119 on the
@@ -176,25 +83,6 @@ final class IncrementalLineDedup(statePath: String,
     * pressure over the post-quality-gate/post-collapse SURVIVOR corpus,
     * so the window must see only survivor chunks; the chunking work
     * itself was already paid per-batch at ingest). */
-  def chunksLive(spark: SparkSession): DataFrame = {
-    val ch = StateLayout.read(spark, chunksDir, emptyChunks(spark).schema)
-    tombstonesOpt(spark)
-      .map(t => ch.join(t, Seq("doc_id"), "left_anti")).getOrElse(ch)
-  }
-
-  /** Bound the state-file count (small-file compaction between waves).
-    * Compaction is also where retraction becomes PHYSICAL: tombstoned
-    * docs' chunk rows are dropped from the rewritten state (the
-    * GDPR-style hard-delete point). Tombstones themselves are RETAINED
-    * so a later replay of the deleted doc's insert events still
-    * appends nothing. */
-  def compact(spark: SparkSession, parts: Int): Unit = {
-    val tombs = tombstones(spark).localCheckpoint(true)
-    val cur = StateLayout.read(spark, chunksDir, emptyChunks(spark).schema)
-      .join(tombs, Seq("doc_id"), "left_anti").localCheckpoint(true)
-    StateLayout.overwriteCompacted(cur, chunksDir, Seq("doc_id"), parts)
-    if (StateLayout.exists(spark, tombstonesDir))
-      StateLayout.overwriteSmall(tombs, tombstonesDir)
-    nCompactions += 1
-  }
+  def chunksLive(spark: SparkSession): DataFrame =
+    live(read(spark, chunks))
 }

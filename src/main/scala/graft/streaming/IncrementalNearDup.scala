@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.operators.DedupGroups
 import graft.queries.LlmText
@@ -81,7 +81,7 @@ import graft.queries.LlmText
   * candidate generation by a broadcast anti-join (the marker set is
   * tiny — hot buckets are few by nature). A stream that never poisons
   * pays NOTHING: the machinery is gated on the marker dir existing,
-  * the [[tombstonesOpt]] pattern. Between sweeps an over-cap bucket's
+  * the same gating as the tombstones'. Between sweeps an over-cap bucket's
   * bands/ rows grow with its arrival rate — bounded by sweep cadence,
   * the documented parquet-twin tradeoff vs the store's per-batch O(1).
   *
@@ -113,7 +113,7 @@ import graft.queries.LlmText
   * filter keeps any recovered pair the target design co-buckets.
   *
   * RETRACTION ([[retractBatch]], VERDICT r9 item 4 — the
-  * [[IncrementalLineDedup]] tombstone doctrine): a CDC DELETE appends
+  * [[KeyedState]] tombstone doctrine): a CDC DELETE appends
   * one tombstone row under `tombstones/` and does no other work.
   * Tombstoned docs are (a) excluded from [[pairs]] (either side), so
   * their edges vanish and [[groups]]'s connected components re-form
@@ -131,7 +131,8 @@ import graft.queries.LlmText
 final class IncrementalNearDup(statePath: String,
     autoCompactFiles: Int = StateLayout.AutoCompactFiles,
     nBands: Int = 8, bandR: Int = 2,
-    hotBucketCap: Int = LlmText.HotBucketCap) {
+    hotBucketCap: Int = LlmText.HotBucketCap)
+    extends KeyedState(statePath, "doc_id", autoCompactFiles) {
 
   // a banding design regroups a full salted-md5 signature: 16
   // components (8×2 default, 4×4 after a re-band migration) or the
@@ -142,121 +143,58 @@ final class IncrementalNearDup(statePath: String,
   require(nBands * bandR == 16 || nBands * bandR == 32,
     s"banding $nBands x $bandR must regroup a 16- or 32-component signature")
 
-  /** See [[IncrementalLineDedup.compactionCount]]. */
-  @volatile private var nCompactions = 0
-  def compactionCount: Int = nCompactions
+  // the near-dup state's own schemas, derived from the stages that
+  // write it (the key struct's width is bandR, the signature's nBands × bandR)
+  private def emptyState(s: SparkSession): DataFrame =
+    LlmText.nearDupState(KeyedState.emptyDocs(s), nHashes = nBands * bandR)
 
-  /** The automatic compaction policy (VERDICT r10 item 5) — see
-    * [[IncrementalLineDedup]]'s doc; same trigger, same safety. */
-  private def maybeCompact(spark: SparkSession): Unit =
-    if (StateLayout.autoCompactDue(spark,
-        Seq("pairs", "bands", "sets", "tombstones", "ledger", "poisoned")
-          .map(t => s"$statePath/$t"),
-        autoCompactFiles))
-      compact(spark)
-
-  private val tombSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType)))
-
-  private def tombstones(spark: SparkSession): DataFrame =
-    readStateOr(spark, s"$statePath/tombstones", tombSchema)
-
-  /** None until the first DELETE lands — the common insert-only stream
-    * (and every pre-delete wave of a retracting one) then skips the
-    * whole tombstone machinery: no empty-relation checkpoint job, no
-    * anti-joins against a provably empty side. Each skipped step is a
-    * driver-scheduled job at micro-batch cadence, which is exactly the
-    * fixture-scale overhead VERDICT r11 flagged on this family
-    * (semantics unchanged: an anti-join against an empty relation is
-    * the identity). */
-  private def tombstonesOpt(spark: SparkSession): Option[DataFrame] = {
-    val dir = s"$statePath/tombstones"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.schema(tombSchema).parquet(dir)) else None
+  /** sets/ rows: the exact-verify shingle set plus the SIGNATURE (+16
+    * longs/doc) — the index's raw material, which makes a later re-band
+    * migration ([[IncrementalNearDup.rebandMigrate]]) a map over sets/
+    * instead of an unaffordable corpus re-scan. */
+  private def setsOf(state: DataFrame): DataFrame = {
+    val nHashes = state.columns.count(_.matches("h\\d+"))
+    state.select(col("doc_id"), col("hs"), col("nbg"),
+      array((0 until nHashes).map(i => col(s"h$i")): _*).as("sig"))
   }
 
-  /** foreachBatch hook for CDC DELETEs: `deletes` needs doc_id. O(1)
-    * per delete — appends a tombstone; edge removal and component
-    * re-formation are deferred to [[pairs]]/[[groups]]. Idempotent
-    * under replay. */
-  def retractBatch(deletes: DataFrame, batchId: Long): Unit = {
-    val spark = deletes.sparkSession
-    graft.util.Sessions.ensureActive(spark)
-    val ids = deletes.select(col("doc_id").cast("long").as("doc_id"))
-      .dropDuplicates(Seq("doc_id")) // intra-batch replay dedup
-      .localCheckpoint(true) // micro-batch sources are not re-scannable
-    // empty-slice fast exit (guide §2.4 — the wire drills route EVERY
-    // batch through both op paths, so insert-only batches land here
-    // with zero rows): appending nothing is a no-op, and skipping the
-    // write also keeps tombstones/ from being CREATED by an empty
-    // append — an existing-but-empty tombstone dir re-engages the
-    // whole per-batch anti-tombstone machinery downstream
-    // (tombstonesOpt is dir-existence-gated) for nothing
-    if (ids.isEmpty) return
-    val fresh = tombstonesOpt(spark)
-      .map(t => ids.join(t, Seq("doc_id"), "left_anti")).getOrElse(ids)
-    fresh.write.mode("append").parquet(s"$statePath/tombstones")
-    StateLayout.invalidateCount(s"$statePath/tombstones")
-    maybeCompact(spark)
-  }
+  private val bands = StateTable("bands", Seq("band", "key"),
+    s => LlmText.bandKeys(emptyState(s), nBands, bandR).schema)
+  private val sets = StateTable("sets", Seq("doc_id"), s => setsOf(emptyState(s)).schema)
+  protected val tables = Seq(bands, sets)
+  override protected def extraDirs: Seq[String] = Seq("pairs", "ledger", "poisoned").map(dir)
 
-  private def readStateOr(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  private def bandsDir = dir(bands.name)
+  private def setsDir = dir(sets.name)
+  private def pairsDir = dir("pairs")
+  private def ledgerDir = dir("ledger")
+  private def poisonedDir = dir("poisoned")
+
+  /** Marker rows are (band, key); ledger rows add the member doc_id. */
+  private def poisonedSchema(s: SparkSession): StructType =
+    StructType(bands.schema(s).filter(f => f.name == "band" || f.name == "key"))
+  private def ledgerSchema(s: SparkSession): StructType =
+    poisonedSchema(s).add(bands.schema(s)("doc_id"))
 
   /** None until the first sweep poisons a bucket — the common
     * never-hot stream then skips the whole poison machinery per batch
     * (no broadcast anti-joins, no ledger append job), the same
-    * zero-cost gating as [[tombstonesOpt]]. The marker set is (band,
-    * key) rows; schema is design-dependent (the key struct width is
-    * bandR), so reads infer it. */
-  private def poisonedOpt(spark: SparkSession): Option[DataFrame] = {
-    val dir = s"$statePath/poisoned"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(dir)) else None
-  }
+    * zero-cost gating as the tombstones'. */
+  private def poisonedOpt(spark: SparkSession): Option[DataFrame] =
+    StateLayout.readOpt(spark, poisonedDir, poisonedSchema(spark))
 
   /** foreachBatch hook: `batch` needs (doc_id, text). */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val docs = batch.select(col("doc_id"), col("text"))
-      // intra-batch replay dedup (ADVICE r9): a resumed connection can
-      // re-deliver an already-seen event in the SAME micro-batch as new
-      // ones — the committed-state anti-joins below only guard against
-      // rows that landed in EARLIER batches
-      .dropDuplicates(Seq("doc_id"))
-      .localCheckpoint(true) // micro-batch sources are not re-scannable
-    // the batch's row count off the checkpointed blocks — one cheap
-    // job serving two purposes: the empty-slice fast exit (guide §2.4:
-    // a DDL-only or delete-only micro-batch reaches this hook with
-    // zero insert rows, and the full processState pass over an empty
-    // batch is ~10 driver-scheduled jobs that append nothing) and the
-    // SELF-SIZED partition count below (VERDICT r14 item 6)
-    val nRows = docs.count()
-    if (nRows == 0) return
-
     // one scan + one shuffle yields both the signature arrays and the
     // minhash components (LlmText.nearDupState), materialized once for
     // the batch's several uses; the signature width follows the
-    // consumer's banding design (16 default, 32 post-widening).
-    // Partitions follow the OBSERVED batch volume (bounded [4, ambient])
-    // instead of a static constant — at fixture scale this reproduces
-    // the former plans; production hooks on an unwrapped session size
-    // by volume with no env knob (Confs.microBatchPartitionsFor).
-    graft.util.Confs.withShufflePartitions(batch.sparkSession,
-        graft.util.Confs.microBatchPartitionsFor(batch.sparkSession, nRows)) {
-      // the signature pass is batch-sized too — same execution scope
-      // as the processState body it feeds
-      graft.util.Confs.withMicroBatchExec(batch.sparkSession) {
-        processState(LlmText.nearDupState(docs, nHashes = nBands * bandR)
-          .localCheckpoint(true), batchId)
-      }
+    // consumer's banding design (16 default, 32 post-widening). An
+    // empty batch skips the ~10 driver-scheduled jobs of processState.
+    inBatchScope(batch.select(col("doc_id"), col("text"))) { docs =>
+      processState(LlmText.nearDupState(docs, nHashes = nBands * bandR)
+        .localCheckpoint(true), batchId)
     }
+    ()
   }
 
   /** Shared-scan entry: `state` must be `LlmText.nearDupState` rows for
@@ -284,22 +222,12 @@ final class IncrementalNearDup(statePath: String,
       // read used only as the broadcast build side of anti-joins — each
       // use re-scans the small file inside a job that runs anyway,
       // whereas the checkpoint was one extra driver-scheduled job at
-      // micro-batch cadence (the r11 fixed-cost class)
-      val tombsOpt = tombstonesOpt(spark)
-      def antiTomb(df: DataFrame): DataFrame =
-        tombsOpt.map(t => df.join(t, Seq("doc_id"), "left_anti")).getOrElse(df)
-      // tombstones win: a replayed insert of a deleted doc is dropped
+      // micro-batch cadence (the r11 fixed-cost class).
+      // Tombstones win: a replayed insert of a deleted doc is dropped
       // here, so it can never re-enter the band index or the pair set
-      val live = antiTomb(state)
-      // sets/ retains the SIGNATURE alongside the exact-verify shingle
-      // set (+16 longs/doc): the signature is the index's raw material,
-      // and keeping it makes a later re-band migration
-      // ([[IncrementalNearDup.rebandMigrate]]) a map over sets/ instead
-      // of an unaffordable corpus re-scan
-      val nHashes = live.columns.count(_.matches("h\\d+"))
-      val newSets = live.select(col("doc_id"), col("hs"), col("nbg"),
-        array((0 until nHashes).map(i => col(s"h$i")): _*).as("sig"))
-      val allNewBands = LlmText.bandKeys(live, nBands, bandR)
+      val liveState = live(state)
+      val newSets = setsOf(liveState)
+      val allNewBands = LlmText.bandKeys(liveState, nBands, bandR)
 
       // poison routing (see the class doc's poison+ledger section):
       // arrivals into poisoned buckets divert to the append-only ledger —
@@ -346,10 +274,10 @@ final class IncrementalNearDup(statePath: String,
       // (spec-pinned stream==batch, q66 oracle hash unchanged).
       // Batch 0 (no committed index yet) skips the committed side
       // entirely — new-vs-new candidates only, no semi-join broadcast.
-      val bandsExists = StateLayout.exists(spark, s"$statePath/bands")
+      val bandsExists = StateLayout.exists(spark, bandsDir)
       val tagged = if (!bandsExists) newBands.withColumn("is_new", lit(true))
         else candidateUnion(
-          antiTomb(StateLayout.readPruned(spark, s"$statePath/bands",
+          live(StateLayout.readPruned(spark, bandsDir,
             newBands.schema, newBands, Seq("band", "key"))),
           newBands)
       // (poisoned buckets cannot reach this group-by: newBands excluded
@@ -370,7 +298,7 @@ final class IncrementalNearDup(statePath: String,
       // class VERDICT r11 flagged on this family. At a 100 TB batch
       // cadence the dirs grow past the threshold and the checkpoints
       // re-engage, so the scale path is unchanged.
-      val setsPrunes = StateLayout.prunes(spark, s"$statePath/sets")
+      val setsPrunes = StateLayout.prunes(spark, setsDir)
       val cand0 = buckets
         .select(explode(col("ms")).as("x"), col("ms"))
         .where(col("x.is_new"))
@@ -387,20 +315,20 @@ final class IncrementalNearDup(statePath: String,
       // against a committed dir that does not exist yet is the identity —
       // skipping the join skips its broadcast-build and probe jobs, the
       // bulk of the first wave's driver-scheduling overhead
-      val setsExists = StateLayout.exists(spark, s"$statePath/sets")
+      val setsExists = StateLayout.exists(spark, setsDir)
       val candDocs = cand.select(col("doc_a").as("doc_id"))
         .union(cand.select(col("doc_b").as("doc_id")))
       val verifySets = if (!setsExists) newSets
-        else antiTomb(StateLayout.readPruned(spark, s"$statePath/sets",
+        else live(StateLayout.readPruned(spark, setsDir,
           newSets.schema, candDocs, Seq("doc_id"))).unionByName(newSets)
-      val pairsPrunes = StateLayout.prunes(spark, s"$statePath/pairs")
+      val pairsPrunes = StateLayout.prunes(spark, pairsDir)
       val verified0 = LlmText.verifyPairs(cand, verifySets)
       // read twice when the pairs/ read prunes (probe + freshness join)
       val verified = if (pairsPrunes) verified0.localCheckpoint(true) else verified0
-      val pairsExists = StateLayout.exists(spark, s"$statePath/pairs")
+      val pairsExists = StateLayout.exists(spark, pairsDir)
       val fresh = if (!pairsExists) verified
         else verified.join(
-          StateLayout.readPruned(spark, s"$statePath/pairs",
+          StateLayout.readPruned(spark, pairsDir,
             verified.schema, verified, Seq("doc_a", "doc_b"))
             .select("doc_a", "doc_b"),
           Seq("doc_a", "doc_b"), "left_anti")
@@ -415,7 +343,7 @@ final class IncrementalNearDup(statePath: String,
       // [[guardFreshBands]].
       val freshSets = if (!setsExists) newSets
         else newSets.join(
-          StateLayout.readPruned(spark, s"$statePath/sets", newSets.schema,
+          StateLayout.readPruned(spark, setsDir, newSets.schema,
             newSets, Seq("doc_id")).select("doc_id"),
           Seq("doc_id"), "left_anti")
       // the three appends are INDEPENDENT jobs (each reads only committed
@@ -429,17 +357,15 @@ final class IncrementalNearDup(statePath: String,
       // segment durable before the data append commits) is sequential
       // within the thunk.
       graft.util.Jobs.awaitAll(s"IncrementalNearDup batch $batchId appends")(Seq(
-        () => StateLayout.append(fresh, s"$statePath/pairs", Seq("doc_a", "doc_b")),
+        () => StateLayout.append(fresh, pairsDir, Seq("doc_a", "doc_b")),
         () => StateLayout.append(guardFreshBands(spark, newBands),
-          s"$statePath/bands", Seq("band", "key")),
-        () => StateLayout.append(freshSets, s"$statePath/sets", Seq("doc_id"))) ++
+          bandsDir, bands.keys),
+        () => StateLayout.append(freshSets, setsDir, sets.keys)) ++
         // the hot-arrival ledger append — plain append-only parquet, the
         // event-sink shape: recovery-only, never probed per batch, so no
         // bucketed layout and no replay guard (duplicate rows fold out in
         // recovery's distinct). Present only once a bucket is poisoned.
-        hotArrivals.map(hot =>
-          () => { hot.write.mode("append").parquet(s"$statePath/ledger")
-            StateLayout.invalidateCount(s"$statePath/ledger") }))
+        hotArrivals.map(hot => () => StateLayout.appendFlat(hot, ledgerDir)))
     }
     maybeCompact(spark)
     ()
@@ -457,13 +383,11 @@ final class IncrementalNearDup(statePath: String,
     * arrival rate — the documented cadence bound. */
   def poisonSweep(spark: SparkSession): Long = {
     graft.util.Sessions.ensureActive(spark)
-    if (!StateLayout.exists(spark, s"$statePath/bands")) return 0L
-    val bands = spark.read.parquet(s"$statePath/bands")
-      .drop(StateLayout.BucketCol).localCheckpoint(true)
+    if (!StateLayout.exists(spark, bandsDir)) return 0L
+    val committed = read(spark, bands).localCheckpoint(true)
     // poisoning is decided over the SURVIVING membership, mirroring the
     // candidate view (and the state-store twin's claimant fold)
-    val liveBands = tombstonesOpt(spark)
-      .map(t => bands.join(t, Seq("doc_id"), "left_anti")).getOrElse(bands)
+    val liveBands = live(committed)
     val already = poisonedOpt(spark)
     val over = liveBands.groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("n")).where(col("n") > hotBucketCap)
@@ -476,29 +400,25 @@ final class IncrementalNearDup(statePath: String,
       // 1. the ledger is durable FIRST: the full live membership of the
       //    newly hot buckets — a crash after this re-appends next sweep
       //    (recovery's distinct folds duplicates), never loses members
-      liveBands.join(broadcast(newlyHot), Seq("band", "key"), "left_semi")
-        .select(col("band"), col("key"), col("doc_id"))
-        .write.mode("append").parquet(s"$statePath/ledger")
-      StateLayout.invalidateCount(s"$statePath/ledger")
+      StateLayout.appendFlat(
+        liveBands.join(broadcast(newlyHot), Seq("band", "key"), "left_semi")
+          .select(col("band"), col("key"), col("doc_id")), ledgerDir)
       // 2. the sticky marker
-      newlyHot.write.mode("append").parquet(s"$statePath/poisoned")
-      StateLayout.invalidateCount(s"$statePath/poisoned")
+      StateLayout.appendFlat(newlyHot, poisonedDir)
     }
     // 3. drop ALL marked buckets' rows from the index (not just the new
     //    ones — converges leftover rows from a crash mid-sweep), and
     //    rebuild the replay-guard sidecar over the surviving doc set
     val allMarked = poisonedOpt(spark)
-    if (allMarked.isDefined && (nNew > 0 || bands.join(
+    if (allMarked.isDefined && (nNew > 0 || committed.join(
         broadcast(allMarked.get.select(col("band"), col("key"))),
         Seq("band", "key"), "left_semi").head(1).nonEmpty)) {
-      val kept = bands.join(
+      val kept = committed.join(
           broadcast(allMarked.get.select(col("band"), col("key"))),
           Seq("band", "key"), "left_anti")
         .localCheckpoint(true)
-      StateLayout.overwriteCompacted(kept, s"$statePath/bands",
-        Seq("band", "key"), parts = 8)
-      StateLayout.rebuildBloom(spark,
-        StateLayout.bloomSidecar(s"$statePath/bands"),
+      StateLayout.overwriteCompacted(kept, bandsDir, bands.keys)
+      StateLayout.rebuildBloom(spark, StateLayout.bloomSidecar(bandsDir),
         kept.select("doc_id"), "doc_id")
     }
     nNew
@@ -519,10 +439,7 @@ final class IncrementalNearDup(statePath: String,
   def recoverPoisonedPairs(spark: SparkSession,
       recoverBudget: Long = Long.MaxValue): DataFrame = {
     graft.util.Sessions.ensureActive(spark)
-    def readOrNone(dir: String): Option[DataFrame] =
-      if (StateLayout.exists(spark, dir))
-        Some(spark.read.parquet(dir).drop(StateLayout.BucketCol)) else None
-    val bandsM = readOrNone(s"$statePath/bands")
+    val bandsM = StateLayout.readOpt(spark, bandsDir, bands.schema(spark))
       .map(_.select(col("band"), col("key"), col("doc_id")))
     val unswept = bandsM.map { b =>
       val over = b.groupBy(col("band"), col("key"))
@@ -530,17 +447,13 @@ final class IncrementalNearDup(statePath: String,
         .select(col("band"), col("key"))
       b.join(over, Seq("band", "key"), "left_semi")
     }
-    val ledger = readOrNone(s"$statePath/ledger")
-      .map(_.select(col("band"), col("key"), col("doc_id")))
+    val ledger = StateLayout.readOpt(spark, ledgerDir, ledgerSchema(spark))
     val memAll = (unswept.toSeq ++ ledger.toSeq)
       .reduceOption(_ unionByName _)
       .getOrElse(return spark.emptyDataFrame
         .select(lit(0L).as("doc_a"), lit(0L).as("doc_b"),
           lit(0.0).as("jaccard")).limit(0))
-    val tombsOpt = tombstonesOpt(spark)
-    val mem = tombsOpt.map(t => memAll.join(t, Seq("doc_id"), "left_anti"))
-      .getOrElse(memAll)
-      .distinct().localCheckpoint(true)
+    val mem = live(memAll).distinct().localCheckpoint(true)
     val within = if (recoverBudget == Long.MaxValue) mem
       else mem.join(
         mem.groupBy(col("band"), col("key")).agg(count(lit(1)).as("n"))
@@ -551,14 +464,10 @@ final class IncrementalNearDup(statePath: String,
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    val known = readOrNone(s"$statePath/pairs")
+    val known = StateLayout.readOpt(spark, pairsDir, IncrementalNearDup.PairsSchema)
     val cand = known.map(k => cand0.join(k.select("doc_a", "doc_b"),
       Seq("doc_a", "doc_b"), "left_anti")).getOrElse(cand0)
-    val sets = spark.read.parquet(s"$statePath/sets")
-      .drop(StateLayout.BucketCol)
-      .select(col("doc_id"), col("hs"), col("nbg"))
-    val liveSets = tombsOpt.map(t => sets.join(t, Seq("doc_id"), "left_anti"))
-      .getOrElse(sets)
+    val liveSets = live(read(spark, sets).select(col("doc_id"), col("hs"), col("nbg")))
     LlmText.verifyPairs(cand, liveSets)
   }
 
@@ -601,7 +510,6 @@ final class IncrementalNearDup(statePath: String,
     * join pruning). */
   private def guardFreshBands(spark: SparkSession,
       newBands: DataFrame): DataFrame = {
-    val bandsDir = s"$statePath/bands"
     val sidecar = StateLayout.bloomSidecar(bandsDir)
     // the batch's distinct doc set, computed ONCE and shared by the
     // sketch probe and the sidecar append — previously each re-ran the
@@ -679,83 +587,49 @@ final class IncrementalNearDup(statePath: String,
       .unionByName(newBands.withColumn("is_new", lit(true)))
   }
 
-  /** Compact a state directory tree: per-batch appends accumulate one
-    * small file set per micro-batch, which at production batch rates
-    * degrades every subsequent state read — standard streaming-state
-    * hygiene is periodic compaction (e.g. every N batches from the
-    * foreachBatch hook). Rewrites each table to `parts` files. */
-  def compact(spark: SparkSession, parts: Int = 8): Unit = {
-    graft.util.Sessions.ensureActive(spark)
-    // compaction is where retraction becomes PHYSICAL: tombstoned
-    // docs' rows are dropped from every rewritten table (pairs on
-    // either side); the tombstones themselves are retained so a later
-    // replay of the deleted doc's insert events still appends nothing
-    val tombs = tombstones(spark).localCheckpoint(true)
-    val layoutKeys = Map(
-      "pairs" -> Seq("doc_a", "doc_b"),
-      "bands" -> Seq("band", "key"),
-      "sets" -> Seq("doc_id"))
-    // an append of an empty batch leaves a dir with no parquet file:
-    // nothing to compact there, and no schema to infer
-    def hasData(dir: String): Boolean =
-      StateLayout.exists(spark, dir) && StateLayout.parquetFileCount(spark, dir) > 0
-    Seq("pairs", "bands", "sets").foreach { t =>
-      val dir = s"$statePath/$t"
-      if (hasData(dir)) {
-        // inferred read + drop of the layout column handles each dir's
-        // schema (bands' key struct is fixture-shaped); the rewrite
-        // restores the bucketed layout
-        val cur0 = spark.read.parquet(dir).drop(StateLayout.BucketCol)
-        // bands/ compaction doubles as poison-sweep convergence: marked
-        // buckets' leftover rows (a crash mid-sweep) drop here too —
-        // their membership is already durable in the ledger
-        val cur = if (t == "bands") poisonedOpt(spark).map(p =>
-            cur0.join(broadcast(p.select(col("band"), col("key"))),
-              Seq("band", "key"), "left_anti")).getOrElse(cur0)
-          else cur0
-        val snap = (if (t == "pairs") dropTombstonedPairs(cur, tombs)
-          else cur.join(tombs, Seq("doc_id"), "left_anti"))
-          .localCheckpoint(true)
-        StateLayout.overwriteCompacted(snap, dir, layoutKeys(t), parts)
-      }
-    }
-    if (StateLayout.exists(spark, s"$statePath/tombstones"))
-      StateLayout.overwriteSmall(tombs, s"$statePath/tombstones")
-    // the poison state: markers dedup; the ledger dedups and makes
-    // retraction physical (tombstoned members leave — recovery would
-    // have anti-joined them anyway, this just sheds the bytes)
-    poisonedOpt(spark).foreach(p => StateLayout.overwriteSmall(
-      p.distinct().localCheckpoint(true), s"$statePath/poisoned"))
-    if (hasData(s"$statePath/ledger"))
+  /** bands/ compaction doubles as poison-sweep convergence: marked
+    * buckets' leftover rows (a crash mid-sweep) drop here too — their
+    * membership is already durable in the ledger. */
+  override protected def retained(t: StateTable, rows: DataFrame): DataFrame =
+    if (t.name != bands.name) rows
+    else poisonedOpt(rows.sparkSession).fold(rows)(p =>
+      rows.join(broadcast(p.select(col("band"), col("key"))), Seq("band", "key"), "left_anti"))
+
+  /** The compaction beyond bands/ and sets/: pairs/ loses edges with a
+    * tombstoned doc on either side; the poison markers dedup; the
+    * ledger dedups and makes retraction physical (tombstoned members
+    * leave — recovery would have anti-joined them anyway, this just
+    * sheds the bytes). */
+  override protected def compactMore(spark: SparkSession,
+      tombs: Option[DataFrame]): Unit = {
+    if (hasData(spark, pairsDir))
+      StateLayout.overwriteCompacted(
+        without(StateLayout.read(spark, pairsDir, IncrementalNearDup.PairsSchema),
+          tombs, Seq("doc_a", "doc_b")).localCheckpoint(true),
+        pairsDir, Seq("doc_a", "doc_b"))
+    poisonedOpt(spark).foreach(p =>
+      StateLayout.overwriteSmall(p.distinct().localCheckpoint(true), poisonedDir))
+    if (hasData(spark, ledgerDir))
       StateLayout.overwriteSmall(
-        spark.read.parquet(s"$statePath/ledger").distinct()
-          .join(tombs, Seq("doc_id"), "left_anti").localCheckpoint(true),
-        s"$statePath/ledger")
+        without(StateLayout.read(spark, ledgerDir, ledgerSchema(spark)).distinct(), tombs)
+          .localCheckpoint(true), ledgerDir)
     // rebuild the bands guard sidecar from the compacted dir: its doc
     // set is committed-minus-tombstoned, which is exactly what the
     // guard must over-approximate — a tombstoned doc's replayed insert
     // is dropped by the `live` filter BEFORE the guard, so shedding
     // those ids from the sidecar cannot re-admit it
-    if (hasData(s"$statePath/bands"))
-      StateLayout.rebuildBloom(spark,
-        StateLayout.bloomSidecar(s"$statePath/bands"),
-        spark.read.parquet(s"$statePath/bands").select("doc_id"), "doc_id")
-    nCompactions += 1
+    if (hasData(spark, bandsDir))
+      StateLayout.rebuildBloom(spark, StateLayout.bloomSidecar(bandsDir),
+        read(spark, bands).select("doc_id"), "doc_id")
   }
-
-  private def dropTombstonedPairs(p: DataFrame, tombs: DataFrame): DataFrame =
-    p.join(tombs.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_anti")
-      .join(tombs.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
-      .select(p.columns.map(col).toSeq: _*)
 
   /** Accumulated verified near-dup pairs (doc_a, doc_b, jaccard) among
     * the SURVIVING docs — a tombstoned doc's edges vanish from both
     * sides, so downstream components re-form as a batch run over the
     * survivors would. */
-  def pairs(spark: SparkSession): DataFrame = {
-    val p = spark.read.parquet(s"$statePath/pairs").drop(StateLayout.BucketCol)
-    tombstonesOpt(spark).map(dropTombstonedPairs(p, _)).getOrElse(p)
-  }
+  def pairs(spark: SparkSession): DataFrame =
+    live(StateLayout.read(spark, pairsDir, IncrementalNearDup.PairsSchema),
+      Seq("doc_a", "doc_b"))
 
   /** Dedup groups over everything ingested so far — same contract as
     * the batch q57 (doc_id → component-min rep). */
@@ -764,6 +638,10 @@ final class IncrementalNearDup(statePath: String,
 }
 
 object IncrementalNearDup {
+
+  /** pairs/ rows, as [[LlmText.verifyPairs]] emits them. */
+  val PairsSchema: StructType = StructType(Seq(StructField("doc_a", LongType),
+    StructField("doc_b", LongType), StructField("jaccard", DoubleType)))
 
   /** Online re-band migration — the "corpus outgrew the index"
     * operation (the MinHash-side sibling of the corpus-linked
@@ -832,7 +710,7 @@ object IncrementalNearDup {
       .select(col("doc_id"), posexplode(keysOf(col("sig"))).as(Seq("band", "key")))
       .localCheckpoint(true)
     StateLayout.overwriteCompacted(newBands, s"$statePath/bands",
-      Seq("band", "key"), parts = 8)
+      Seq("band", "key"))
     StateLayout.rebuildBloom(spark,
       StateLayout.bloomSidecar(s"$statePath/bands"),
       newBands.select("doc_id"), "doc_id")
@@ -846,7 +724,7 @@ object IncrementalNearDup {
     dropPoisonState(spark, statePath)
     val pairsDir = s"$statePath/pairs"
     if (StateLayout.exists(spark, pairsDir)) {
-      val pairs0 = spark.read.parquet(pairsDir).drop(StateLayout.BucketCol)
+      val pairs0 = StateLayout.read(spark, pairsDir, PairsSchema)
       val sigs = sets.select(col("doc_id"), col("sig"))
       // ∃ band j: all bandR components equal — the target design
       // co-buckets the pair
@@ -861,8 +739,7 @@ object IncrementalNearDup {
         .where(coBucketed)
         .select(pairs0.columns.map(col).toSeq: _*)
         .localCheckpoint(true)
-      StateLayout.overwriteCompacted(kept, pairsDir,
-        Seq("doc_a", "doc_b"), parts = 8)
+      StateLayout.overwriteCompacted(kept, pairsDir, Seq("doc_a", "doc_b"))
     }
   }
 
@@ -985,27 +862,19 @@ object IncrementalNearDup {
       joined.where(col("ext").isNotNull)
         .withColumn("sig", concat(col("sig"), col("ext"))).drop("ext")
     }
-    StateLayout.overwriteCompacted(wide, setsDir, Seq("doc_id"), parts = 8)
+    StateLayout.overwriteCompacted(wide, setsDir, Seq("doc_id"))
     // target-design h-columns view of the wide signature: band rewrite
     // and candidate regeneration run the PRODUCTION code paths over it
     val sigDf = wide.select(col("doc_id") +:
       (0 until w).map(i => col("sig").getItem(i).as(s"h$i")): _*)
     val newBands = LlmText.bandKeys(sigDf, nBands, bandR).localCheckpoint(true)
     StateLayout.overwriteCompacted(newBands, s"$statePath/bands",
-      Seq("band", "key"), parts = 8)
+      Seq("band", "key"))
     StateLayout.rebuildBloom(spark,
       StateLayout.bloomSidecar(s"$statePath/bands"),
       newBands.select("doc_id"), "doc_id")
     val pairsDir = s"$statePath/pairs"
-    val pairs0 = (if (StateLayout.exists(spark, pairsDir))
-      spark.read.parquet(pairsDir).drop(StateLayout.BucketCol)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_a", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("doc_b", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("jaccard", org.apache.spark.sql.types.DoubleType)))))
-      .localCheckpoint(true)
+    val pairs0 = StateLayout.read(spark, pairsDir, PairsSchema).localCheckpoint(true)
     val cand = LlmText.bandedCandidates(sigDf, nBands, bandR)
       .localCheckpoint(true)
     val known = pairs0.join(cand, Seq("doc_a", "doc_b"), "left_semi")
@@ -1014,8 +883,7 @@ object IncrementalNearDup {
     val freshV = LlmText.verifyPairs(unknown,
       wide.select(col("doc_id"), col("hs"), col("nbg")))
     val migrated = known.unionByName(freshV).localCheckpoint(true)
-    StateLayout.overwriteCompacted(migrated, pairsDir,
-      Seq("doc_a", "doc_b"), parts = 8)
+    StateLayout.overwriteCompacted(migrated, pairsDir, Seq("doc_a", "doc_b"))
     // same poison-state reset as rebandMigrate — and here it is even
     // cleanly exact: candidates were REGENERATED from the full wide
     // index, so pairs a hot source bucket suppressed were verified
@@ -1026,10 +894,5 @@ object IncrementalNearDup {
   /** Delete the poison marker set + ledger of a state dir — the
     * migration reset (bucket keys are design-specific). */
   private def dropPoisonState(spark: SparkSession, statePath: String): Unit =
-    Seq("poisoned", "ledger").foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$statePath/$t")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      StateLayout.invalidateCount(s"$statePath/$t")
-    }
+    Seq("poisoned", "ledger").foreach(t => StateLayout.delete(spark, s"$statePath/$t"))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.queries.LlmText
 
@@ -24,130 +23,28 @@ import graft.queries.LlmText
   *
   * Replay safety: the append is anti-joined on doc_id against the
   * committed state, so a foreachBatch retry is a no-op (the
-  * [[IncrementalNearDup]] idempotence doctrine). Emission is
+  * [[KeyedState]] idempotence doctrine). Emission is
   * arrival-order independent by construction: state is a pure set
   * union and every reported statistic is computed from the full set.
   */
 final class IncrementalReportCard(statePath: String,
-    autoCompactFiles: Int = StateLayout.AutoCompactFiles) {
+    autoCompactFiles: Int = StateLayout.AutoCompactFiles)
+    extends KeyedState(statePath, "doc_id", autoCompactFiles) {
 
-  /** See [[IncrementalLineDedup.compactionCount]]. */
-  @volatile private var nCompactions = 0
-  def compactionCount: Int = nCompactions
-
-  /** The automatic compaction policy (VERDICT r10 item 5) — see
-    * [[IncrementalLineDedup]]'s doc; same trigger, same safety. */
-  private def maybeCompact(spark: SparkSession): Unit =
-    if (StateLayout.autoCompactDue(spark, Seq(docsDir, tombstonesDir),
-        autoCompactFiles))
-      compact(spark, StateLayout.NumBuckets)
-
-  private val docsDir = s"$statePath/docs"
-  private val tombstonesDir = s"$statePath/tombstones"
-
-  private val tombSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType)))
-
-  private def readDirOr(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  private def tombstones(spark: SparkSession): DataFrame =
-    readDirOr(spark, tombstonesDir, tombSchema)
-
-  /** See [[StateLayout.readOpt]] — None until the first DELETE lands,
-    * so the common insert-only stream skips the tombstone machinery. */
-  private def tombstonesOpt(spark: SparkSession): Option[DataFrame] =
-    StateLayout.readOpt(spark, tombstonesDir, tombSchema)
-
-  /** foreachBatch hook for CDC DELETEs (the IncrementalLineDedup
-    * tombstone doctrine): O(1) tombstone append; the crosstab at
-    * emission re-computes over survivors, so a doc whose only
-    * duplicate partner is deleted flips back to non-dup — the
-    * retroactive dup flag REVERSES. Idempotent under replay;
-    * tombstones win on later inserts. */
-  def retractBatch(deletes: DataFrame, batchId: Long): Unit = {
-    val spark = deletes.sparkSession
-    val ids = deletes.select(col("doc_id").cast("long").as("doc_id"))
-      .dropDuplicates(Seq("doc_id")) // intra-batch replay dedup
-      .localCheckpoint(true) // micro-batch sources are not re-scannable
-    // empty-slice fast exit (guide §2.4): insert-only batches route
-    // here with zero rows — an EMPTY append would still create the
-    // tombstone dir, re-engaging the per-batch tombstone machinery
-    // (dir-existence-gated) on every later batch for nothing
-    if (ids.isEmpty) return
-    val fresh = tombstonesOpt(spark)
-      .map(t => ids.join(t, Seq("doc_id"), "left_anti")).getOrElse(ids)
-    fresh.write.mode("append").parquet(tombstonesDir)
-    StateLayout.invalidateCount(tombstonesDir)
-    maybeCompact(spark)
-  }
-
-  private def emptyDocs(spark: SparkSession): DataFrame =
-    spark.createDataFrame(Seq.empty[(Long, String, String, String)])
-      .toDF("doc_id", "text", "source", "lang")
-
-  private def readStateOr(spark: SparkSession, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(docsDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(docsDir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  private val docs = StateTable("docs", Seq("doc_id"),
+    s => s.createDataFrame(Seq.empty[(Long, String, String, String)])
+      .toDF("doc_id", "text", "source", "lang").schema)
+  protected val tables = Seq(docs)
 
   /** foreachBatch hook: `batch` needs (doc_id, text, source, lang). */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val docs = batch.select(col("doc_id"), col("text"), col("source"), col("lang"))
-      // intra-batch replay dedup (ADVICE r9): a resumed connection can
-      // re-deliver an already-seen event in the SAME micro-batch as new
-      // ones — the committed-state anti-join below only guards against
-      // rows that landed in EARLIER batches
-      .dropDuplicates(Seq("doc_id"))
-      .localCheckpoint(true) // micro-batch sources are not re-scannable
-    // empty-slice fast exit (guide §2.4): a DDL-only or delete-only
-    // micro-batch reaches this hook with zero insert rows — skip the
-    // guard read and the empty append outright (the probe reads the
-    // checkpointed blocks, not the source)
-    if (docs.isEmpty) return
-    // guard read PRUNED to the batch's doc_id buckets (VERDICT r10
-    // item 2 — docs/ is bucket-partitioned on doc_id); batch 0 skips
-    // the guard join entirely (identity against an empty side).
-    // tombstones win: a replayed insert of a deleted doc appends nothing
-    val guardSides =
-      StateLayout.readPrunedOpt(spark, docsDir, docs.schema,
-        docs, Seq("doc_id")).map(_.select("doc_id")).toSeq ++
-      tombstonesOpt(spark).map(_.select("doc_id"))
-    val fresh = guardSides.reduceOption(_ union _) match {
-      case Some(seen) => docs.join(seen.distinct(), Seq("doc_id"), "left_anti")
-      case None => docs
-    }
-    StateLayout.append(fresh, docsDir, Seq("doc_id"))
-    maybeCompact(spark)
-  }
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    ingest(batch.select(col("doc_id"), col("text"), col("source"), col("lang")))
 
   /** The (source × lang) crosstab over every doc seen so far —
-    * row-identical to batch q133 on the same corpus. */
-  def reportCard(spark: SparkSession): DataFrame = {
-    val d = StateLayout.read(spark, docsDir, emptyDocs(spark).schema)
-    // retraction: every statistic (incl. the dup-pressure window)
-    // re-computes over the surviving docs only
-    LlmText.reportCardOf(tombstonesOpt(spark)
-      .map(t => d.join(t, Seq("doc_id"), "left_anti")).getOrElse(d))
-  }
-
-  /** Bound the state-file count (small-file compaction between waves);
-    * also the physical-delete point (tombstones retained). */
-  def compact(spark: SparkSession, parts: Int): Unit = {
-    val tombs = tombstones(spark).localCheckpoint(true)
-    val cur = StateLayout.read(spark, docsDir, emptyDocs(spark).schema)
-      .join(tombs, Seq("doc_id"), "left_anti").localCheckpoint(true)
-    StateLayout.overwriteCompacted(cur, docsDir, Seq("doc_id"), parts)
-    if (StateLayout.exists(spark, tombstonesDir))
-      StateLayout.overwriteSmall(tombs, tombstonesDir)
-    nCompactions += 1
-  }
+    * row-identical to batch q133 on the same corpus. Retraction: every
+    * statistic (incl. the dup-pressure window) re-computes over the
+    * surviving docs only, so a doc whose only duplicate partner is
+    * deleted flips back to non-dup. */
+  def reportCard(spark: SparkSession): DataFrame =
+    LlmText.reportCardOf(live(read(spark, docs)))
 }

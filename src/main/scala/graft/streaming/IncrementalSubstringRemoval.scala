@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.queries.LlmText
 
@@ -31,8 +30,8 @@ import graft.queries.LlmText
   * twin share batch q126's DuckDB oracle verbatim.
   *
   * Replay safety: each directory's append is anti-joined on doc_id
-  * against THAT directory's committed state (the [[IncrementalNearDup]]
-  * rule: per-dir guards, never one guard for two dirs). A failure
+  * against THAT directory's committed state ([[KeyedState]]'s rule:
+  * per-dir guards, never one guard for two dirs). A failure
   * between the docs append and the grams append leaves the doc present
   * in `docs/` but absent from `grams/`; the retry's docs append is a
   * no-op but its grams append still fires, because the grams guard
@@ -40,137 +39,25 @@ import graft.queries.LlmText
   * rather than permanently lost.
   */
 final class IncrementalSubstringRemoval(statePath: String, n: Int = 10,
-    autoCompactFiles: Int = StateLayout.AutoCompactFiles) {
+    autoCompactFiles: Int = StateLayout.AutoCompactFiles)
+    extends KeyedState(statePath, "doc_id", autoCompactFiles) {
 
-  /** See [[IncrementalLineDedup.compactionCount]]. */
-  @volatile private var nCompactions = 0
-  def compactionCount: Int = nCompactions
-
-  /** The automatic compaction policy (VERDICT r10 item 5) — see
-    * [[IncrementalLineDedup]]'s doc; same trigger, same safety. */
-  private def maybeCompact(spark: SparkSession): Unit =
-    if (StateLayout.autoCompactDue(spark,
-        Seq(gramsDir, docsDir, tombstonesDir), autoCompactFiles))
-      compact(spark, StateLayout.NumBuckets)
-
-  private val gramsDir = s"$statePath/grams"
-  private val docsDir = s"$statePath/docs"
-  private val tombstonesDir = s"$statePath/tombstones"
-
-  private val tombSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType)))
-
-  private def tombstones(spark: SparkSession): DataFrame =
-    readStateOr(spark, tombstonesDir, tombSchema)
-
-  /** See [[StateLayout.readOpt]] — None until the first DELETE lands,
-    * so the common insert-only stream skips the tombstone machinery. */
-  private def tombstonesOpt(spark: SparkSession): Option[DataFrame] =
-    StateLayout.readOpt(spark, tombstonesDir, tombSchema)
-
-  /** foreachBatch hook for CDC DELETEs (the IncrementalLineDedup
-    * tombstone doctrine): O(1) tombstone append; the keep-first
-    * re-judgment over survivors is deferred to [[removals]] — a gram
-    * owned only by the deleted doc stops removing other docs' tokens.
-    * Idempotent under replay; tombstones win on later inserts. */
-  def retractBatch(deletes: DataFrame, batchId: Long): Unit = {
-    val spark = deletes.sparkSession
-    val ids = deletes.select(col("doc_id").cast("long").as("doc_id"))
-      .dropDuplicates(Seq("doc_id")) // intra-batch replay dedup
-      .localCheckpoint(true) // micro-batch sources are not re-scannable
-    // empty-slice fast exit (guide §2.4): insert-only batches route
-    // here with zero rows — an EMPTY append would still create the
-    // tombstone dir, re-engaging the per-batch tombstone machinery
-    // (dir-existence-gated) on every later batch for nothing
-    if (ids.isEmpty) return
-    val fresh = tombstonesOpt(spark)
-      .map(t => ids.join(t, Seq("doc_id"), "left_anti")).getOrElse(ids)
-    fresh.write.mode("append").parquet(tombstonesDir)
-    StateLayout.invalidateCount(tombstonesDir)
-    maybeCompact(spark)
-  }
-
-  private def readStateOr(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  private def emptyDocs(spark: SparkSession): DataFrame =
-    spark.createDataFrame(Seq.empty[(Long, String)]).toDF("doc_id", "text")
+  private val docs = StateTable("docs", Seq("doc_id"),
+    s => KeyedState.emptyDocs(s).schema)
+  private val grams = StateTable("grams", Seq("doc_id"),
+    s => LlmText.removalGrams(KeyedState.emptyDocs(s), n).schema,
+    LlmText.removalGrams(_, n))
+  protected val tables = Seq(docs, grams)
 
   /** foreachBatch hook: `batch` needs (doc_id, text). */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val docs = batch.select(col("doc_id"), col("text"))
-      // intra-batch replay dedup (ADVICE r9): a resumed connection can
-      // re-deliver an already-seen event in the SAME micro-batch as new
-      // ones — the per-dir committed-state anti-joins below only guard
-      // against rows that landed in EARLIER batches
-      .dropDuplicates(Seq("doc_id"))
-      .localCheckpoint(true) // micro-batch sources are not re-scannable
-    // empty-slice fast exit (guide §2.4): a DDL-only or delete-only
-    // micro-batch reaches this hook with zero insert rows — skip the
-    // guard read and the empty append outright (the probe reads the
-    // checkpointed blocks, not the source)
-    if (docs.isEmpty) return
-    // Independent per-directory replay guards: each append reads only
-    // its own committed state, so a retry after a partial failure
-    // re-runs exactly the append(s) that did not commit.
-    // tombstones win on both dirs: a replayed insert of a deleted doc
-    // appends nothing anywhere. Batch 0 (nothing committed anywhere)
-    // skips both guard joins — identity against an empty side.
-    val tombsOpt = tombstonesOpt(spark).map(_.localCheckpoint(true))
-    // guard reads PRUNED to the batch's doc_id buckets (VERDICT r10
-    // item 2 — both dirs are bucket-partitioned on doc_id)
-    def freshAgainst(dir: String, schema: StructType): DataFrame = {
-      val sides = StateLayout.readPrunedOpt(spark, dir, schema,
-        docs, Seq("doc_id")).map(_.select("doc_id")).toSeq ++
-        tombsOpt.map(_.select("doc_id"))
-      sides.reduceOption(_ union _) match {
-        case Some(seen) => docs.join(seen.distinct(), Seq("doc_id"), "left_anti")
-        case None => docs
-      }
-    }
-    StateLayout.append(freshAgainst(docsDir, docs.schema), docsDir, Seq("doc_id"))
-    val gramSchema = LlmText.removalGrams(emptyDocs(spark), n).schema
-    val freshForGrams = freshAgainst(gramsDir, gramSchema)
-    StateLayout.append(LlmText.removalGrams(freshForGrams, n), gramsDir,
-      Seq("doc_id"))
-    maybeCompact(spark)
-  }
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    ingest(batch.select(col("doc_id"), col("text")))
 
   /** Removal + reconstruction over every doc seen so far —
-    * row-identical to batch q126 on the same corpus. */
-  def removals(spark: SparkSession): DataFrame = {
-    // retraction: both relations restricted to survivors BEFORE the
-    // keep-first judgment — a deleted doc neither appears in the
-    // output nor keeps removing tokens from surviving docs
-    val tombsOpt = tombstonesOpt(spark)
-    def live(df: DataFrame): DataFrame = tombsOpt
-      .map(t => df.join(t, Seq("doc_id"), "left_anti")).getOrElse(df)
-    val docs = live(StateLayout.read(spark, docsDir, emptyDocs(spark).schema))
-    val grams = live(StateLayout.read(spark, gramsDir,
-      LlmText.removalGrams(emptyDocs(spark), n).schema))
-    LlmText.substringRemovalStats(grams, docs, n)
-  }
-
-  /** Bound the state-file count (small-file compaction between waves);
-    * also the physical-delete point — tombstoned rows are dropped from
-    * both dirs, tombstones retained. */
-  def compact(spark: SparkSession, parts: Int): Unit = {
-    val tombs = tombstones(spark).localCheckpoint(true)
-    val gramSchema = LlmText.removalGrams(emptyDocs(spark), n).schema
-    Seq(gramsDir -> gramSchema, docsDir -> emptyDocs(spark).schema)
-      .foreach { case (dir, schema) =>
-        val cur = StateLayout.read(spark, dir, schema)
-          .join(tombs, Seq("doc_id"), "left_anti").localCheckpoint(true)
-        StateLayout.overwriteCompacted(cur, dir, Seq("doc_id"), parts)
-      }
-    if (StateLayout.exists(spark, tombstonesDir))
-      StateLayout.overwriteSmall(tombs, tombstonesDir)
-    nCompactions += 1
-  }
+    * row-identical to batch q126 on the same corpus. Retraction: both
+    * relations are restricted to survivors BEFORE the keep-first
+    * judgment — a deleted doc neither appears in the output nor keeps
+    * removing tokens from surviving docs. */
+  def removals(spark: SparkSession): DataFrame =
+    LlmText.substringRemovalStats(live(read(spark, grams)), live(read(spark, docs)), n)
 }

@@ -29,11 +29,15 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * results (and oracle hashes) are unchanged.
   *
   * Bucket count: 16 balances pruning (a 1-doc batch reads ≤ 1/16 of
-  * state files… plus the layout survives 1000× growth because buckets
-  * are split by compaction parts, not file count) against small-file
-  * pressure (each append creates ≤ 16 dirs × its task files; the
-  * periodic [[IncrementalLineDedup.compact]]-style rewrite bounds the
+  * state files) against small-file pressure (each append creates ≤ 16
+  * files; the periodic [[KeyedState.compact]] rewrite bounds the
   * accumulation — standard streaming-state hygiene either way).
+  *
+  * This object is the only code that writes or deletes a state
+  * directory: bucketed appends ([[append]]), flat appends for the small
+  * unbucketed dirs ([[appendFlat]]), the two swap-protocol rewrites and
+  * [[delete]]. Each of them runs crash recovery first and drops the
+  * memoised file count after, so no caller can skip either.
   */
 object StateLayout {
 
@@ -53,6 +57,7 @@ object StateLayout {
     * (and with it the [[autoCompactDue]] cadence) proportional to
     * batches, not to batch partitioning. */
   def append(df: DataFrame, dir: String, keys: Seq[String]): Unit = {
+    recover(df.sparkSession, dir)
     // the audit hook sees the FULL per-batch upstream DAG here — every
     // incremental state's batch computation terminates in an append,
     // so this one record() covers the streaming twins' per-batch plans
@@ -60,6 +65,24 @@ object StateLayout {
         df.withColumn(BucketCol, bucketOf(keys))
           .repartition(NumBuckets, col(BucketCol)))
       .write.mode("append").partitionBy(BucketCol).parquet(dir)
+    invalidateCount(dir)
+  }
+
+  /** Plain append of `df` under `dir` with no bucket layout — for the
+    * small dirs no per-batch probe prunes (tombstones, the near-dup
+    * ledger and poison markers). */
+  def appendFlat(df: DataFrame, dir: String): Unit = {
+    recover(df.sparkSession, dir)
+    df.write.mode("append").parquet(dir)
+    invalidateCount(dir)
+  }
+
+  /** Remove `dir` and any compaction leftovers beside it, so no later
+    * recovery can restore bytes from before the delete. */
+  def delete(spark: SparkSession, dir: String): Unit = {
+    val fs = fsOf(spark, dir)
+    Seq(dir, tmpDir(dir), oldDir(dir)).foreach(d =>
+      fs.delete(new org.apache.hadoop.fs.Path(d), true))
     invalidateCount(dir)
   }
 
@@ -73,12 +96,10 @@ object StateLayout {
     * so the rewritten dir holds one file per non-empty bucket — ≤
     * [[NumBuckets]] files total, however many micro-batch appends (each
     * up to [[NumBuckets]] small files) accumulated before the rewrite.
-    * The caller's `parts` knob is superseded by this bound: per-bucket
-    * sub-splitting would only matter once a single bucket outgrows one
-    * task's write, at which point raising [[NumBuckets]] is the right
-    * lever (it also sharpens pruning). */
-  def overwriteCompacted(df: DataFrame, dir: String, keys: Seq[String],
-      parts: Int): Unit =
+    * Per-bucket sub-splitting would only matter once a single bucket
+    * outgrows one task's write, at which point raising [[NumBuckets]]
+    * is the right lever (it also sharpens pruning). */
+  def overwriteCompacted(df: DataFrame, dir: String, keys: Seq[String]): Unit =
     swapIn(df.sparkSession, dir) { tmp =>
       graft.util.StageAudit.record(s"state-compact:${dirLabel(dir)}",
           df.withColumn(BucketCol, bucketOf(keys))
@@ -173,17 +194,14 @@ object StateLayout {
     * then the whole-dir autoCompact poll), each a recursive LIST. The
     * count only feeds POLICY decisions — the compaction trigger and
     * the pruned-vs-flat read choice, both result-identical either way
-    * — so a cached value can never change what a query computes; it is
-    * still kept exact by invalidating on every mutation path (append,
-    * swap rewrite, crash recovery, and the direct tombstone/ledger
-    * appends in the state classes). */
+    * — so a cached value can never change what a query computes. It
+    * stays exact because every write or delete of a state dir goes
+    * through this object, and each of those paths (the appends, the
+    * swap rewrite, crash recovery, [[delete]]) invalidates it. */
   private val fileCountCache =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
-  /** Drop the memoised count for `dir` — every write path that adds or
-    * rewrites files under a state dir must call this (StateLayout's own
-    * writers do; the state classes call it at their direct appends). */
-  def invalidateCount(dir: String): Unit = { fileCountCache.remove(dir); () }
+  private def invalidateCount(dir: String): Unit = { fileCountCache.remove(dir); () }
 
   /** Recursive parquet-file count — one listing per (dir, mutation);
     * cheap on a filesystem, one LIST per dir on object stores (per
@@ -204,8 +222,8 @@ object StateLayout {
     }
 
   /** The auto-compaction policy poll (VERDICT r10 item 5): true when
-    * any of `dirs` has accumulated more files than `threshold`. The
-    * states call this at the end of each batch hook and run their own
+    * any of `dirs` has accumulated more files than `threshold`.
+    * [[KeyedState]] polls it at the end of each batch hook and runs its
     * `compact` when due — count/size-triggered, restart-safe (the
     * signal is on disk, not in the instance), and content-preserving
     * (compaction only rewrites, so oracle hashes cannot move). */

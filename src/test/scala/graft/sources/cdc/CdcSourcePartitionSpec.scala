@@ -158,4 +158,36 @@ class CdcSourcePartitionSpec extends AnyFunSuite with SparkTestSession {
       assert(parts.flatten == script.drop(11).map(expected(_, 1)))
     } finally restarted.stop()
   }
+
+  test("a restart numbers the resumed feed from the adopted offset, however much is buffered first") {
+    val script = ddl(1) +: (1 to 300).map(dml(_))
+    val first = new MockMaxScaleServer(events = script, closeAfterEvents = false)
+    val stream = new MaxScaleCdcMicroBatchStream(opts + ("port" -> first.port.toString))
+    // [0, 11) — the DDL and ten DMLs — is committed
+    val committed = try {
+      waitFor(stream.reportLatestOffset().asInstanceOf[CdcOffset].index == script.size)
+      val init = stream.initialOffset().asInstanceOf[CdcOffset]
+      val c = stream.latestOffset(init, ReadLimit.maxRows(11)).asInstanceOf[CdcOffset]
+      read(stream, init, c)
+      stream.commit(c)
+      c
+    } finally stream.stop()
+    assert(committed == CdcOffset(11, "0-1-10", Int.box(1)))
+
+    // the resumed feed is the re-sent DDL plus the DMLs after the GTID;
+    // the receiver buffers all of it before the first batch is planned
+    val second = new MockMaxScaleServer(events = script, closeAfterEvents = false,
+      honorGtid = true)
+    val restarted = new MaxScaleCdcMicroBatchStream(opts + ("port" -> second.port.toString))
+    try {
+      val start = restarted.deserializeOffset(committed.json()).asInstanceOf[CdcOffset]
+      restarted.reportLatestOffset() // starts the receiver
+      val resumed = 1 + (script.size - 11)
+      waitFor(restarted.bufferedEvents == resumed)
+      val end = restarted.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[CdcOffset]
+      assert(end.index == start.index + resumed)
+      assert(read(restarted, start, end).flatten ==
+        (script.head +: script.drop(11)).map(expected(_, 1)))
+    } finally restarted.stop()
+  }
 }

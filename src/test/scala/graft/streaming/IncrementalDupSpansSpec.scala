@@ -71,7 +71,7 @@ class IncrementalDupSpansSpec extends AnyFunSuite with SparkTestSession {
     assert(after == before, s"replay mutated state: $before -> $after")
 
     // compaction preserves content while bounding file counts
-    inc2.compact(spark, parts = 2)
+    inc2.compact(spark)
     assert(collectSpans(inc2) == batch)
     // bucketed layout: compaction bounds the dir at one file per
     // non-empty bucket (StateLayout.overwriteCompacted)
@@ -129,7 +129,7 @@ class IncrementalDupSpansSpec extends AnyFunSuite with SparkTestSession {
     inc.retractBatch(
       spark.createDataFrame(Seq(Tuple1(10L))).toDF("doc_id"), 99L)
     assert(spark.read.parquet(s"$statePath/tombstones").count() == 1)
-    inc.compact(spark, parts = 1)
+    inc.compact(spark)
     assert(spark.read.parquet(s"$statePath/grams")
       .where(org.apache.spark.sql.functions.col("doc_id") === 10L).count() == 0)
     assert(collectSpans(inc) == Map.empty)

@@ -80,7 +80,7 @@ class IncrementalIvfSpec extends AnyFunSuite with SparkTestSession {
       "growth at exactly 25% of base must NOT trip the strict boundary")
 
     // compaction preserves content while bounding file counts
-    inc.compact(spark, parts = 2)
+    inc.compact(spark)
     val compacted = inc.members(spark).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(compacted == streamed)
@@ -142,7 +142,7 @@ class IncrementalIvfSpec extends AnyFunSuite with SparkTestSession {
     assert(memb(inc) == got)
 
     // compaction removes the deleted codes physically
-    inc.compact(spark, parts = 1)
+    inc.compact(spark)
     assert(spark.read.parquet(s"$statePath/members")
       .where(col("vec_id") % 3 === 0).count() == 0, "codes not pruned")
     assert(memb(inc) == got)

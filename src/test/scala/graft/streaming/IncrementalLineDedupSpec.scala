@@ -62,7 +62,7 @@ class IncrementalLineDedupSpec extends AnyFunSuite with SparkTestSession {
     assert(after == before, s"replay mutated state: $before -> $after")
 
     // compaction preserves content while bounding file counts
-    inc2.compact(spark, parts = 2)
+    inc2.compact(spark)
     assert(collectOut(inc2.lines(spark)) == batch)
     // bucketed layout: compaction bounds the dir at one file per
     // non-empty bucket (StateLayout.overwriteCompacted)
@@ -111,7 +111,7 @@ class IncrementalLineDedupSpec extends AnyFunSuite with SparkTestSession {
 
     // compaction makes the delete physical (no doc-10 chunk rows
     // survive) while keeping the tombstone and the emitted relation
-    inc.compact(spark, parts = 1)
+    inc.compact(spark)
     assert(spark.read.parquet(s"$statePath/chunks")
       .where(col("doc_id") === 10L).count() == 0)
     assert(spark.read.parquet(s"$statePath/tombstones").count() == 1)

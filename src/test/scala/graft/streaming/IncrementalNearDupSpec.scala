@@ -73,7 +73,7 @@ class IncrementalNearDupSpec extends AnyFunSuite with SparkTestSession {
     assert(after == before, s"replay mutated state: $before -> $after")
 
     // compaction preserves content while bounding file counts
-    inc.compact(spark, parts = 2)
+    inc.compact(spark)
     val compacted = inc.groups(spark).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(compacted == batchGroups)
@@ -158,7 +158,7 @@ class IncrementalNearDupSpec extends AnyFunSuite with SparkTestSession {
 
     // compaction makes deletes physical (no tombstoned rows in any
     // table) while preserving the emitted relation
-    inc.compact(spark, parts = 2)
+    inc.compact(spark)
     for (t <- Seq("sets", "bands"))
       assert(spark.read.parquet(s"$statePath/$t")
         .where(col("doc_id") % 7 === 0).count() == 0, s"$t not pruned")
@@ -247,7 +247,7 @@ class IncrementalNearDupSpec extends AnyFunSuite with SparkTestSession {
     val wantSurv = uncappedGroups(col("doc_id") % 7 =!= 0)
     assert(recGroups() == wantSurv,
       "post-delete recovery diverges from the uncapped survivors run")
-    inc.compact(spark, parts = 2)
+    inc.compact(spark)
     assert(spark.read.parquet(s"$statePath/ledger")
       .where(col("doc_id") % 7 === 0).count() == 0, "ledger not pruned")
     assert(recGroups() == wantSurv)

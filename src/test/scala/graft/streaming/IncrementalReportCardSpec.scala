@@ -58,7 +58,7 @@ class IncrementalReportCardSpec extends AnyFunSuite with SparkTestSession {
     assert(spark.read.parquet(s"$statePath/docs").count() == before)
 
     // compaction preserves content
-    inc2.compact(spark, parts = 2)
+    inc2.compact(spark)
     assert(collectCard(inc2.reportCard(spark)) == batch)
   }
 
@@ -90,7 +90,7 @@ class IncrementalReportCardSpec extends AnyFunSuite with SparkTestSession {
     inc.processBatch(spark.createDataFrame(
       Seq((10L, "alpha beta gamma", "web", "en"))).toDF("doc_id", "text", "source", "lang"), 3L)
     assert(card == Map(("books", "en") -> 0L))
-    inc.compact(spark, parts = 1)
+    inc.compact(spark)
     assert(spark.read.parquet(s"$statePath/docs")
       .where(org.apache.spark.sql.functions.col("doc_id") === 10L).count() == 0)
     assert(card == Map(("books", "en") -> 0L))

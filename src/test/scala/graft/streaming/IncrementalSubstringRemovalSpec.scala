@@ -63,7 +63,7 @@ class IncrementalSubstringRemovalSpec extends AnyFunSuite with SparkTestSession 
     assert(after == before, s"replay mutated state: $before -> $after")
 
     // compaction preserves content while bounding file counts
-    inc2.compact(spark, parts = 2)
+    inc2.compact(spark)
     assert(collectOut(inc2.removals(spark)) == batch)
     // bucketed layout: compaction bounds the dir at one file per
     // non-empty bucket (StateLayout.overwriteCompacted)
@@ -157,7 +157,7 @@ class IncrementalSubstringRemovalSpec extends AnyFunSuite with SparkTestSession 
     inc2.processBatch(spark.createDataFrame(Seq(
       (10L, s"y1 $span"))).toDF("doc_id", "text"), 2L)
     assert(spark.read.parquet(s"$p2/docs").count() == docsBefore)
-    inc2.compact(spark, parts = 1)
+    inc2.compact(spark)
     assert(spark.read.parquet(s"$p2/grams")
       .where(org.apache.spark.sql.functions.col("doc_id") === 10L).count() == 0)
     assert(collectOut(inc2.removals(spark)) === got2)

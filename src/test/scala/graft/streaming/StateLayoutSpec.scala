@@ -107,7 +107,7 @@ class StateLayoutSpec extends AnyFunSuite with SparkTestSession {
       "fixture did not accumulate enough small files")
     StateLayout.overwriteCompacted(
       StateLayout.read(spark, dir, state(0).schema).localCheckpoint(true),
-      dir, Seq("doc_id"), parts = 4)
+      dir, Seq("doc_id"))
     assert(StateFiles.parquetCount(dir) <= StateLayout.NumBuckets)
     val after = StateLayout.read(spark, dir, state(0).schema)
       .collect().map(_.toSeq).toSet

@@ -119,7 +119,7 @@ class WidenMigrationSpec extends AnyFunSuite with SparkTestSession {
     val excised = spark.read.parquet(pairsDir).drop(StateLayout.BucketCol)
       .where(!(col("doc_a") === 20L && col("doc_b") === 21L))
       .localCheckpoint(true)
-    StateLayout.overwriteCompacted(excised, pairsDir, Seq("doc_a", "doc_b"), parts = 2)
+    StateLayout.overwriteCompacted(excised, pairsDir, Seq("doc_a", "doc_b"))
 
     IncrementalNearDup.widenMigrate(spark, statePath, docs, 8, 4)
     val after = spark.read.parquet(pairsDir).drop(StateLayout.BucketCol)
