@@ -32,6 +32,9 @@ final class MockMaxScaleServer(
   @volatile var eventsSent: Int = 0 // JSON events actually written (post-skip)
   val handshakeDone = new CountDownLatch(1)
 
+  @volatile private var closed = false
+  @volatile private var accepted: Socket = _
+
   // Phase grammars from the reference tests (`gomaxscale_test.go:23-27`).
   private val RegisterRe = "^REGISTER UUID=.+?, TYPE=(JSON|AVRO)$".r
   private val RequestRe = "^REQUEST-DATA .+?\\..+?( .+)?$".r
@@ -39,13 +42,27 @@ final class MockMaxScaleServer(
   private val thread = new Thread(() => {
     try {
       val conn = server.accept()
-      try handle(conn)
+      accepted = conn
+      // a close() that ran before `accepted` was set could not close it
+      try { if (!closed) handle(conn) }
       finally conn.close()
     } catch { case _: Throwable => () }
     finally server.close()
   }, s"mock-maxscale-$port")
   thread.setDaemon(true)
   thread.start()
+
+  /** Stops serving: closes the listening and the accepted socket, ends
+    * the keep-alive sleep and waits for the server thread to exit. The
+    * recorded fields (`eventsSent`, `requestDataReceived`, ...) stay
+    * readable. */
+  def close(): Unit = {
+    closed = true
+    server.close()
+    Option(accepted).foreach(_.close())
+    thread.interrupt()
+    thread.join(10000)
+  }
 
   private def read(conn: Socket): String = {
     val buf = new Array[Byte](1024)

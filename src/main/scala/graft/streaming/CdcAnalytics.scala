@@ -1,10 +1,13 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicLong
+
 import graft.Tables
-import graft.sources.cdc.{CdcProjection, SchemaRegistry}
+import graft.sources.cdc.{CdcEvent, CdcProjection, DdlEvent, SchemaRegistry}
 import graft.sources.cdc.testkit.MockMaxScaleServer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** The connector and the engine, composed: a scripted DML workload
@@ -36,6 +39,15 @@ import org.apache.spark.sql.types._
   * external database side of the wire), not part of the analytics
   * plan; it is bounded by the fixture (15k rows at sf0.1) exactly as
   * the ingest micro-bench's script is (`Bench.ingestEventsPerSec`).
+  *
+  * THE DRILL is written once, as the reference's one consumer
+  * lifecycle is: [[drainWire]] (a mock server per feed → `maxscale-cdc`
+  * → registry → the pipeline's foreachBatch hook, drained to an
+  * expected row count, servers closed) runs every foreachBatch
+  * `run*Pipeline`, and [[drainContinuous]] (pre-registered doc DDL →
+  * one continuous plan on RocksDB → parquet sink) runs qc8–qc10. Each
+  * pipeline keeps only its state construction and its per-batch hook;
+  * every event script is built by one DDL and one DML envelope writer.
   */
 object CdcAnalytics {
 
@@ -57,12 +69,57 @@ object CdcAnalytics {
     StructField("nationkey", IntegerType),
     StructField("bal_cents", LongType)))
 
-  def ddlJson: String =
-    s"""{"namespace":"MaxScaleChangeDataSchema.avro","type":"record","name":"ChangeRecord","table":"$TableName","database":"$Database","version":1,"gtid":"0-1-1","fields":[{"name":"custkey","type":"long"},{"name":"nationkey","type":"int"},{"name":"bal_cents","type":"long"}]}"""
+  // ---- the MaxScale JSON envelope, written once ----
+
+  /** A MaxScale schema (DDL) event for `table`; `fields` are JSON field
+    * objects ([[field]]). */
+  private def ddl(table: String, version: Int, gtid: String, fields: String*): String =
+    s"""{"namespace":"MaxScaleChangeDataSchema.avro","type":"record","name":"ChangeRecord","table":"$table","database":"$Database","version":$version,"gtid":"$gtid","fields":[${fields.mkString(",")}]}"""
+
+  private def field(name: String, tpe: String): String =
+    s"""{"name":"$name","type":"$tpe"}"""
+
+  /** A MaxScale DML event: the envelope, then the row image in order —
+    * strings JSON-escaped, numbers as their `toString`. */
+  private def dml(seq: Long, eventNumber: Long, op: String, row: (String, Any)*): String =
+    row.map {
+      case (k, v: String) => s""""$k":"${jsonEscape(v)}""""
+      case (k, v) => s""""$k":$v"""
+    }.mkString(s"""{"domain":0,"server_id":1,"sequence":$seq,"event_number":$eventNumber,"timestamp":1754956800,"event_type":"$op",""", ",", "}")
+
+  private def jsonEscape(s: String): String =
+    s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+
+  /** `rows` in md5 order of `prefix` + each row's id: deterministic, but
+    * neither id- nor file-ordered. */
+  private def shuffled[T](prefix: String, rows: Seq[T])(id: T => Long): Seq[T] =
+    rows.map(r => shuffleKey(s"$prefix${id(r)}") -> r).sortBy(_._1).map(_._2)
+
+  /** md5 hex of a workload-shuffle key. Callers must PRECOMPUTE this
+    * per row before sorting — Scala's `sortBy` re-evaluates its key
+    * function on every comparison, so an inline digest turns an
+    * n-row sort into n·log n digests (measured 19 s for qc4's 100k
+    * events before the fix; 0.4 s precomputed). */
+  private def shuffleKey(s: String): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val digest = md.digest(s.getBytes("UTF-8"))
+    val hex = "0123456789abcdef"
+    val out = new StringBuilder(32)
+    digest.foreach { b => out.append(hex((b >> 4) & 0xf)).append(hex(b & 0xf)) }
+    out.toString
+  }
+
+  def ddlJson: String = ddl(TableName, 1, "0-1-1", field("custkey", "long"),
+    field("nationkey", "int"), field("bal_cents", "long"))
 
   def dmlJson(seq: Long, eventNumber: Long, op: String,
       ck: Long, nk: Int, cents: Long): String =
-    s"""{"domain":0,"server_id":1,"sequence":$seq,"event_number":$eventNumber,"timestamp":1754956800,"event_type":"$op","custkey":$ck,"nationkey":$nk,"bal_cents":$cents}"""
+    dml(seq, eventNumber, op, "custkey" -> ck, "nationkey" -> nk, "bal_cents" -> cents)
 
   /** The deterministic scripted binlog for a fixture dir. Starts with
     * the DDL — MaxScale sends the schema at the head of every
@@ -97,6 +154,147 @@ object CdcAnalytics {
       .orderBy(col("c_custkey"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
 
+  // ---- the wire drill, written once ----
+
+  /** How long a drill drains before it reports a shortfall. */
+  private val DrainDeadlineMs = 120000L
+
+  /** Source options of the evolving feeds: no micro-batch spans a DDL. */
+  private val SplitAtDdl = Map("splitBatchesAtDdl" -> "true")
+
+  /** The one `maxscale-cdc` source builder: `table`'s feed from
+    * `server`, with `options` on top of the connection options. */
+  private def wireSource(s: SparkSession, server: MockMaxScaleServer, table: String,
+      options: Map[String, String]): DataFrame =
+    s.readStream.format("maxscale-cdc")
+      .option("host", "127.0.0.1").option("port", server.port)
+      .option("user", "u").option("password", "p")
+      .option("database", Database).option("table", table)
+      .options(options)
+      .load()
+
+  /** The foreachBatch drill: one mock server per `(table, events)` feed,
+    * the feeds unioned into one query checkpointed at `ckptPath`. Each
+    * batch absorbs its DDLs into one registry, runs `hook` and counts
+    * its rows. Drains until `expectRows` rows (DDL + DML) arrived IN
+    * THIS RUN: exactly, or with `exact = false` at least that many and
+    * then until two consecutive polls see no growth (a GTID resume,
+    * whose redelivery the kill decided). Stops the query, closes the
+    * servers and returns the first, for the caller's wire assertions.
+    * Reusing `ckptPath` resumes from the committed offset. */
+  private def drainWire(s: SparkSession, feeds: Seq[(String, Seq[String])],
+      ckptPath: String, expectRows: Long, what: String,
+      sourceOptions: Map[String, String] = Map.empty,
+      trigger: Trigger = Trigger.ProcessingTime(0L),
+      honorGtid: Boolean = false, exact: Boolean = true)(
+      hook: (DataFrame, SchemaRegistry, Long) => Unit): MockMaxScaleServer = {
+    val servers = feeds.map { case (_, events) =>
+      new MockMaxScaleServer(events = events, closeAfterEvents = false,
+        honorGtid = honorGtid)
+    }
+    try {
+      val reg = new SchemaRegistry
+      val consumed = new AtomicLong
+      val stream = feeds.zip(servers).map { case ((table, _), server) =>
+        wireSource(s, server, table, sourceOptions)
+      }.reduce(_ unionByName _)
+      val q = stream.writeStream.trigger(trigger)
+        .foreachBatch { (batch: DataFrame, bid: Long) =>
+          CdcProjection.registryFrom(batch, reg)
+          hook(batch, reg, bid)
+          consumed.addAndGet(batch.count())
+          ()
+        }.option("checkpointLocation", ckptPath).start()
+      try {
+        val deadline = System.currentTimeMillis() + DrainDeadlineMs
+        while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
+          q.processAllAvailable()
+          if (consumed.get() < expectRows) Thread.sleep(50)
+        }
+        if (exact)
+          require(consumed.get() == expectRows,
+            s"$what pipeline drained ${consumed.get()} of $expectRows rows")
+        else {
+          // settle: the server has already written its whole (post-skip)
+          // feed; keep draining until two consecutive polls see no growth
+          var last = -1L
+          while (consumed.get() != last && System.currentTimeMillis() < deadline) {
+            last = consumed.get()
+            q.processAllAvailable()
+            Thread.sleep(200)
+            q.processAllAvailable()
+          }
+          require(consumed.get() >= expectRows,
+            s"$what resume drained ${consumed.get()} < minimum $expectRows rows")
+        }
+      } finally q.stop()
+    } finally servers.foreach(_.close())
+    servers.head
+  }
+
+  /** The continuous-plan drill (qc8–qc10): a mock server → the doc feed
+    * projected under the doc DDL registered up front (no per-batch
+    * registry collect) → `plan` → parquet file sink at `evDir`, on
+    * RocksDB state, drained by [[drainByInputRows]]. */
+  private def drainContinuous(s: SparkSession, events: Seq[String], evDir: String,
+      ckptPath: String, expectRows: Long, what: String,
+      options: Map[String, String])(plan: DataFrame => DataFrame): Unit = {
+    val reg = new SchemaRegistry
+    CdcEvent.decode(docDdlJson) match {
+      case Right(d: DdlEvent) => reg.register(d)
+      case other => throw new IllegalStateException(s"bad DDL: $other")
+    }
+    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
+    val prev = StateStoreLineDedup.setRocksDb(s)
+    try {
+      val q = plan(CdcProjection.projectLatest(
+          wireSource(s, server, DocTableName, options), reg, Database, DocTableName))
+        .writeStream.format("parquet").option("path", evDir)
+        .outputMode("append").option("checkpointLocation", ckptPath).start()
+      try drainByInputRows(q, expectRows, what) finally q.stop()
+    } finally {
+      StateStoreLineDedup.restoreConfs(s, prev)
+      server.close()
+    }
+  }
+
+  /** The batch's rows of `table` under the latest registered schema,
+    * once one is registered. */
+  private def latest(batch: DataFrame, reg: SchemaRegistry,
+      table: String): Option[DataFrame] =
+    if (reg.latest(Database, table).isEmpty) None
+    else Some(CdcProjection.projectLatest(batch, reg, Database, table))
+
+  /** The INSERT rows of a projection, narrowed to `cols`. */
+  private def inserts(proj: DataFrame, cols: String*): DataFrame =
+    proj.where(col("op") === "insert").select(cols.map(col): _*)
+
+  /** Routes a projection into a keyed state: inserts (`key` + `cols`)
+    * into `processBatch`, then deletes (`key`) into `retractBatch`.
+    * Binlog order puts a key's insert before its delete, so this order
+    * keeps the semantics when both land in one micro-batch. */
+  private def applyOps(st: KeyedState, proj: DataFrame, key: String,
+      cols: String*)(bid: Long): Unit = {
+    st.processBatch(inserts(proj, key +: cols: _*), bid)
+    st.retractBatch(proj.where(col("op") === "delete").select(col(key)), bid)
+  }
+
+  /** The distinct schema versions of the batch's DMLs, required to be
+    * at most one: `splitBatchesAtDdl` must cut every batch at its DDL. */
+  private def versions(batch: DataFrame, bid: Long, what: String): Seq[Int] = {
+    val vers = batch.where(col("kind") === "dml")
+      .select(col("schema_version")).distinct()
+      .collect().map(_.getInt(0)).toSeq.sorted
+    require(vers.size <= 1,
+      s"$what batch $bid spans schema versions $vers — DDL split failed")
+    vers
+  }
+
+  /** The comma-joined `Float.toString` components of `emb` back to
+    * array<float>. */
+  private def embeddingOf: Column =
+    expr("transform(split(emb, ','), x -> CAST(x AS FLOAT))").as("embedding")
+
   /** Run the full wire pipeline over `events`, draining until
     * `expectRows` rows (DDL + DML) have been consumed IN THIS RUN,
     * materializing into `snapPath` with offsets checkpointed at
@@ -107,38 +305,12 @@ object CdcAnalytics {
     * and proves the resumed result hash-matches the one-shot run. */
   def runPipeline(s: SparkSession, events: Seq[String], snapPath: String,
       ckptPath: String, expectRows: Long,
-      timeoutMs: Long = 60000,
       sourceOptions: Map[String, String] = Map.empty): CdcSnapshotTable = {
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
     val snap = new CdcSnapshotTable(snapPath, Seq("custkey"), payloadSchema)
-    val reg = new SchemaRegistry
-    val consumed = new java.util.concurrent.atomic.AtomicLong
-    val stream = sourceOptions.foldLeft(
-      s.readStream.format("maxscale-cdc")
-        .option("host", "127.0.0.1").option("port", server.port)
-        .option("user", "u").option("password", "p")
-        .option("database", Database).option("table", TableName)) {
-        case (b, (k, v)) => b.option(k, v)
-      }
-      .load()
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      CdcProjection.registryFrom(batch, reg)
-      if (reg.latest(Database, TableName).isDefined) {
-        val proj = CdcProjection.projectLatest(batch, reg, Database, TableName)
-        snap.applyBatch(proj, bid)
-      }
-      consumed.addAndGet(batch.count())
-      ()
-    }.option("checkpointLocation", ckptPath).start()
-    try {
-      val deadline = System.currentTimeMillis() + timeoutMs
-      while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        if (consumed.get() < expectRows) Thread.sleep(50)
-      }
-      require(consumed.get() == expectRows,
-        s"CDC pipeline drained ${consumed.get()} of $expectRows rows")
-    } finally q.stop()
+    drainWire(s, Seq(TableName -> events), ckptPath, expectRows, "qc1",
+        sourceOptions) { (batch, reg, bid) =>
+      latest(batch, reg, TableName).foreach(snap.applyBatch(_, bid))
+    }
     snap.prune(s)
     snap
   }
@@ -148,57 +320,30 @@ object CdcAnalytics {
   val DocTableName = "documents_feed"
 
   def docDdlJson: String =
-    s"""{"namespace":"MaxScaleChangeDataSchema.avro","type":"record","name":"ChangeRecord","table":"$DocTableName","database":"$Database","version":1,"gtid":"0-1-1","fields":[{"name":"doc_id","type":"long"},{"name":"text","type":"string"}]}"""
-
-  /** md5 hex of a workload-shuffle key. Callers must PRECOMPUTE this
-    * per row before sorting — Scala's `sortBy` re-evaluates its key
-    * function on every comparison, so an inline digest turns an
-    * n-row sort into n·log n digests (measured 19 s for qc4's 100k
-    * events before the fix; 0.4 s precomputed). */
-  private def shuffleKey(s: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val digest = md.digest(s.getBytes("UTF-8"))
-    val hex = "0123456789abcdef"
-    val out = new StringBuilder(32)
-    digest.foreach { b => out.append(hex((b >> 4) & 0xf)).append(hex(b & 0xf)) }
-    out.toString
-  }
-
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  def docDmlJson(seq: Long, docId: Long, text: String): String =
-    docOpDmlJson(seq, "insert", docId, text)
+    ddl(DocTableName, 1, "0-1-1", field("doc_id", "long"), field("text", "string"))
 
   /** A documents-table DML event with an explicit operation — DELETEs
     * carry the full row image (`text` included), the MaxScale wire
     * shape for a delete (reference `types.go:177`: the delete event is
     * the deleted row's data with event_type "delete"). */
   def docOpDmlJson(seq: Long, op: String, docId: Long, text: String): String =
-    s"""{"domain":0,"server_id":1,"sequence":$seq,"event_number":1,"timestamp":1754956800,"event_type":"$op","doc_id":$docId,"text":"${jsonEscape(text)}"}"""
+    dml(seq, 1, op, "doc_id" -> docId, "text" -> text)
 
   /** Scripted binlog for qc2: every fixture document INSERTed in
     * md5-shuffled order (deterministic, but neither id- nor
     * file-ordered — so the incremental dedup's (doc_id, ck) keep-first
     * ranking, not arrival order, must decide line ownership). */
   def docWorkloadEvents(s: SparkSession, dir: String): Vector[String] = {
-    val rows = Tables(s, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-      .map(r => shuffleKey(s"qc2:${r._1}") -> r)
-      .sortBy(_._1).map(_._2)
-    val out = Vector.newBuilder[String]
-    out += docDdlJson
-    rows.zipWithIndex.foreach { case ((id, text), i) =>
-      out += docDmlJson(i + 1L, id, text)
-    }
-    out.result()
+    val rows = shuffled("qc2:", docRows(s, dir))(_._1)
+    docDdlJson +: rows.zipWithIndex.map { case ((id, text), i) =>
+      docOpDmlJson(i + 1L, "insert", id, text)
+    }.toVector
   }
+
+  private def docRows(s: SparkSession, dir: String): Seq[(Long, String)] =
+    Tables(s, dir, "documents")
+      .select(col("doc_id"), col("text"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
 
   /** qc2's query body: the full wire path (mock server → maxscale-cdc
     * source → registry → projection) feeding [[IncrementalLineDedup]]'s
@@ -224,38 +369,12 @@ object CdcAnalytics {
   def runDocPipeline(s: SparkSession, events: Seq[String], statePath: String,
       ckptPath: String, expectRows: Long,
       sourceOptions: Map[String, String] = Map.empty): IncrementalLineDedup = {
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
     val inc = new IncrementalLineDedup(statePath)
-    val reg = new SchemaRegistry
-    val consumed = new java.util.concurrent.atomic.AtomicLong
-    val stream = sourceOptions.foldLeft(
-      s.readStream.format("maxscale-cdc")
-        .option("host", "127.0.0.1").option("port", server.port)
-        .option("user", "u").option("password", "p")
-        .option("database", Database).option("table", DocTableName)) {
-        case (b, (k, v)) => b.option(k, v)
-      }
-      .load()
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      CdcProjection.registryFrom(batch, reg)
-      if (reg.latest(Database, DocTableName).isDefined) {
-        val proj = CdcProjection.projectLatest(batch, reg, Database, DocTableName)
-          .where(col("op") === "insert")
-          .select(col("doc_id"), col("text"))
-        inc.processBatch(proj, bid)
-      }
-      consumed.addAndGet(batch.count())
-      ()
-    }.option("checkpointLocation", ckptPath).start()
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        if (consumed.get() < expectRows) Thread.sleep(50)
-      }
-      require(consumed.get() == expectRows,
-        s"qc2 pipeline drained ${consumed.get()} of $expectRows rows")
-    } finally q.stop()
+    drainWire(s, Seq(DocTableName -> events), ckptPath, expectRows, "qc2",
+        sourceOptions) { (batch, reg, bid) =>
+      latest(batch, reg, DocTableName).foreach(p =>
+        inc.processBatch(inserts(p, "doc_id", "text"), bid))
+    }
     inc
   }
 
@@ -278,23 +397,20 @@ object CdcAnalytics {
     * re-owns their lines to the earliest surviving claimant, so the
     * hash gate proves real retraction, not just row filtering. */
   def docRetractWorkloadEvents(s: SparkSession, dir: String): Vector[String] = {
-    val rows = Tables(s, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val inserts = rows
-      .map(r => shuffleKey(s"qc6i:${r._1}") -> r).sortBy(_._1).map(_._2)
-    val deletes = rows.filter(_._1 % RetractMod == 0)
-      .map(r => shuffleKey(s"qc6d:${r._1}") -> r).sortBy(_._1).map(_._2)
-    val out = Vector.newBuilder[String]
-    out += docDdlJson
-    var seq = 0L
-    inserts.foreach { case (id, text) =>
-      seq += 1; out += docOpDmlJson(seq, "insert", id, text)
-    }
-    deletes.foreach { case (id, text) =>
-      seq += 1; out += docOpDmlJson(seq, "delete", id, text)
-    }
-    out.result()
+    val rows = docRows(s, dir)
+    docOpWave("qc6", rows, rows.filter(_._1 % RetractMod == 0), 0L)
+  }
+
+  /** One connection's doc binlog: the DDL, `ins` INSERTed and then `del`
+    * DELETEd, each in its own md5 order (salts `<tag>i`, `<tag>d`), with
+    * sequences from `seq0 + 1`. */
+  private def docOpWave(tag: String, ins: Seq[(Long, String)],
+      del: Seq[(Long, String)], seq0: Long): Vector[String] = {
+    val ops = shuffled(s"${tag}i:", ins)(_._1).map("insert" -> _) ++
+      shuffled(s"${tag}d:", del)(_._1).map("delete" -> _)
+    docDdlJson +: ops.zipWithIndex.map { case ((op, (id, text)), i) =>
+      docOpDmlJson(seq0 + i + 1, op, id, text)
+    }.toVector
   }
 
   /** The qc6 wire half (injectable paths for the kill/resume drill):
@@ -307,45 +423,16 @@ object CdcAnalytics {
   def runDocRetractPipeline(s: SparkSession, events: Seq[String], statePath: String,
       ckptPath: String, expectRows: Long,
       sourceOptions: Map[String, String] = Map.empty): IncrementalLineDedup = {
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
     val inc = new IncrementalLineDedup(statePath,
       autoCompactFiles = DrillCompactFiles)
-    val reg = new SchemaRegistry
-    val consumed = new java.util.concurrent.atomic.AtomicLong
-    val stream = sourceOptions.foldLeft(
-      s.readStream.format("maxscale-cdc")
-        .option("host", "127.0.0.1").option("port", server.port)
-        .option("user", "u").option("password", "p")
-        .option("database", Database).option("table", DocTableName)) {
-        case (b, (k, v)) => b.option(k, v)
-      }
-      .load()
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      CdcProjection.registryFrom(batch, reg)
-      if (reg.latest(Database, DocTableName).isDefined) {
-        val proj = CdcProjection.projectLatest(batch, reg, Database, DocTableName)
-          .select(col("op"), col("doc_id"), col("text"))
+    drainWire(s, Seq(DocTableName -> events), ckptPath, expectRows, "qc6",
+        sourceOptions) { (batch, reg, bid) =>
+      latest(batch, reg, DocTableName).foreach { p =>
+        val proj = p.select(col("op"), col("doc_id"), col("text"))
           .localCheckpoint(true) // split below reads it twice
-        // binlog order guarantees a doc's insert precedes its delete,
-        // so processing the batch's inserts before its deletes
-        // preserves semantics even when both land in one micro-batch
-        inc.processBatch(proj.where(col("op") === "insert")
-          .select(col("doc_id"), col("text")), bid)
-        inc.retractBatch(proj.where(col("op") === "delete")
-          .select(col("doc_id")), bid)
+        applyOps(inc, proj, "doc_id", "text")(bid)
       }
-      consumed.addAndGet(batch.count())
-      ()
-    }.option("checkpointLocation", ckptPath).start()
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        if (consumed.get() < expectRows) Thread.sleep(50)
-      }
-      require(consumed.get() == expectRows,
-        s"qc6 pipeline drained ${consumed.get()} of $expectRows rows")
-    } finally q.stop()
+    }
     inc
   }
 
@@ -388,58 +475,25 @@ object CdcAnalytics {
       nBands: Int = 8, bandR: Int = 2,
       replica: Option[CdcSnapshotTable] = None,
       lineInc: Option[IncrementalLineDedup] = None): IncrementalNearDup = {
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
     val inc = new IncrementalNearDup(statePath,
       autoCompactFiles = DrillCompactFiles, nBands = nBands, bandR = bandR)
-    val reg = new SchemaRegistry
-    val consumed = new java.util.concurrent.atomic.AtomicLong
-    val stream = (Map("bufferSize" -> "65536") ++ sourceOptions).foldLeft(
-      s.readStream.format("maxscale-cdc")
-        .option("host", "127.0.0.1").option("port", server.port)
-        .option("user", "u").option("password", "p")
-        .option("database", Database).option("table", DocTableName)) {
-        case (b, (k, v)) => b.option(k, v)
-      }
-      .load()
-    val q = stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("1500 milliseconds"))
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-      CdcProjection.registryFrom(batch, reg)
-      if (reg.latest(Database, DocTableName).isDefined) {
+    drainWire(s, Seq(DocTableName -> events), ckptPath, expectRows, "qc7",
+        Map("bufferSize" -> "65536") ++ sourceOptions,
+        Trigger.ProcessingTime("1500 milliseconds")) { (batch, reg, bid) =>
+      latest(batch, reg, DocTableName).foreach { p =>
         // full envelope retained: the optional replica merge needs
         // (op, sequence, event_number) alongside the payload
-        val projFull = CdcProjection.projectLatest(batch, reg, Database, DocTableName)
-          .localCheckpoint(true) // read up to three times below
+        val projFull = p.localCheckpoint(true) // read up to three times below
         val proj = projFull.select(col("op"), col("doc_id"), col("text"))
-        // binlog order guarantees a doc's insert precedes its delete
-        inc.processBatch(proj.where(col("op") === "insert")
-          .select(col("doc_id"), col("text")), bid)
-        inc.retractBatch(proj.where(col("op") === "delete")
-          .select(col("doc_id")), bid)
+        applyOps(inc, proj, "doc_id", "text")(bid)
         // qc13: the SAME wire maintains the doc replica the widening
         // migration's corpus pass will read in the maintenance window
         replica.foreach(_.applyBatch(projFull, bid))
         // qc21: the SAME wire also maintains the line-chunk state the
         // curation view's dup-pressure stage reads at emission
-        lineInc.foreach { li =>
-          li.processBatch(proj.where(col("op") === "insert")
-            .select(col("doc_id"), col("text")), bid)
-          li.retractBatch(proj.where(col("op") === "delete")
-            .select(col("doc_id")), bid)
-        }
+        lineInc.foreach(applyOps(_, proj, "doc_id", "text")(bid))
       }
-      consumed.addAndGet(batch.count())
-      ()
-    }.option("checkpointLocation", ckptPath).start()
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        if (consumed.get() < expectRows) Thread.sleep(50)
-      }
-      require(consumed.get() == expectRows,
-        s"qc7 pipeline drained ${consumed.get()} of $expectRows rows")
-    } finally q.stop()
+    }
     inc
   }
 
@@ -514,29 +568,10 @@ object CdcAnalytics {
     * separate connection, so each carries the DDL prefix. */
   def docMigrationWorkloadEvents(s: SparkSession,
       dir: String): (Vector[String], Vector[String]) = {
-    val rows = Tables(s, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    def shuffled(tag: String, rs: Array[(Long, String)]) =
-      rs.map(r => shuffleKey(s"$tag:${r._1}") -> r).sortBy(_._1).map(_._2)
-    def wave(tag: String, inserts: Array[(Long, String)],
-        deletes: Array[(Long, String)], seq0: Long): Vector[String] = {
-      val out = Vector.newBuilder[String]
-      out += docDdlJson
-      var seq = seq0
-      shuffled(s"${tag}i", inserts).foreach { case (id, text) =>
-        seq += 1; out += docOpDmlJson(seq, "insert", id, text)
-      }
-      shuffled(s"${tag}d", deletes).foreach { case (id, text) =>
-        seq += 1; out += docOpDmlJson(seq, "delete", id, text)
-      }
-      out.result()
-    }
-    val evens = rows.filter(_._1 % 2 == 0)
-    val odds = rows.filter(_._1 % 2 == 1)
-    val w1 = wave("qc12a", evens, Array.empty, 0L)
-    (w1, wave("qc12b", odds, rows.filter(_._1 % RetractMod == 0),
-      w1.size.toLong))
+    val rows = docRows(s, dir)
+    val w1 = docOpWave("qc12a", rows.filter(_._1 % 2 == 0), Nil, 0L)
+    (w1, docOpWave("qc12b", rows.filter(_._1 % 2 == 1),
+      rows.filter(_._1 % RetractMod == 0), w1.size.toLong))
   }
 
   /** qc12's query body: the q66h re-band migration inside a real
@@ -696,36 +731,16 @@ object CdcAnalytics {
     * counting source input rows instead of a foreachBatch counter). */
   def runStateStoreNearDupPipeline(s: SparkSession, events: Seq[String],
       evDir: String, ckptPath: String, expectRows: Long,
-      sourceOptions: Map[String, String] = Map.empty): Unit = {
-    import graft.sources.cdc.{CdcEvent, DdlEvent}
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
-    val reg = new SchemaRegistry
-    CdcEvent.decode(docDdlJson) match {
-      case Right(d: DdlEvent) => reg.register(d)
-      case other => throw new IllegalStateException(s"bad DDL: $other")
-    }
-    val prev = StateStoreLineDedup.setRocksDb(s)
-    try {
-      val stream = sourceOptions.foldLeft(
-        s.readStream.format("maxscale-cdc")
-          .option("host", "127.0.0.1").option("port", server.port)
-          .option("user", "u").option("password", "p")
-          .option("database", Database).option("table", DocTableName)) {
-          case (b, (k, v)) => b.option(k, v)
-        }
-        .load()
-      val bands = CdcProjection.projectLatest(stream, reg, Database, DocTableName)
+      sourceOptions: Map[String, String] = Map.empty): Unit =
+    drainContinuous(s, events, evDir, ckptPath, expectRows, "qc8",
+        sourceOptions) { proj =>
+      StateStoreNearDup.candidateEvents(proj
         .where(col("op") === "insert")
         .select(col("doc_id"),
           posexplode(graft.queries.LlmText.rowBandBuckets(col("text")))
             .as(Seq("band", "bkey")))
-        .select(col("band"), col("bkey"), col("doc_id"))
-      val q = StateStoreNearDup.candidateEvents(bands)
-        .writeStream.format("parquet").option("path", evDir)
-        .outputMode("append").option("checkpointLocation", ckptPath).start()
-      try drainByInputRows(q, expectRows, "qc8") finally q.stop()
-    } finally StateStoreLineDedup.restoreConfs(s, prev)
-  }
+        .select(col("band"), col("bkey"), col("doc_id")))
+    }
 
   /** Schema of the qc8 event sink — [[NearDupIdxEvent]]'s shape (for
     * the batch read-back; the dir can exist before the first commit). */
@@ -743,7 +758,7 @@ object CdcAnalytics {
     * (a replayed batch reprocesses the same rows, never more),
     * accumulated across loop iterations (recentProgress is a rolling
     * buffer; the map outlives it). */
-  private def drainByInputRows(q: org.apache.spark.sql.streaming.StreamingQuery,
+  private def drainByInputRows(q: StreamingQuery,
       expectRows: Long, what: String): Unit = {
     val perBatch = scala.collection.mutable.Map.empty[Long, Long]
     def seen(): Long = {
@@ -753,7 +768,7 @@ object CdcAnalytics {
       }
       perBatch.values.sum
     }
-    val deadline = System.currentTimeMillis() + 60000
+    val deadline = System.currentTimeMillis() + DrainDeadlineMs
     while (seen() < expectRows && System.currentTimeMillis() < deadline)
       { q.processAllAvailable(); Thread.sleep(50) }
     require(seen() == expectRows,
@@ -804,34 +819,12 @@ object CdcAnalytics {
     * partitions); same drain/recovery doctrine as qc8. */
   def runStateStoreLineDedupPipeline(s: SparkSession, events: Seq[String],
       evDir: String, ckptPath: String, expectRows: Long,
-      sourceOptions: Map[String, String] = Map.empty): Unit = {
-    import graft.sources.cdc.{CdcEvent, DdlEvent}
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
-    val reg = new SchemaRegistry
-    CdcEvent.decode(docDdlJson) match {
-      case Right(d: DdlEvent) => reg.register(d)
-      case other => throw new IllegalStateException(s"bad DDL: $other")
+      sourceOptions: Map[String, String] = Map.empty): Unit =
+    drainContinuous(s, events, evDir, ckptPath, expectRows, "qc9",
+        sourceOptions) { proj =>
+      StateStoreLineDedup.ownerEvents(
+        graft.queries.LlmText.lineChunks(inserts(proj, "doc_id", "text")))
     }
-    val prev = StateStoreLineDedup.setRocksDb(s)
-    try {
-      val stream = sourceOptions.foldLeft(
-        s.readStream.format("maxscale-cdc")
-          .option("host", "127.0.0.1").option("port", server.port)
-          .option("user", "u").option("password", "p")
-          .option("database", Database).option("table", DocTableName)) {
-          case (b, (k, v)) => b.option(k, v)
-        }
-        .load()
-      val chunks = graft.queries.LlmText.lineChunks(
-        CdcProjection.projectLatest(stream, reg, Database, DocTableName)
-          .where(col("op") === "insert")
-          .select(col("doc_id"), col("text")))
-      val q = StateStoreLineDedup.ownerEvents(chunks)
-        .writeStream.format("parquet").option("path", evDir)
-        .outputMode("append").option("checkpointLocation", ckptPath).start()
-      try drainByInputRows(q, expectRows, "qc9") finally q.stop()
-    } finally StateStoreLineDedup.restoreConfs(s, prev)
-  }
 
   /** qc9's query body: the qc2 insert workload through the continuous
     * plan, then the q119 keep decision derived SOLELY from the durable
@@ -877,35 +870,15 @@ object CdcAnalytics {
     * pair set as strict binlog replay. */
   def runStateStoreNearDupRetractPipeline(s: SparkSession, events: Seq[String],
       evDir: String, ckptPath: String, expectRows: Long,
-      sourceOptions: Map[String, String] = Map.empty): Unit = {
-    import graft.sources.cdc.{CdcEvent, DdlEvent}
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
-    val reg = new SchemaRegistry
-    CdcEvent.decode(docDdlJson) match {
-      case Right(d: DdlEvent) => reg.register(d)
-      case other => throw new IllegalStateException(s"bad DDL: $other")
-    }
-    val prev = StateStoreLineDedup.setRocksDb(s)
-    try {
-      val stream = sourceOptions.foldLeft(
-        s.readStream.format("maxscale-cdc")
-          .option("host", "127.0.0.1").option("port", server.port)
-          .option("user", "u").option("password", "p")
-          .option("database", Database).option("table", DocTableName)) {
-          case (b, (k, v)) => b.option(k, v)
-        }
-        .load()
-      val bands = CdcProjection.projectLatest(stream, reg, Database, DocTableName)
+      sourceOptions: Map[String, String] = Map.empty): Unit =
+    drainContinuous(s, events, evDir, ckptPath, expectRows, "qc10",
+        sourceOptions) { proj =>
+      StateStoreNearDup.opCandidateEvents(proj
         .select(col("op"), col("doc_id"),
           posexplode(graft.queries.LlmText.rowBandBuckets(col("text")))
             .as(Seq("band", "bkey")))
-        .select(col("band"), col("bkey"), col("doc_id"), col("op"))
-      val q = StateStoreNearDup.opCandidateEvents(bands)
-        .writeStream.format("parquet").option("path", evDir)
-        .outputMode("append").option("checkpointLocation", ckptPath).start()
-      try drainByInputRows(q, expectRows, "qc10") finally q.stop()
-    } finally StateStoreLineDedup.restoreConfs(s, prev)
-  }
+        .select(col("band"), col("bkey"), col("doc_id"), col("op")))
+    }
 
   /** qc10's query body: the qc6 insert+delete workload through the
     * continuous plan, then the q66b tail over the durable op events —
@@ -976,59 +949,18 @@ object CdcAnalytics {
         .select(col("doc_id"), col("text"))
       inc.processBatch(hist, -1L)
     }
-    val server = new MockMaxScaleServer(events = events,
-      closeAfterEvents = false, honorGtid = true)
-    val reg = new SchemaRegistry
-    val consumed = new java.util.concurrent.atomic.AtomicLong
     // 64 KiB reads + a paced trigger keep the live half in FEW
     // micro-batches (the qc4/qc7 lesson: per-batch banded state work
     // has a high fixed cost, so an ASAP trigger over 4 KiB socket
     // reads turns one workload into dozens of batches)
-    val stream = (Map("gtid" -> frontierGtid, "bufferSize" -> "65536")
-        ++ sourceOptions).foldLeft(
-      s.readStream.format("maxscale-cdc")
-        .option("host", "127.0.0.1").option("port", server.port)
-        .option("user", "u").option("password", "p")
-        .option("database", Database).option("table", DocTableName)) {
-        case (b, (k, v)) => b.option(k, v)
-      }
-      .load()
-    val q = stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("1500 milliseconds"))
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-      CdcProjection.registryFrom(batch, reg)
-      if (reg.latest(Database, DocTableName).isDefined) {
-        val proj = CdcProjection.projectLatest(batch, reg, Database, DocTableName)
-          .where(col("op") === "insert")
-          .select(col("doc_id"), col("text"))
-        inc.processBatch(proj, bid)
-      }
-      consumed.addAndGet(batch.count())
-      ()
-    }.option("checkpointLocation", ckptPath).start()
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        if (consumed.get() < expectRows) Thread.sleep(50)
-      }
-      if (exactDrain)
-        require(consumed.get() == expectRows,
-          s"qc11 pipeline drained ${consumed.get()} of $expectRows rows")
-      else {
-        // settle: the server has already written its whole (post-skip)
-        // feed; keep draining until two consecutive polls see no growth
-        var last = -1L
-        while (consumed.get() != last && System.currentTimeMillis() < deadline) {
-          last = consumed.get()
-          q.processAllAvailable()
-          Thread.sleep(200)
-          q.processAllAvailable()
-        }
-        require(consumed.get() >= expectRows,
-          s"qc11 resume drained ${consumed.get()} < minimum $expectRows rows")
-      }
-    } finally q.stop()
+    val server = drainWire(s, Seq(DocTableName -> events), ckptPath,
+        expectRows, "qc11",
+        Map("gtid" -> frontierGtid, "bufferSize" -> "65536") ++ sourceOptions,
+        Trigger.ProcessingTime("1500 milliseconds"), honorGtid = true,
+        exact = exactDrain) { (batch, reg, bid) =>
+      latest(batch, reg, DocTableName).foreach(p =>
+        inc.processBatch(inserts(p, "doc_id", "text"), bid))
+    }
     (inc, server)
   }
 
@@ -1081,10 +1013,7 @@ object CdcAnalytics {
   val VecTableName = "vectors"
 
   def vecDdlJson: String =
-    s"""{"namespace":"MaxScaleChangeDataSchema.avro","type":"record","name":"ChangeRecord","table":"$VecTableName","database":"$Database","version":1,"gtid":"0-1-1","fields":[{"name":"vec_id","type":"long"},{"name":"emb","type":"string"}]}"""
-
-  def vecDmlJson(seq: Long, vecId: Long, emb: String): String =
-    s"""{"domain":0,"server_id":1,"sequence":$seq,"event_number":1,"timestamp":1754956800,"event_type":"insert","vec_id":$vecId,"emb":"$emb"}"""
+    ddl(VecTableName, 1, "0-1-1", field("vec_id", "long"), field("emb", "string"))
 
   /** Scripted binlog for qc3: the ARRIVAL embeddings (vec_id % 5 = 4,
     * the q88 base/arrival split) INSERTed in md5-shuffled order.
@@ -1092,21 +1021,20 @@ object CdcAnalytics {
     * Java's shortest round-trip repr, `parseFloat(toString(f)) == f`
     * bit-for-bit — so the wire hop cannot perturb the downstream
     * integer quantization (the q88 oracle stays exact). */
-  def vecWorkloadEvents(s: SparkSession, dir: String): Vector[String] = {
-    val rows = Tables(s, dir, "embeddings")
+  def vecWorkloadEvents(s: SparkSession, dir: String): Vector[String] =
+    vecDdlJson +: shuffled("qc3:", arrivalVecs(s, dir))(_._1).zipWithIndex
+      .map { case ((id, emb), i) =>
+        dml(i + 1L, 1, "insert", "vec_id" -> id, "emb" -> emb)
+      }.toVector
+
+  /** The arrival embeddings (vec_id % 5 = 4) as (vec_id, comma-joined
+    * `Float.toString` components). */
+  private def arrivalVecs(s: SparkSession, dir: String): Seq[(Long, String)] =
+    Tables(s, dir, "embeddings")
       .where(col("vec_id") % 5 === 4)
       .select(col("vec_id"), col("embedding"))
       .collect().map(r => (r.getLong(0),
-        r.getSeq[Float](1).map(_.toString).mkString(",")))
-      .map(r => shuffleKey(s"qc3:${r._1}") -> r)
-      .sortBy(_._1).map(_._2)
-    val out = Vector.newBuilder[String]
-    out += vecDdlJson
-    rows.zipWithIndex.foreach { case ((id, emb), i) =>
-      out += vecDmlJson(i + 1L, id, emb)
-    }
-    out.result()
-  }
+        r.getSeq[Float](1).map(_.toString).mkString(","))).toSeq
 
   /** The qc3 wire half (injectable paths for the kill/resume drill):
     * mock server → maxscale-cdc source → registry → projection → parse
@@ -1117,39 +1045,13 @@ object CdcAnalytics {
       ckptPath: String, expectRows: Long,
       cents: Seq[graft.operators.KMeansLloyd.Centroid],
       sourceOptions: Map[String, String] = Map.empty): IncrementalIvf = {
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
     val inc = new IncrementalIvf(statePath, cents)
-    val reg = new SchemaRegistry
-    val consumed = new java.util.concurrent.atomic.AtomicLong
-    val stream = sourceOptions.foldLeft(
-      s.readStream.format("maxscale-cdc")
-        .option("host", "127.0.0.1").option("port", server.port)
-        .option("user", "u").option("password", "p")
-        .option("database", Database).option("table", VecTableName)) {
-        case (b, (k, v)) => b.option(k, v)
-      }
-      .load()
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      CdcProjection.registryFrom(batch, reg)
-      if (reg.latest(Database, VecTableName).isDefined) {
-        val proj = CdcProjection.projectLatest(batch, reg, Database, VecTableName)
-          .where(col("op") === "insert")
-          .select(col("vec_id"),
-            expr("transform(split(emb, ','), x -> CAST(x AS FLOAT))").as("embedding"))
-        inc.processBatch(proj, bid)
-      }
-      consumed.addAndGet(batch.count())
-      ()
-    }.option("checkpointLocation", ckptPath).start()
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        if (consumed.get() < expectRows) Thread.sleep(50)
-      }
-      require(consumed.get() == expectRows,
-        s"qc3 pipeline drained ${consumed.get()} of $expectRows rows")
-    } finally q.stop()
+    drainWire(s, Seq(VecTableName -> events), ckptPath, expectRows, "qc3",
+        sourceOptions) { (batch, reg, bid) =>
+      latest(batch, reg, VecTableName).foreach(p =>
+        inc.processBatch(p.where(col("op") === "insert")
+          .select(col("vec_id"), embeddingOf), bid))
+    }
     inc
   }
 
@@ -1182,10 +1084,8 @@ object CdcAnalytics {
     * stream has the identical collision hazard for a table with such a
     * column, and renaming at the feed boundary is the standard fix. */
   def eventDdlJson: String =
-    s"""{"namespace":"MaxScaleChangeDataSchema.avro","type":"record","name":"ChangeRecord","table":"$EventTableName","database":"$Database","version":1,"gtid":"0-1-1","fields":[{"name":"event_id","type":"long"},{"name":"etype","type":"string"},{"name":"value","type":"double"},{"name":"ts_us","type":"long"}]}"""
-
-  def eventDmlJson(seq: Long, id: Long, etype: String, value: Double, tsUs: Long): String =
-    s"""{"domain":0,"server_id":1,"sequence":$seq,"event_number":1,"timestamp":1754956800,"event_type":"insert","event_id":$id,"etype":"${jsonEscape(etype)}","value":$value,"ts_us":$tsUs}"""
+    ddl(EventTableName, 1, "0-1-1", field("event_id", "long"),
+      field("etype", "string"), field("value", "double"), field("ts_us", "long"))
 
   /** Scripted binlog for qc4: every fixture event INSERTed in
     * md5-shuffled order. Values travel as `Double.toString` (exact
@@ -1197,14 +1097,11 @@ object CdcAnalytics {
       .select(col("event_id"), col("event_type"), col("value"),
         expr("unix_micros(ts)").as("ts_us"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getLong(3)))
-      .map(r => shuffleKey(s"qc4:${r._1}") -> r)
-      .sortBy(_._1).map(_._2)
-    val out = Vector.newBuilder[String]
-    out += eventDdlJson
-    rows.zipWithIndex.foreach { case ((id, ty, v, ts), i) =>
-      out += eventDmlJson(i + 1L, id, ty, v, ts)
-    }
-    out.result()
+    eventDdlJson +: shuffled("qc4:", rows.toSeq)(_._1).zipWithIndex
+      .map { case ((id, ty, v, ts), i) =>
+        dml(i + 1L, 1, "insert", "event_id" -> id, "etype" -> ty, "value" -> v,
+          "ts_us" -> ts)
+      }.toVector
   }
 
   /** The qc4 wire half (injectable paths for the kill/resume drill):
@@ -1215,9 +1112,6 @@ object CdcAnalytics {
   def runEventPipeline(s: SparkSession, events: Seq[String], statePath: String,
       ckptPath: String, expectRows: Long,
       sourceOptions: Map[String, String] = Map.empty): String = {
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
-    val reg = new SchemaRegistry
-    val consumed = new java.util.concurrent.atomic.AtomicLong
     val feedDir = s"$statePath/feed"
     // High-volume feed tuning (the events workload is ~20× qc2's doc
     // count): 64 KiB socket reads drain the wire in few syscalls, and
@@ -1227,22 +1121,11 @@ object CdcAnalytics {
     // 33 s at sf0.1 from per-batch overhead alone, ~4 s after).
     // Semantics are batch-boundary-free by design, so this is pure
     // mechanics (the fragmentation spec pins boundary invariance).
-    val stream = (Map("bufferSize" -> "65536") ++ sourceOptions).foldLeft(
-      s.readStream.format("maxscale-cdc")
-        .option("host", "127.0.0.1").option("port", server.port)
-        .option("user", "u").option("password", "p")
-        .option("database", Database).option("table", EventTableName)) {
-        case (b, (k, v)) => b.option(k, v)
-      }
-      .load()
-    val q = stream.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-      CdcProjection.registryFrom(batch, reg)
-      if (reg.latest(Database, EventTableName).isDefined) {
-        val proj = CdcProjection.projectLatest(batch, reg, Database, EventTableName)
-          .where(col("op") === "insert")
-          .select(col("event_id"), col("etype"), col("value"), col("ts_us"))
+    drainWire(s, Seq(EventTableName -> events), ckptPath, expectRows, "qc4",
+        Map("bufferSize" -> "65536") ++ sourceOptions,
+        Trigger.ProcessingTime("500 milliseconds")) { (batch, reg, _) =>
+      latest(batch, reg, EventTableName).foreach { p =>
+        val proj = inserts(p, "event_id", "etype", "value", "ts_us")
           // intra-batch replay dedup (ADVICE r9): a resumed connection
           // can re-deliver an already-seen event in the SAME micro-batch
           // as new ones — the committed-state anti-join below only
@@ -1258,18 +1141,7 @@ object CdcAnalytics {
           Seq("event_id"), "left_anti")
         StateLayout.append(fresh, feedDir, Seq("event_id"))
       }
-      consumed.addAndGet(batch.count())
-      ()
-    }.option("checkpointLocation", ckptPath).start()
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        if (consumed.get() < expectRows) Thread.sleep(50)
-      }
-      require(consumed.get() == expectRows,
-        s"qc4 pipeline drained ${consumed.get()} of $expectRows rows")
-    } finally q.stop()
+    }
     feedDir
   }
 
@@ -1296,10 +1168,8 @@ object CdcAnalytics {
   val CorpusTableName = "corpus_feed"
 
   def corpusDdlJson: String =
-    s"""{"namespace":"MaxScaleChangeDataSchema.avro","type":"record","name":"ChangeRecord","table":"$CorpusTableName","database":"$Database","version":1,"gtid":"0-1-1","fields":[{"name":"doc_id","type":"long"},{"name":"text","type":"string"},{"name":"source","type":"string"},{"name":"lang","type":"string"}]}"""
-
-  def corpusDmlJson(seq: Long, docId: Long, text: String, source: String, lang: String): String =
-    s"""{"domain":0,"server_id":1,"sequence":$seq,"event_number":1,"timestamp":1754956800,"event_type":"insert","doc_id":$docId,"text":"${jsonEscape(text)}","source":"${jsonEscape(source)}","lang":"${jsonEscape(lang)}"}"""
+    ddl(CorpusTableName, 1, "0-1-1", field("doc_id", "long"), field("text", "string"),
+      field("source", "string"), field("lang", "string"))
 
   /** Scripted binlog for qc5: every fixture document INSERTed with its
     * full metadata row in md5-shuffled order. */
@@ -1307,14 +1177,11 @@ object CdcAnalytics {
     val rows = Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"), col("lang"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
-      .map(r => shuffleKey(s"qc5:${r._1}") -> r)
-      .sortBy(_._1).map(_._2)
-    val out = Vector.newBuilder[String]
-    out += corpusDdlJson
-    rows.zipWithIndex.foreach { case ((id, text, src, lang), i) =>
-      out += corpusDmlJson(i + 1L, id, text, src, lang)
-    }
-    out.result()
+    corpusDdlJson +: shuffled("qc5:", rows.toSeq)(_._1).zipWithIndex
+      .map { case ((id, text, src, lang), i) =>
+        dml(i + 1L, 1, "insert", "doc_id" -> id, "text" -> text, "source" -> src,
+          "lang" -> lang)
+      }.toVector
   }
 
   /** The qc5 wire half (injectable paths for the kill/resume drill):
@@ -1322,38 +1189,12 @@ object CdcAnalytics {
   def runCorpusPipeline(s: SparkSession, events: Seq[String], statePath: String,
       ckptPath: String, expectRows: Long,
       sourceOptions: Map[String, String] = Map.empty): IncrementalReportCard = {
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
     val inc = new IncrementalReportCard(statePath)
-    val reg = new SchemaRegistry
-    val consumed = new java.util.concurrent.atomic.AtomicLong
-    val stream = sourceOptions.foldLeft(
-      s.readStream.format("maxscale-cdc")
-        .option("host", "127.0.0.1").option("port", server.port)
-        .option("user", "u").option("password", "p")
-        .option("database", Database).option("table", CorpusTableName)) {
-        case (b, (k, v)) => b.option(k, v)
-      }
-      .load()
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      CdcProjection.registryFrom(batch, reg)
-      if (reg.latest(Database, CorpusTableName).isDefined) {
-        val proj = CdcProjection.projectLatest(batch, reg, Database, CorpusTableName)
-          .where(col("op") === "insert")
-          .select(col("doc_id"), col("text"), col("source"), col("lang"))
-        inc.processBatch(proj, bid)
-      }
-      consumed.addAndGet(batch.count())
-      ()
-    }.option("checkpointLocation", ckptPath).start()
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        if (consumed.get() < expectRows) Thread.sleep(50)
-      }
-      require(consumed.get() == expectRows,
-        s"qc5 pipeline drained ${consumed.get()} of $expectRows rows")
-    } finally q.stop()
+    drainWire(s, Seq(CorpusTableName -> events), ckptPath, expectRows, "qc5",
+        sourceOptions) { (batch, reg, bid) =>
+      latest(batch, reg, CorpusTableName).foreach(p =>
+        inc.processBatch(inserts(p, "doc_id", "text", "source", "lang"), bid))
+    }
     inc
   }
 
@@ -1412,13 +1253,22 @@ object CdcAnalytics {
     StructField("total_cents", LongType),    // v1 name
     StructField("amount_cents", LongType)))  // v2 name (renamed)
 
-  private def evolveDdlJson(tbl: String, version: Int, key: String,
-      valueField: String): String =
-    s"""{"namespace":"MaxScaleChangeDataSchema.avro","type":"record","name":"ChangeRecord","table":"$tbl","database":"$Database","version":$version,"gtid":"0-1-1","fields":[{"name":"$key","type":"long"},{"name":"$valueField","type":"long"}]}"""
-
-  private def evolveDmlJson(seq: Long, op: String, key: String, k: Long,
-      valueField: String, cents: Long): String =
-    s"""{"domain":0,"server_id":1,"sequence":$seq,"event_number":1,"timestamp":1754956800,"event_type":"$op","$key":$k,"$valueField":$cents}"""
+  /** A renaming two-version binlog of (`key`, cents) rows, in order:
+    * DDL v1 (`v1Field`) → `v1` inserts → DDL v2 (`v2Field`) → `v2`
+    * inserts → `del` deletes, the last three under v2. */
+  private def evolveWorkload(tbl: String, key: String, v1Field: String,
+      v2Field: String, v1: Seq[(Long, Long)], v2: Seq[(Long, Long)],
+      del: Seq[(Long, Long)]): Vector[String] = {
+    def ddlV(version: Int, valueField: String) = ddl(tbl, version, "0-1-1",
+      field(key, "long"), field(valueField, "long"))
+    val ops = v1.map(("insert", v1Field, _)) ++ v2.map(("insert", v2Field, _)) ++
+      del.map(("delete", v2Field, _))
+    val dmls = ops.zipWithIndex.map { case ((op, f, (k, c)), i) =>
+      dml(i + 1L, 1, op, key -> k, f -> c)
+    }
+    ((ddlV(1, v1Field) +: dmls.take(v1.size)) ++
+      (ddlV(2, v2Field) +: dmls.drop(v1.size))).toVector
+  }
 
   /** balances_feed binlog: DDL v1(custkey, bal_cents) → even-custkey
     * inserts → DDL v2(custkey, balance_cents) → odd-custkey inserts →
@@ -1430,20 +1280,9 @@ object CdcAnalytics {
         expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("cents"))
       .orderBy(col("c_custkey"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toVector
-    var seq = 0L
-    val out = Vector.newBuilder[String]
-    out += evolveDdlJson(BalTableName, 1, "custkey", "bal_cents")
-    rows.filter(_._1 % 2 == 0).foreach { case (k, c) =>
-      seq += 1; out += evolveDmlJson(seq, "insert", "custkey", k, "bal_cents", c)
-    }
-    out += evolveDdlJson(BalTableName, 2, "custkey", "balance_cents")
-    rows.filter(_._1 % 2 == 1).foreach { case (k, c) =>
-      seq += 1; out += evolveDmlJson(seq, "insert", "custkey", k, "balance_cents", c)
-    }
-    rows.filter(_._1 % 10 == 0).foreach { case (k, c) =>
-      seq += 1; out += evolveDmlJson(seq, "delete", "custkey", k, "balance_cents", c)
-    }
-    out.result()
+    evolveWorkload(BalTableName, "custkey", "bal_cents", "balance_cents",
+      rows.filter(_._1 % 2 == 0), rows.filter(_._1 % 2 == 1),
+      rows.filter(_._1 % 10 == 0))
   }
 
   /** orders_feed2 binlog over the o_orderkey % 16 == 0 subset: v1 wave
@@ -1455,20 +1294,9 @@ object CdcAnalytics {
         expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)").as("cents"))
       .orderBy(col("o_orderkey"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toVector
-    var seq = 0L
-    val out = Vector.newBuilder[String]
-    out += evolveDdlJson(OrdTableName, 1, "okey", "total_cents")
-    rows.filter(_._1 % 32 == 0).foreach { case (k, c) =>
-      seq += 1; out += evolveDmlJson(seq, "insert", "okey", k, "total_cents", c)
-    }
-    out += evolveDdlJson(OrdTableName, 2, "okey", "amount_cents")
-    rows.filter(_._1 % 32 != 0).foreach { case (k, c) =>
-      seq += 1; out += evolveDmlJson(seq, "insert", "okey", k, "amount_cents", c)
-    }
-    rows.filter(_._1 % 160 == 0).foreach { case (k, c) =>
-      seq += 1; out += evolveDmlJson(seq, "delete", "okey", k, "amount_cents", c)
-    }
-    out.result()
+    evolveWorkload(OrdTableName, "okey", "total_cents", "amount_cents",
+      rows.filter(_._1 % 32 == 0), rows.filter(_._1 % 32 != 0),
+      rows.filter(_._1 % 160 == 0))
   }
 
   /** ONE streaming query over BOTH tables' sources (unioned), each
@@ -1482,38 +1310,18 @@ object CdcAnalytics {
   def runMultiTableDdlPipeline(s: SparkSession,
       balEvents: Seq[String], ordEvents: Seq[String],
       snapBase: String, ckptPath: String, expectRows: Long,
-      timeoutMs: Long = 120000,
       onBatch: (Long, String, Seq[Int]) => Unit = (_, _, _) => ())
       : (CdcSnapshotTable, CdcSnapshotTable) = {
-    val srvA = new MockMaxScaleServer(events = balEvents, closeAfterEvents = false)
-    val srvB = new MockMaxScaleServer(events = ordEvents, closeAfterEvents = false)
     val snapA = new CdcSnapshotTable(s"$snapBase/bal", Seq("custkey"), balWideSchema)
     val snapB = new CdcSnapshotTable(s"$snapBase/ord", Seq("okey"), ordWideSchema)
-    val reg = new SchemaRegistry
-    val consumed = new java.util.concurrent.atomic.AtomicLong
-    def src(port: Int, tbl: String) =
-      s.readStream.format("maxscale-cdc")
-        .option("host", "127.0.0.1").option("port", port)
-        .option("user", "u").option("password", "p")
-        .option("database", Database).option("table", tbl)
-        .option("splitBatchesAtDdl", "true")
-        .load()
-    val stream = src(srvA.port, BalTableName)
-      .unionByName(src(srvB.port, OrdTableName))
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      CdcProjection.registryFrom(batch, reg)
+    drainWire(s, Seq(BalTableName -> balEvents, OrdTableName -> ordEvents),
+        ckptPath, expectRows, "qc15", SplitAtDdl) { (batch, reg, bid) =>
       Seq((BalTableName, snapA, balWideSchema),
           (OrdTableName, snapB, ordWideSchema)).foreach {
         case (tbl, snap, wide) =>
           val slice = batch.where(col("table") === tbl)
-          val vers = slice.where(col("kind") === "dml")
-            .select(col("schema_version")).distinct()
-            .collect().map(_.getInt(0)).toSeq.sorted
-          onBatch(bid, tbl, vers)
-          require(vers.size <= 1,
-            s"batch $bid spans schema versions $vers for $tbl — DDL split failed")
-          if (reg.latest(Database, tbl).isDefined) {
-            val proj = CdcProjection.projectLatest(slice, reg, Database, tbl)
+          onBatch(bid, tbl, versions(slice, bid, s"qc15 $tbl"))
+          latest(slice, reg, tbl).foreach { proj =>
             val filled = wide.fields.foldLeft(proj) { (df, f) =>
               if (df.columns.contains(f.name)) df
               else df.withColumn(f.name, lit(null).cast(f.dataType))
@@ -1521,18 +1329,7 @@ object CdcAnalytics {
             snap.applyBatch(filled, bid)
           }
       }
-      consumed.addAndGet(batch.count())
-      ()
-    }.option("checkpointLocation", ckptPath).start()
-    try {
-      val deadline = System.currentTimeMillis() + timeoutMs
-      while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        if (consumed.get() < expectRows) Thread.sleep(50)
-      }
-      require(consumed.get() == expectRows,
-        s"multi-table CDC drained ${consumed.get()} of $expectRows rows")
-    } finally q.stop()
+    }
     snapA.prune(s); snapB.prune(s)
     (snapA, snapB)
   }
@@ -1551,11 +1348,8 @@ object CdcAnalytics {
   val EvoDocTableName = "documents_evo"
 
   def evoDocDdlJson(version: Int, textField: String): String =
-    s"""{"namespace":"MaxScaleChangeDataSchema.avro","type":"record","name":"ChangeRecord","table":"$EvoDocTableName","database":"$Database","version":$version,"gtid":"0-1-$version","fields":[{"name":"doc_id","type":"long"},{"name":"$textField","type":"string"}]}"""
-
-  private def evoDocDmlJson(seq: Long, docId: Long, textField: String,
-      text: String): String =
-    s"""{"domain":0,"server_id":1,"sequence":$seq,"event_number":1,"timestamp":1754956800,"event_type":"insert","doc_id":$docId,"$textField":"${jsonEscape(text)}"}"""
+    ddl(EvoDocTableName, version, s"0-1-$version", field("doc_id", "long"),
+      field(textField, "string"))
 
   /** Scripted evolving binlog: DDL v1(doc_id, text) → even docs under
     * v1 → DDL v2(doc_id, body — the RENAME) → odd docs under v2, each
@@ -1564,22 +1358,15 @@ object CdcAnalytics {
     * doc_id takes a line from an even (v1) doc, so the dedup judgment
     * itself spans the schema versions. */
   def evoDocWorkloadEvents(s: SparkSession, dir: String): Vector[String] = {
-    val rows = Tables(s, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    def shuffled(wave: Seq[(Long, String)], salt: String) =
-      wave.map(r => shuffleKey(s"qc16:$salt:${r._1}") -> r).sortBy(_._1).map(_._2)
-    var seq = 0L
-    val out = Vector.newBuilder[String]
-    out += evoDocDdlJson(1, "text")
-    shuffled(rows.filter(_._1 % 2 == 0), "v1").foreach { case (id, t) =>
-      seq += 1; out += evoDocDmlJson(seq, id, "text", t)
-    }
-    out += evoDocDdlJson(2, "body")
-    shuffled(rows.filter(_._1 % 2 == 1), "v2").foreach { case (id, t) =>
-      seq += 1; out += evoDocDmlJson(seq, id, "body", t)
-    }
-    out.result()
+    val rows = docRows(s, dir)
+    val v1 = shuffled("qc16:v1:", rows.filter(_._1 % 2 == 0))(_._1)
+    val v2 = shuffled("qc16:v2:", rows.filter(_._1 % 2 == 1))(_._1)
+    def wave(f: String, ws: Seq[(Long, String)], seq0: Int) =
+      ws.zipWithIndex.map { case ((id, t), i) =>
+        dml(seq0 + i + 1L, 1, "insert", "doc_id" -> id, f -> t)
+      }
+    ((evoDocDdlJson(1, "text") +: wave("text", v1, 0)) ++
+      (evoDocDdlJson(2, "body") +: wave("body", v2, v1.size))).toVector
   }
 
   /** The qc16 wire half (injectable paths for the resume drill): the
@@ -1588,44 +1375,15 @@ object CdcAnalytics {
     * rename before the batch enters the dedup state. */
   def runEvoDocPipeline(s: SparkSession, events: Seq[String],
       statePath: String, ckptPath: String, expectRows: Long): IncrementalLineDedup = {
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
     val inc = new IncrementalLineDedup(statePath)
-    val reg = new SchemaRegistry
-    val consumed = new java.util.concurrent.atomic.AtomicLong
-    val stream = s.readStream.format("maxscale-cdc")
-      .option("host", "127.0.0.1").option("port", server.port)
-      .option("user", "u").option("password", "p")
-      .option("database", Database).option("table", EvoDocTableName)
-      .option("splitBatchesAtDdl", "true")
-      .load()
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      CdcProjection.registryFrom(batch, reg)
-      if (reg.latest(Database, EvoDocTableName).isDefined) {
-        val vers = batch.where(col("kind") === "dml")
-          .select(col("schema_version")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        require(vers.size <= 1,
-          s"qc16 batch $bid spans schema versions $vers — DDL split failed")
-        val proj = CdcProjection.projectLatest(batch, reg, Database, EvoDocTableName)
-          .where(col("op") === "insert")
-        val normalized =
-          if (proj.columns.contains("body"))
-            proj.withColumnRenamed("body", "text")
-          else proj
-        inc.processBatch(normalized.select(col("doc_id"), col("text")), bid)
+    drainWire(s, Seq(EvoDocTableName -> events), ckptPath, expectRows, "qc16",
+        SplitAtDdl) { (batch, reg, bid) =>
+      latest(batch, reg, EvoDocTableName).foreach { p =>
+        versions(batch, bid, "qc16")
+        inc.processBatch(
+          inserts(p.withColumnRenamed("body", "text"), "doc_id", "text"), bid)
       }
-      consumed.addAndGet(batch.count())
-      ()
-    }.option("checkpointLocation", ckptPath).start()
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        if (consumed.get() < expectRows) Thread.sleep(50)
-      }
-      require(consumed.get() == expectRows,
-        s"qc16 pipeline drained ${consumed.get()} of $expectRows rows")
-    } finally q.stop()
+    }
     inc
   }
 
@@ -1654,11 +1412,8 @@ object CdcAnalytics {
   val EvoVecTableName = "vectors_evo"
 
   def evoVecDdlJson(version: Int, embField: String): String =
-    s"""{"namespace":"MaxScaleChangeDataSchema.avro","type":"record","name":"ChangeRecord","table":"$EvoVecTableName","database":"$Database","version":$version,"gtid":"0-1-$version","fields":[{"name":"vec_id","type":"long"},{"name":"$embField","type":"string"}]}"""
-
-  private def evoVecDmlJson(seq: Long, op: String, vecId: Long,
-      embField: String, emb: String): String =
-    s"""{"domain":0,"server_id":1,"sequence":$seq,"event_number":1,"timestamp":1754956800,"event_type":"$op","vec_id":$vecId,"$embField":"$emb"}"""
+    ddl(EvoVecTableName, version, s"0-1-$version", field("vec_id", "long"),
+      field(embField, "string"))
 
   /** Scripted evolving binlog over the qc3 arrival set (vec_id % 5 ==
     * 4): DDL v1(vec_id, emb) → the vec_id % 10 == 4 wave under v1 →
@@ -1669,27 +1424,18 @@ object CdcAnalytics {
     * embeddings as exact Float round-trip strings (the qc3 doctrine).
     */
   def evoVecWorkloadEvents(s: SparkSession, dir: String): Vector[String] = {
-    val rows = Tables(s, dir, "embeddings")
-      .where(col("vec_id") % 5 === 4)
-      .select(col("vec_id"), col("embedding"))
-      .collect().map(r => (r.getLong(0),
-        r.getSeq[Float](1).map(_.toString).mkString(",")))
-    def shuffled(wave: Seq[(Long, String)], salt: String) =
-      wave.map(r => shuffleKey(s"qc17:$salt:${r._1}") -> r).sortBy(_._1).map(_._2)
-    var seq = 0L
-    val out = Vector.newBuilder[String]
-    out += evoVecDdlJson(1, "emb")
-    shuffled(rows.filter(_._1 % 10 == 4), "v1").foreach { case (id, e) =>
-      seq += 1; out += evoVecDmlJson(seq, "insert", id, "emb", e)
+    val rows = arrivalVecs(s, dir)
+    def wave(salt: String, op: String, f: String, keep: Long => Boolean) =
+      shuffled(s"qc17:$salt:", rows.filter(r => keep(r._1)))(_._1)
+        .map { case (id, e) => (op, f, id, e) }
+    val v1 = wave("v1", "insert", "emb", _ % 10 == 4)
+    val rest = wave("v2", "insert", "embedding_csv", _ % 10 == 9) ++
+      wave("del", "delete", "embedding_csv", _ % 20 == 4)
+    val dmls = (v1 ++ rest).zipWithIndex.map { case ((op, f, id, e), i) =>
+      dml(i + 1L, 1, op, "vec_id" -> id, f -> e)
     }
-    out += evoVecDdlJson(2, "embedding_csv")
-    shuffled(rows.filter(_._1 % 10 == 9), "v2").foreach { case (id, e) =>
-      seq += 1; out += evoVecDmlJson(seq, "insert", id, "embedding_csv", e)
-    }
-    shuffled(rows.filter(_._1 % 20 == 4), "del").foreach { case (id, e) =>
-      seq += 1; out += evoVecDmlJson(seq, "delete", id, "embedding_csv", e)
-    }
-    out.result()
+    ((evoVecDdlJson(1, "emb") +: dmls.take(v1.size)) ++
+      (evoVecDdlJson(2, "embedding_csv") +: dmls.drop(v1.size))).toVector
   }
 
   /** The qc17 wire half (injectable paths for the resume drill): the
@@ -1704,48 +1450,16 @@ object CdcAnalytics {
   def runEvoVecPipeline(s: SparkSession, events: Seq[String],
       statePath: String, ckptPath: String, expectRows: Long,
       cents: Seq[graft.operators.KMeansLloyd.Centroid]): IncrementalIvf = {
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
     val inc = new IncrementalIvf(statePath, cents)
-    val reg = new SchemaRegistry
-    val consumed = new java.util.concurrent.atomic.AtomicLong
-    val stream = s.readStream.format("maxscale-cdc")
-      .option("host", "127.0.0.1").option("port", server.port)
-      .option("user", "u").option("password", "p")
-      .option("database", Database).option("table", EvoVecTableName)
-      .option("splitBatchesAtDdl", "true")
-      .load()
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      CdcProjection.registryFrom(batch, reg)
-      if (reg.latest(Database, EvoVecTableName).isDefined) {
-        val vers = batch.where(col("kind") === "dml")
-          .select(col("schema_version")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        require(vers.size <= 1,
-          s"qc17 batch $bid spans schema versions $vers — DDL split failed")
-        val proj = CdcProjection.projectLatest(batch, reg, Database, EvoVecTableName)
-        val normalized =
-          if (proj.columns.contains("embedding_csv"))
-            proj.withColumnRenamed("embedding_csv", "emb")
-          else proj
-        val parsed = normalized.select(col("op"), col("vec_id"),
-          expr("transform(split(emb, ','), x -> CAST(x AS FLOAT))").as("embedding"))
-        inc.processBatch(parsed.where(col("op") === "insert")
-          .select(col("vec_id"), col("embedding")), bid)
-        inc.retractBatch(parsed.where(col("op") === "delete")
-          .select(col("vec_id")), bid)
+    drainWire(s, Seq(EvoVecTableName -> events), ckptPath, expectRows, "qc17",
+        SplitAtDdl) { (batch, reg, bid) =>
+      latest(batch, reg, EvoVecTableName).foreach { p =>
+        versions(batch, bid, "qc17")
+        val parsed = p.withColumnRenamed("embedding_csv", "emb")
+          .select(col("op"), col("vec_id"), embeddingOf)
+        applyOps(inc, parsed, "vec_id", "embedding")(bid)
       }
-      consumed.addAndGet(batch.count())
-      ()
-    }.option("checkpointLocation", ckptPath).start()
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        if (consumed.get() < expectRows) Thread.sleep(50)
-      }
-      require(consumed.get() == expectRows,
-        s"qc17 pipeline drained ${consumed.get()} of $expectRows rows")
-    } finally q.stop()
+    }
     inc
   }
 
@@ -1847,10 +1561,8 @@ object CdcAnalytics {
   val TypedBoost = 3000000000L
 
   def typedBalDdlJson(version: Int, avroType: String, realType: String): String =
-    s"""{"namespace":"MaxScaleChangeDataSchema.avro","type":"record","name":"ChangeRecord","table":"$TypedBalTableName","database":"$Database","version":$version,"gtid":"0-1-$version","fields":[{"name":"custkey","type":"long"},{"name":"cents","type":"$avroType","real_type":"$realType"}]}"""
-
-  private def typedBalDmlJson(seq: Long, op: String, k: Long, cents: Long): String =
-    s"""{"domain":0,"server_id":1,"sequence":$seq,"event_number":1,"timestamp":1754956800,"event_type":"$op","custkey":$k,"cents":$cents}"""
+    ddl(TypedBalTableName, version, s"0-1-$version", field("custkey", "long"),
+      s"""{"name":"cents","type":"$avroType","real_type":"$realType"}""")
 
   /** The sink state schema at the WIDEST registered width. */
   val typedBalWideSchema: StructType = StructType(Seq(
@@ -1869,24 +1581,18 @@ object CdcAnalytics {
       .select(col("c_custkey"),
         expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)").as("cents"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toVector
-    def shuffled(wave: Seq[(Long, Long)], salt: String) =
-      wave.map(r => shuffleKey(s"qc20:$salt:${r._1}") -> r).sortBy(_._1).map(_._2)
-    var seq = 0L
-    val out = Vector.newBuilder[String]
-    out += typedBalDdlJson(1, "int", "int")
-    shuffled(rows.filter(_._1 % 2 == 0), "v1").foreach { case (k, c) =>
-      seq += 1; out += typedBalDmlJson(seq, "insert", k, c)
-    }
-    out += typedBalDdlJson(2, "long", "bigint")
-    shuffled(rows.filter(_._1 % 2 == 1), "v2").foreach { case (k, c) =>
-      seq += 1; out += typedBalDmlJson(seq, "insert", k, c + TypedBoost)
-    }
-    shuffled(rows.filter(r => r._1 % 10 == 0 || r._1 % 10 == 5), "del")
-      .foreach { case (k, c) =>
-        val v = if (k % 2 == 1) c + TypedBoost else c
-        seq += 1; out += typedBalDmlJson(seq, "delete", k, v)
+    def wave(salt: String, op: String, keep: Long => Boolean) =
+      shuffled(s"qc20:$salt:", rows.filter(r => keep(r._1)))(_._1).map {
+        case (k, c) => (op, k, if (k % 2 == 1) c + TypedBoost else c)
       }
-    out.result()
+    val v1 = wave("v1", "insert", _ % 2 == 0)
+    val rest = wave("v2", "insert", _ % 2 == 1) ++
+      wave("del", "delete", k => k % 10 == 0 || k % 10 == 5)
+    val dmls = (v1 ++ rest).zipWithIndex.map { case ((op, k, c), i) =>
+      dml(i + 1L, 1, op, "custkey" -> k, "cents" -> c)
+    }
+    ((typedBalDdlJson(1, "int", "int") +: dmls.take(v1.size)) ++
+      (typedBalDdlJson(2, "long", "bigint") +: dmls.drop(v1.size))).toVector
   }
 
   /** The qc20 wire half: `splitBatchesAtDdl=true`, per-batch version
@@ -1899,27 +1605,13 @@ object CdcAnalytics {
     * a reconnected v2 stream. */
   def runTypedBalPipeline(s: SparkSession, events: Seq[String],
       snapPath: String, ckptPath: String, expectRows: Long): CdcSnapshotTable = {
-    val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
     val snap = new CdcSnapshotTable(snapPath, Seq("custkey"), typedBalWideSchema)
-    val reg = new SchemaRegistry
-    val consumed = new java.util.concurrent.atomic.AtomicLong
-    val stream = s.readStream.format("maxscale-cdc")
-      .option("host", "127.0.0.1").option("port", server.port)
-      .option("user", "u").option("password", "p")
-      .option("database", Database).option("table", TypedBalTableName)
-      .option("splitBatchesAtDdl", "true")
-      .load()
-    val q = stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
-      CdcProjection.registryFrom(batch, reg)
-      val dml = batch.where(col("kind") === "dml")
-      val vers = dml.select(col("schema_version")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      require(vers.size <= 1,
-        s"batch $bid spans schema versions $vers — DDL split failed")
-      vers.headOption.foreach { v =>
+    drainWire(s, Seq(TypedBalTableName -> events), ckptPath, expectRows, "qc20",
+        SplitAtDdl) { (batch, reg, bid) =>
+      versions(batch, bid, "qc20").headOption.foreach { v =>
         val schema = reg.get(Database, TypedBalTableName, v).getOrElse(
           throw new IllegalStateException(s"version $v not registered"))
-        val proj = dml
+        val proj = batch.where(col("kind") === "dml")
           .withColumn("_row", from_json(col("payload"), schema))
           .select(CdcProjection.envelopeCols.map(col) :+ col("_row.*"): _*)
           // the WIDENING at the sink: v1's int parses cast up to the
@@ -1927,18 +1619,7 @@ object CdcAnalytics {
           .withColumn("cents", col("cents").cast("long"))
         snap.applyBatch(proj, bid)
       }
-      consumed.addAndGet(batch.count())
-      ()
-    }.option("checkpointLocation", ckptPath).start()
-    try {
-      val deadline = System.currentTimeMillis() + 60000
-      while (consumed.get() < expectRows && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        if (consumed.get() < expectRows) Thread.sleep(50)
-      }
-      require(consumed.get() == expectRows,
-        s"qc20 pipeline drained ${consumed.get()} of $expectRows rows")
-    } finally q.stop()
+    }
     snap.prune(s)
     snap
   }

@@ -59,6 +59,10 @@ final case class StateTable(name: String, keys: Seq[String],
 abstract class KeyedState(statePath: String, key: String,
     autoCompactFiles: Int) {
 
+  /** foreachBatch hook for CDC INSERTs: the key plus the columns the
+    * state's transform reads. */
+  def processBatch(batch: DataFrame, batchId: Long): Unit
+
   /** The state tables, in append order. */
   protected def tables: Seq[StateTable]
 

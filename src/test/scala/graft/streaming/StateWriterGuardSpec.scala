@@ -32,13 +32,16 @@ class StateWriterGuardSpec extends AnyFunSuite {
       .map(p => p.getFileName.toString ->
         new String(Files.readAllBytes(p), UTF_8).split("\n").toSeq)
 
-  /** (line number, text) of each code line that writes or deletes. */
-  private def writes(lines: Seq[String]): Seq[(Int, String)] =
+  /** (line number, text) of each code line (no comment line). */
+  private def code(lines: Seq[String]): Seq[(Int, String)] =
     lines.zipWithIndex.collect {
       case (l, i) if !l.trim.startsWith("*") && !l.trim.startsWith("//") &&
-          !l.trim.startsWith("/*") && writePatterns.exists(_.findFirstIn(l).isDefined) =>
-        (i + 1, l.trim)
+          !l.trim.startsWith("/*") => (i + 1, l.trim)
     }
+
+  /** (line number, text) of each code line that writes or deletes. */
+  private def writes(lines: Seq[String]): Seq[(Int, String)] =
+    code(lines).filter { case (_, l) => writePatterns.exists(_.findFirstIn(l).isDefined) }
 
   test("nothing outside StateLayout writes or deletes a state directory") {
     val files = sources
@@ -57,5 +60,25 @@ class StateWriterGuardSpec extends AnyFunSuite {
     allowed.keys.foreach { name =>
       assert(files.get(name).exists(writes(_).nonEmpty), s"$name no longer writes; drop it")
     }
+  }
+
+  test("the wire drill is written once: one maxscale-cdc source builder, servers opened only by the drills") {
+    val drills = Set("drainWire", "drainContinuous")
+    val Def = """^\s*(?:(?:private|final|override|protected)(?:\[\w+\])?\s+)*def\s+(\w+)""".r.unanchored
+    val sourceBuilds = for {
+      (name, lines) <- sources
+      (n, l) <- code(lines) if l.contains("format(\"maxscale-cdc\")")
+    } yield s"$name:$n"
+    assert(sourceBuilds.size == 1,
+      s"maxscale-cdc source built at ${sourceBuilds.size} sites: ${sourceBuilds.mkString(", ")}")
+    // each `new MockMaxScaleServer` belongs to the nearest def above it
+    val outside = for {
+      (name, lines) <- sources
+      (n, l) <- code(lines) if l.contains("new MockMaxScaleServer")
+      owner = lines.take(n).reverseIterator.collectFirst { case Def(d) => d }
+      if !owner.exists(drills)
+    } yield s"$name:$n (in ${owner.getOrElse("no def")})"
+    assert(outside.isEmpty,
+      "mock servers opened outside drainWire/drainContinuous:\n" + outside.mkString("\n"))
   }
 }
