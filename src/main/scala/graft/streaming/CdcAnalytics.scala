@@ -234,8 +234,9 @@ object CdcAnalytics {
 
   /** The continuous-plan drill (qc8–qc10): a mock server → the doc feed
     * projected under the doc DDL registered up front (no per-batch
-    * registry collect) → `plan` → parquet file sink at `evDir`, on
-    * RocksDB state, drained by [[drainByInputRows]]. */
+    * registry collect) → `plan` → [[StateStoreWaves]]' parquet file
+    * sink at `evDir`, under its RocksDB conf loan, drained by
+    * [[drainByInputRows]]. */
   private def drainContinuous(s: SparkSession, events: Seq[String], evDir: String,
       ckptPath: String, expectRows: Long, what: String,
       options: Map[String, String])(plan: DataFrame => DataFrame): Unit = {
@@ -245,17 +246,12 @@ object CdcAnalytics {
       case other => throw new IllegalStateException(s"bad DDL: $other")
     }
     val server = new MockMaxScaleServer(events = events, closeAfterEvents = false)
-    val prev = StateStoreLineDedup.setRocksDb(s)
-    try {
-      val q = plan(CdcProjection.projectLatest(
-          wireSource(s, server, DocTableName, options), reg, Database, DocTableName))
-        .writeStream.format("parquet").option("path", evDir)
-        .outputMode("append").option("checkpointLocation", ckptPath).start()
+    try StateStoreWaves.withRocksDb(s) {
+      val q = StateStoreWaves.startParquetSink(plan(CdcProjection.projectLatest(
+          wireSource(s, server, DocTableName, options), reg, Database, DocTableName)),
+        evDir, ckptPath)
       try drainByInputRows(q, expectRows, what) finally q.stop()
-    } finally {
-      StateStoreLineDedup.restoreConfs(s, prev)
-      server.close()
-    }
+    } finally server.close()
   }
 
   /** The batch's rows of `table` under the latest registered schema,
@@ -836,11 +832,8 @@ object CdcAnalytics {
     val tmp = graft.util.Scratch.dir("qc9-cdc")
     runStateStoreLineDedupPipeline(s, events, s"$tmp/events", s"$tmp/ckpt",
       events.size.toLong)
-    val owners = s.read.schema(OwnerEventSchema).parquet(s"$tmp/events")
-      .groupBy(col("chunk"))
-      .agg(min(struct(col("doc_id"), col("ck"))).as("owner"))
-      .select(col("chunk"), col("owner.doc_id").as("o_doc"),
-        col("owner.ck").as("o_ck"))
+    val owners = StateStoreLineDedup.foldOwners(
+      s.read.schema(OwnerEventSchema).parquet(s"$tmp/events"))
     val docs = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
     StateStoreLineDedup.lineDedupViaOwners(LlmText.lineChunks(docs), owners)
       .orderBy(col("doc_id"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.queries.LlmText
+import graft.streaming.StateStoreWaves.StateShape
 
 /** The current keep-first owner of one distinct line (= 10-token
   * chunk): the minimum (doc_id, ck) seen so far. */
@@ -47,43 +48,6 @@ final case class LineOwnerEvent(chunk: String, doc_id: Long, ck: Int)
   */
 object StateStoreLineDedup {
 
-  val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Session confs for every RocksDB-backed stateful drill: the provider
-    * plus CHANGELOG CHECKPOINTING — per-batch commits upload the batch's
-    * key-value delta instead of a full store snapshot (snapshots are
-    * produced asynchronously in the background), so micro-batch commit
-    * cost is O(batch), not O(state). Recovery replays snapshot +
-    * changelogs — the restart drills (q66f/q119f/qc14) run unchanged on
-    * the same checkpoint contract. */
-  val RocksDbConfs: Seq[(String, String)] = Seq(
-    "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      -> "true")
-
-  /** Set [[RocksDbConfs]] on the session, returning the previous values
-    * for [[restoreConfs]] — the scoped-override pattern shared by every
-    * wave runner / wire pipeline that flips the provider. */
-  def setRocksDb(spark: SparkSession): Seq[(String, Option[String])] = {
-    val prevs = RocksDbConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    RocksDbConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    prevs
-  }
-
-  def restoreConfs(spark: SparkSession,
-      prevs: Seq[(String, Option[String])]): Unit =
-    prevs.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-
-  /** Measured shape of one run, for the scale notes: state rows =
-    * distinct lines (≪ corpus chunks on a duplicative corpus), state
-    * bytes ≈ fixed per line. */
-  final case class StateShape(stateRows: Long, stateBytes: Long,
-      corpusChunks: Long, ownerEvents: Long)
-
   /** Fold of the state function: min (doc_id, ck) over arrivals ∪
     * current state; emit an event iff the owner changed. */
   private def updateOwner(chunk: String,
@@ -105,8 +69,8 @@ object StateStoreLineDedup {
 
   /** The stateful owner plan over a STREAMING (doc_id, ck, chunk)
     * relation — the single flatMapGroupsWithState hop shared by the
-    * MemoryStream wave driver ([[runWaves]]) and the continuous CDC
-    * wire pipeline (qc9). The group-by key is the chunk text; Spark's
+    * wave runner ([[runWaves]]) and the continuous CDC wire pipeline
+    * (qc9). The group-by key is the chunk text; Spark's
     * one shuffle here lands each occurrence on its state partition. */
   def ownerEvents(chunks: DataFrame): DataFrame =
     chunks
@@ -119,82 +83,25 @@ object StateStoreLineDedup {
         Encoders.product[LineOwnerState], Encoders.product[LineOwnerEvent])
       .toDF()
 
-  /** Stream `waves` of (doc_id, text) through the state function on the
-    * RocksDB provider and return (final owner relation, measured state
-    * shape). Each wave is one micro-batch (drained before the next is
-    * added), so retroactive ownership steals cross real batch
-    * boundaries.
-    *
-    * `restartAfterWave = Some(i)` STOPS the streaming query after wave
-    * `i` is drained and starts a fresh one on the SAME checkpoint — the
-    * crash/redeploy recovery path: the RocksDB owner state is restored
-    * from the checkpoint snapshot and the resumed query continues at
-    * the committed offset. A lost owner state would re-emit first-sight
-    * events with post-restart owners (breaking keep-first for lines
-    * whose owner arrived before the restart), which the drill spec's
-    * batch-equivalence pin catches. */
+  /** Stream `waves` of (doc_id, text) through the state function under
+    * [[StateStoreWaves]]' wave/restart contract and return (final owner
+    * relation, state shape: rows = distinct lines, bytes ≈ fixed per
+    * line); retroactive ownership steals cross real batch boundaries. */
   def runWaves(spark: SparkSession, waves: Seq[DataFrame],
       restartAfterWave: Option[Int] = None): (DataFrame, StateShape) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val prev = setRocksDb(spark)
-    val ckpt = graft.util.Scratch.dir("q119f-ckpt")
-    val mem = MemoryStream[(Long, String)](Encoders.tuple(
-      Encoders.scalaLong, Encoders.STRING), sqlCtx)
-    val events = ownerEvents(LlmText.lineChunks(
-      mem.toDF().select(col("_1").as("doc_id"), col("_2").as("text"))))
-    // normal runs use the memory sink (cheapest); a RESTART drill needs
-    // a sink that supports checkpoint recovery, which the memory sink
-    // does not — the parquet file sink does (and is the realistic
-    // production sink: its _spark_metadata commit log keeps the batch
-    // read below exactly-once even if a crash leaves orphan files)
-    val fileMode = restartAfterWave.isDefined
-    val evDir = if (fileMode)
-      graft.util.Scratch.dir("q119f-events") else ""
-    val sinkName = "line_owner_events_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val evSchema = events.toDF().schema
-    def start() =
-      if (fileMode) events.toDF().writeStream.format("parquet")
-        .option("path", evDir).outputMode("append")
-        .option("checkpointLocation", ckpt).start()
-      else events.toDF().writeStream.format("memory").queryName(sinkName)
-        .outputMode("append").option("checkpointLocation", ckpt).start()
-    def readEvents() =
-      if (fileMode) spark.read.schema(evSchema).parquet(evDir)
-      else spark.table(sinkName)
-    var q = start()
-    try {
-      waves.zipWithIndex.foreach { case (w, i) =>
-        mem.addData(w.select(col("doc_id"), col("text")).collect()
-          .map(r => (r.getLong(0), r.getString(1))).toSeq: _*)
-        q.processAllAvailable()
-        if (restartAfterWave.contains(i) && i < waves.size - 1) {
-          q.stop()
-          q = start()
-        }
-      }
-      val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
-      val allEvents = readEvents()
-      val shape = StateShape(
-        stateRows = st.map(_.numRowsTotal).sum,
-        stateBytes = st.map(_.memoryUsedBytes).sum,
-        corpusChunks = -1L, // filled by callers that know the corpus
-        ownerEvents = allEvents.count())
-      // owner events only ever decrease per chunk, so min == final
-      val owners = allEvents
-        .groupBy(col("chunk"))
-        .agg(min(struct(col("doc_id"), col("ck"))).as("owner"))
-        .select(col("chunk"), col("owner.doc_id").as("o_doc"),
-          col("owner.ck").as("o_ck"))
-        .localCheckpoint(true) // sever from the transient memory sink
-      (owners, shape)
-    } finally {
-      q.stop()
-      if (!fileMode) spark.catalog.dropTempView(sinkName)
-      restoreConfs(spark, prev)
-    }
+    val (events, shape) = StateStoreWaves.run(spark, "q119f", waves,
+      restartAfterWave)(docs => ownerEvents(LlmText.lineChunks(docs)))
+    (foldOwners(events).localCheckpoint(true), shape)
   }
+
+  /** Fold the owner-event stream to the final owner per chunk: owner
+    * events only ever decrease per chunk, so the min is the final one. */
+  def foldOwners(events: DataFrame): DataFrame =
+    events
+      .groupBy(col("chunk"))
+      .agg(min(struct(col("doc_id"), col("ck"))).as("owner"))
+      .select(col("chunk"), col("owner.doc_id").as("o_doc"),
+        col("owner.ck").as("o_ck"))
 
   /** The q119 output (doc_id, orig_chunks, kept_chunks, new_text) with
     * the keep decision taken from the state-store owners: keep iff this
@@ -294,59 +201,12 @@ object StateStoreLineDedup {
         col("w.ck").as("o_ck"))
 
   /** Stream `waves` of (op, doc_id, text) rows through the claimant
-    * state on the RocksDB provider; same drain/restart contract as
-    * [[runWaves]]. */
+    * state; same contract as [[runWaves]]. */
   def runOpWaves(spark: SparkSession, waves: Seq[DataFrame],
       restartAfterWave: Option[Int] = None): (DataFrame, StateShape) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val prev = setRocksDb(spark)
-    val ckpt = graft.util.Scratch.dir("q119g-ckpt")
-    val mem = MemoryStream[(String, Long, String)](Encoders.tuple(
-      Encoders.STRING, Encoders.scalaLong, Encoders.STRING), sqlCtx)
-    val chunks = LlmText.lineChunksKeeping(
-      mem.toDF().select(col("_1").as("op"), col("_2").as("doc_id"),
-        col("_3").as("text")), Seq("op"))
-    val events = opOwnerEvents(chunks.select(col("op"), col("doc_id"),
-      col("ck"), col("chunk")))
-    val fileMode = restartAfterWave.isDefined
-    val evDir = if (fileMode)
-      graft.util.Scratch.dir("q119g-events") else ""
-    val sinkName = "line_ver_events_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val evSchema = events.schema
-    def start() =
-      if (fileMode) events.writeStream.format("parquet")
-        .option("path", evDir).outputMode("append")
-        .option("checkpointLocation", ckpt).start()
-      else events.writeStream.format("memory").queryName(sinkName)
-        .outputMode("append").option("checkpointLocation", ckpt).start()
-    def readEvents() =
-      if (fileMode) spark.read.schema(evSchema).parquet(evDir)
-      else spark.table(sinkName)
-    var q = start()
-    try {
-      waves.zipWithIndex.foreach { case (w, i) =>
-        mem.addData(w.select(col("op"), col("doc_id"), col("text")).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq: _*)
-        q.processAllAvailable()
-        if (restartAfterWave.contains(i) && i < waves.size - 1) {
-          q.stop()
-          q = start()
-        }
-      }
-      val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
-      val all = readEvents().localCheckpoint(true)
-      val shape = StateShape(
-        stateRows = st.map(_.numRowsTotal).sum,
-        stateBytes = st.map(_.memoryUsedBytes).sum,
-        corpusChunks = -1L,
-        ownerEvents = all.count())
-      (foldVersionedOwners(all).localCheckpoint(true), shape)
-    } finally {
-      q.stop()
-      if (!fileMode) spark.catalog.dropTempView(sinkName)
-      restoreConfs(spark, prev)
-    }
+    val (events, shape) = StateStoreWaves.run(spark, "q119g", waves,
+      restartAfterWave)(docs => opOwnerEvents(
+        LlmText.lineChunksKeeping(docs, Seq("op"))))
+    (foldVersionedOwners(events).localCheckpoint(true), shape)
   }
 }

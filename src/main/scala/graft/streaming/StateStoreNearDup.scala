@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.queries.LlmText
+import graft.streaming.StateStoreWaves.StateShape
 
 /** The membership of one LSH band bucket — the value side of the
   * state-store index. `poisoned = true` marks a bucket that crossed the
@@ -131,13 +132,6 @@ object StateStoreNearDup {
   val KindMember = 2
   val KindTomb = 3
 
-  /** Measured shape of one run: state rows = distinct touched (band,
-    * bucket) pairs; bytes ≈ members × 8 + per-key overhead for buckets
-    * under the cap, O(1) for poisoned ones. The shingle sets never
-    * enter the store. */
-  final case class StateShape(stateRows: Long, stateBytes: Long,
-      candEvents: Long)
-
   /** Fold of the state function for one bucket: append the arrivals not
     * already present; under the cap, emit each NEW member paired with
     * every member that precedes it (old ∪ earlier-in-batch) — each pair
@@ -180,8 +174,8 @@ object StateStoreNearDup {
 
   /** The stateful candidate plan over a STREAMING (band, bkey, doc_id)
     * relation — the single flatMapGroupsWithState hop shared by the
-    * MemoryStream wave driver ([[runWaves]]) and the continuous CDC
-    * wire pipeline (qc8). The group-by key is the bucket; Spark's one
+    * wave runner ([[runWaves]]) and the continuous CDC wire pipeline
+    * (qc8). The group-by key is the bucket; Spark's one
     * shuffle here lands each band row on its state partition. */
   def candidateEvents(bandRows: DataFrame,
       cap: Int = LlmText.HotBucketCap): DataFrame =
@@ -241,76 +235,16 @@ object StateStoreNearDup {
   }
 
   /** Stream `waves` of band rows (band, bkey, doc_id — the flattened
-    * [[flatBands]] output) through the bucket-state function on the
-    * RocksDB provider; each wave is one micro-batch (drained before
-    * the next is added), so cross-wave pair discovery exercises real
-    * batch boundaries. Returns (accumulated candidate events, measured
-    * state shape).
-    *
-    * `restartAfterWave = Some(i)` STOPS the streaming query after wave
-    * `i` is drained and starts a fresh one on the SAME checkpoint — the
-    * crash/redeploy recovery path: the RocksDB state snapshot is
-    * restored from the checkpoint, the resumed query picks up at the
-    * committed offset, and the drill spec pins the accumulated events
-    * to the single-query run (a lost bucket state would re-emit pairs
-    * already found — or miss cross-restart pairs — and fail the pin). */
+    * [[flatBands]] output) through the bucket-state function under
+    * [[StateStoreWaves]]' wave/restart contract. Returns (accumulated
+    * candidate events, state shape): rows = distinct touched (band,
+    * bucket) pairs; bytes ≈ members × 8 + per-key overhead under the
+    * cap, O(1) once poisoned — the shingle sets never enter the store. */
   def runWaves(spark: SparkSession, waves: Seq[DataFrame],
       restartAfterWave: Option[Int] = None,
-      cap: Int = LlmText.HotBucketCap): (DataFrame, StateShape) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val prev = StateStoreLineDedup.setRocksDb(spark)
-    val ckpt = graft.util.Scratch.dir("q66f-ckpt")
-    val rowEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong,
-      Encoders.scalaLong)
-    val mem = MemoryStream[(Int, Long, Long)](rowEnc, sqlCtx)
-    val events = candidateEvents(mem.toDF()
-      .select(col("_1").as("band"), col("_2").as("bkey"),
-        col("_3").as("doc_id")), cap)
-    // normal runs use the memory sink (cheapest); a RESTART drill needs
-    // a sink that supports checkpoint recovery, which the memory sink
-    // does not — the parquet file sink does (and is the realistic
-    // production sink: its _spark_metadata commit log keeps the batch
-    // read below exactly-once even if a crash leaves orphan files)
-    val fileMode = restartAfterWave.isDefined
-    val evDir = if (fileMode)
-      graft.util.Scratch.dir("q66f-events") else ""
-    val sinkName = "neardup_cand_events_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val evSchema = events.schema
-    def start() =
-      if (fileMode) events.writeStream.format("parquet")
-        .option("path", evDir).outputMode("append")
-        .option("checkpointLocation", ckpt).start()
-      else events.writeStream.format("memory").queryName(sinkName)
-        .outputMode("append").option("checkpointLocation", ckpt).start()
-    def readEvents() =
-      if (fileMode) spark.read.schema(evSchema).parquet(evDir)
-      else spark.table(sinkName)
-    var q = start()
-    try {
-      waves.zipWithIndex.foreach { case (w, i) =>
-        mem.addData(w.collect().map(r =>
-          (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq: _*)
-        q.processAllAvailable()
-        if (restartAfterWave.contains(i) && i < waves.size - 1) {
-          q.stop()
-          q = start()
-        }
-      }
-      val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
-      val cands = readEvents().localCheckpoint(true)
-      val shape = StateShape(
-        stateRows = st.map(_.numRowsTotal).sum,
-        stateBytes = st.map(_.memoryUsedBytes).sum,
-        candEvents = cands.count())
-      (cands, shape)
-    } finally {
-      q.stop()
-      if (!fileMode) spark.catalog.dropTempView(sinkName)
-      StateStoreLineDedup.restoreConfs(spark, prev)
-    }
-  }
+      cap: Int = LlmText.HotBucketCap): (DataFrame, StateShape) =
+    StateStoreWaves.run(spark, "q66f", waves, restartAfterWave)(
+      candidateEvents(_, cap))
 
   /** Flatten [[LlmText.bandKeys]]'s (doc_id, band, key struct) rows to
     * the (band, bkey, doc_id) wire tuples [[runWaves]] streams, at any
@@ -461,61 +395,12 @@ object StateStoreNearDup {
   }
 
   /** Stream `waves` of (band, bkey, doc_id, op) rows through the
-    * claimant bucket state on the RocksDB provider; same drain/restart
-    * contract as [[runWaves]]. Returns the RAW op-event relation
-    * (callers fold with [[foldOpEvents]]) plus the measured shape. */
+    * claimant bucket state on the RocksDB provider; same contract as
+    * [[runWaves]]. Returns the RAW op-event relation (callers fold with
+    * [[foldOpEvents]]) plus the measured shape. */
   def runOpWaves(spark: SparkSession, waves: Seq[DataFrame],
       restartAfterWave: Option[Int] = None,
-      cap: Int = LlmText.HotBucketCap): (DataFrame, StateShape) = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val prev = StateStoreLineDedup.setRocksDb(spark)
-    val ckpt = graft.util.Scratch.dir("q66g-ckpt")
-    val rowEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong,
-      Encoders.scalaLong, Encoders.STRING)
-    val mem = MemoryStream[(Int, Long, Long, String)](rowEnc, sqlCtx)
-    val events = opCandidateEvents(mem.toDF()
-      .select(col("_1").as("band"), col("_2").as("bkey"),
-        col("_3").as("doc_id"), col("_4").as("op")), cap)
-    val fileMode = restartAfterWave.isDefined
-    val evDir = if (fileMode)
-      graft.util.Scratch.dir("q66g-events") else ""
-    val sinkName = "neardup_op_events_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val evSchema = events.schema
-    def start() =
-      if (fileMode) events.writeStream.format("parquet")
-        .option("path", evDir).outputMode("append")
-        .option("checkpointLocation", ckpt).start()
-      else events.writeStream.format("memory").queryName(sinkName)
-        .outputMode("append").option("checkpointLocation", ckpt).start()
-    def readEvents() =
-      if (fileMode) spark.read.schema(evSchema).parquet(evDir)
-      else spark.table(sinkName)
-    var q = start()
-    try {
-      waves.zipWithIndex.foreach { case (w, i) =>
-        mem.addData(w.select(col("band"), col("bkey"),
-            col("doc_id"), col("op")).collect()
-          .map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
-            r.getString(3))).toSeq: _*)
-        q.processAllAvailable()
-        if (restartAfterWave.contains(i) && i < waves.size - 1) {
-          q.stop()
-          q = start()
-        }
-      }
-      val st = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
-      val all = readEvents().localCheckpoint(true)
-      val shape = StateShape(
-        stateRows = st.map(_.numRowsTotal).sum,
-        stateBytes = st.map(_.memoryUsedBytes).sum,
-        candEvents = all.count())
-      (all, shape)
-    } finally {
-      q.stop()
-      if (!fileMode) spark.catalog.dropTempView(sinkName)
-      StateStoreLineDedup.restoreConfs(spark, prev)
-    }
-  }
+      cap: Int = LlmText.HotBucketCap): (DataFrame, StateShape) =
+    StateStoreWaves.run(spark, "q66g", waves, restartAfterWave)(
+      opCandidateEvents(_, cap))
 }

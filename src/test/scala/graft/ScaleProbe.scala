@@ -80,14 +80,14 @@ object ScaleProbe {
     val (_, lShape) = StateStoreLineDedup.runWaves(spark, lineWaves)
     val nChunks = LlmText.lineChunks(docs).count()
     println(s"PROBE q119f_state_rows=${lShape.stateRows} bytes=${lShape.stateBytes} " +
-      s"corpus_chunks=$nChunks owner_events=${lShape.ownerEvents}")
+      s"corpus_chunks=$nChunks owner_events=${lShape.events}")
     val sig = LlmText.nearDupState(docs).localCheckpoint(true)
     val (_, nShape) = StateStoreNearDup.runWaves(spark, Seq(
       StateStoreNearDup.flatBands(sig.where(col("doc_id") % 2 === 0)),
       StateStoreNearDup.flatBands(sig.where(col("doc_id") % 2 === 1))))
     val nBandRows = sig.count() * 8
     println(s"PROBE q66f_state_rows=${nShape.stateRows} bytes=${nShape.stateBytes} " +
-      s"band_rows=$nBandRows cand_events=${nShape.candEvents}")
+      s"band_rows=$nBandRows cand_events=${nShape.events}")
 
     // r13 (VERDICT r12 item 1): hot-bucket poisoning at the REAL cap on
     // the adversarial corpus — buckets CROSS the cap mid-stream, their
@@ -170,7 +170,7 @@ object ScaleProbe {
       StateStoreNearDup.flatBands(sig.where(col("doc_id") % 2 === 0), 4, 4),
       StateStoreNearDup.flatBands(sig.where(col("doc_id") % 2 === 1), 4, 4)))
     println(s"PROBE q66j_state_rows=${hpShape.stateRows} bytes=${hpShape.stateBytes} " +
-      s"band_rows=${sig.count() * 4} cand_events=${hpShape.candEvents}")
+      s"band_rows=${sig.count() * 4} cand_events=${hpShape.events}")
     // r13 (VERDICT r12 item 3): the BPE trainer at scale — the wide
     // native-retokenize loop must reach >= 8k merges on the derived
     // sf1 corpus within ~2x the 1k-configuration's wall (the trainer,
@@ -217,7 +217,7 @@ object ScaleProbe {
       opWave("insert", col("doc_id") % 2 === 1),
       opWave("delete", col("doc_id") % 7 === 0)))
     println(s"PROBE q66k_state_rows=${wShape.stateRows} bytes=${wShape.stateBytes} " +
-      s"band_rows=${sig32.count() * 8} op_events=${wShape.candEvents}")
+      s"band_rows=${sig32.count() * 8} op_events=${wShape.events}")
 
     spark.stop()
   }

@@ -54,6 +54,7 @@ class CdcDemoSpec extends AnyFunSuite with SparkTestSession {
       // stopping the query unblocks main's awaitTermination
       spark.streams.active.filter(q => !before(q.id))
         .foreach(q => try q.stop() catch { case _: Throwable => () })
+      server.close()
     }
     runner.join(15000)
     assert(!runner.isAlive, "CdcDemo.main did not return after its query was stopped")

@@ -192,6 +192,6 @@ class AvroWireSpec extends AnyFunSuite with SparkTestSession {
       assert(seqs == (1L to n.toLong))
       // the writer schema arrived as an in-band ddl row
       assert(spark.table("cdc_avro").where(col("kind") === "ddl").count() == 1)
-    } finally q.stop()
+    } finally { q.stop(); server.close() }
   }
 }

@@ -218,7 +218,7 @@ class CdcEndToEndSpec extends AnyFunSuite with SparkTestSession {
       // both versions were actually delivered
       val allVers = batches.flatten.filter(_._1 == "dml").map(_._2).distinct.sorted
       assert(allVers == Seq(1, 2))
-    } finally q.stop()
+    } finally { q.stop(); server.close() }
   }
 
   test("checkpoint restart resumes without offset underflow") {
@@ -269,7 +269,7 @@ class CdcEndToEndSpec extends AnyFunSuite with SparkTestSession {
     try {
       assert(q.awaitTermination(30000), "AvailableNow query did not terminate")
       assert(spark.table("cdc_avail").count() == 6)
-    } finally q.stop()
+    } finally { q.stop(); server.close() }
   }
 
   test("multi-table fan-in: one source per table, unioned downstream") {

@@ -82,7 +82,7 @@ class CdcSourcePartitionSpec extends AnyFunSuite with SparkTestSession {
       assert(parts.flatten == script.map(expected(_, 1)))
       // a small batch stays one partition
       assert(read(stream, CdcOffset(1), CdcOffset(11)).map(_.size) == Seq(10))
-    } finally stream.stop()
+    } finally { stream.stop(); server.close() }
   }
 
   test("a split batch collects in wire order and splitBatchesAtDdl still cuts at each DDL") {
@@ -103,7 +103,7 @@ class CdcSourcePartitionSpec extends AnyFunSuite with SparkTestSession {
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("cdc-split-ddl").toString).start()
     try assert(q.awaitTermination(60000), "AvailableNow query did not terminate")
-    finally q.stop()
+    finally { q.stop(); server.close() }
     val batches = perBatch.toArray(Array.empty[(Long, Int, Seq[Row])]).toSeq.sortBy(_._1)
       .filter(_._3.nonEmpty)
     // the whole script, in order, exactly once
@@ -139,7 +139,7 @@ class CdcSourcePartitionSpec extends AnyFunSuite with SparkTestSession {
       val planned = stream.latestOffset(committed, ReadLimit.allAvailable()).asInstanceOf[CdcOffset]
       read(stream, committed, planned)
       (committed, planned)
-    } finally stream.stop()
+    } finally { stream.stop(); first.close() }
     assert(start == CdcOffset(11, "0-1-10", Int.box(1)))
     assert(end.index == script.size)
 
@@ -156,7 +156,7 @@ class CdcSourcePartitionSpec extends AnyFunSuite with SparkTestSession {
       assert(second.requestDataReceived == "REQUEST-DATA example.users.1 0-1-10")
       assert(parts.size > 1)
       assert(parts.flatten == script.drop(11).map(expected(_, 1)))
-    } finally restarted.stop()
+    } finally { restarted.stop(); second.close() }
   }
 
   test("a restart numbers the resumed feed from the adopted offset, however much is buffered first") {
@@ -171,7 +171,7 @@ class CdcSourcePartitionSpec extends AnyFunSuite with SparkTestSession {
       read(stream, init, c)
       stream.commit(c)
       c
-    } finally stream.stop()
+    } finally { stream.stop(); first.close() }
     assert(committed == CdcOffset(11, "0-1-10", Int.box(1)))
 
     // the resumed feed is the re-sent DDL plus the DMLs after the GTID;
@@ -188,6 +188,6 @@ class CdcSourcePartitionSpec extends AnyFunSuite with SparkTestSession {
       assert(end.index == start.index + resumed)
       assert(read(restarted, start, end).flatten ==
         (script.head +: script.drop(11)).map(expected(_, 1)))
-    } finally restarted.stop()
+    } finally { restarted.stop(); second.close() }
   }
 }

@@ -109,7 +109,7 @@ class CdcSourceSpec extends AnyFunSuite with SparkTestSession {
       stream.commit(CdcOffset(100))
       eventually(())(
         stream.reportLatestOffset().asInstanceOf[CdcOffset].index == 200L)
-    } finally stream.stop()
+    } finally { stream.stop(); server.close() }
   }
 
   test("bufferSize and connectTimeoutMs options pass through to the client") {

@@ -42,7 +42,7 @@ class StateStoreLineDedupSpec extends AnyFunSuite with SparkTestSession {
     assert(shape.stateBytes > 0)
     // ownership events: one per line at first sight + one per steal —
     // bounded by chunk arrivals, always at least the line count
-    assert(shape.ownerEvents >= nLines && shape.ownerEvents <= nChunks)
+    assert(shape.events >= nLines && shape.events <= nChunks)
   }
 
   test("RocksDB owner state survives a query restart between waves") {
@@ -59,8 +59,8 @@ class StateStoreLineDedupSpec extends AnyFunSuite with SparkTestSession {
     // the corruption in the owner relation, the count cannot)
     assert(o2.except(o1).isEmpty && o1.except(o2).isEmpty,
       "restarted run's owner relation differs")
-    assert(s2.ownerEvents == s1.ownerEvents,
-      s"event count changed across restart: ${s1.ownerEvents} -> ${s2.ownerEvents}")
+    assert(s2.events == s1.events,
+      s"event count changed across restart: ${s1.events} -> ${s2.events}")
     assert(s2.stateRows == s1.stateRows)
     val chunks = LlmText.lineChunks(src).localCheckpoint(true)
     assert(asMap(StateStoreLineDedup.lineDedupViaOwners(chunks, o2)) ==
@@ -89,7 +89,28 @@ class StateStoreLineDedupSpec extends AnyFunSuite with SparkTestSession {
     val naive = asMap(LlmText.lineDedupStats(fullChunks))
       .filter { case (k, _) => k % 7 != 0 }
     assert(naive != want, "fixture drift: retraction not exercised")
-    assert(shape.ownerEvents > 0)
+    assert(shape.events > 0)
+  }
+
+  test("q119g: claimant state survives a query restart between op waves") {
+    val src = docsDf
+    def wave(op: String, pred: org.apache.spark.sql.Column) = src.where(pred)
+      .select(lit(op).as("op"), col("doc_id"), col("text"))
+    val waves = Seq(
+      wave("insert", col("doc_id") % 2 === 1),
+      wave("insert", col("doc_id") % 2 === 0),
+      wave("delete", col("doc_id") % 7 === 0))
+    val (o1, s1) = StateStoreLineDedup.runOpWaves(spark, waves)
+    val (o2, s2) = StateStoreLineDedup.runOpWaves(spark, waves,
+      restartAfterWave = Some(1))
+    // the delete wave runs in the resumed query: a lost claimant state
+    // could not re-elect the next claimant of a deleted owner's lines,
+    // and its fresh versions would change the event count
+    assert(o2.except(o1).isEmpty && o1.except(o2).isEmpty,
+      "restarted run's owner relation differs")
+    assert(s2.events == s1.events,
+      s"event count changed across restart: ${s1.events} -> ${s2.events}")
+    assert(s2.stateRows == s1.stateRows)
   }
 
   test("q119g: tombstones win permanently; the versioned fold is load-bearing") {
@@ -137,8 +158,8 @@ class StateStoreLineDedupSpec extends AnyFunSuite with SparkTestSession {
     assert(o.length == 1 && o(0).getLong(1) == 2L,
       "the later, smaller doc id did not take line ownership")
     // the steal is visible as a SECOND event for the same line key
-    assert(shape.ownerEvents >= 3, // 2 first-sights + >=1 steal
-      s"expected a steal event, saw ${shape.ownerEvents} events")
+    assert(shape.events >= 3, // 2 first-sights + >=1 steal
+      s"expected a steal event, saw ${shape.events} events")
     import graft.queries.LlmText
     val all = w1.union(w2)
     val got = asMap(StateStoreLineDedup.lineDedupViaOwners(

@@ -44,7 +44,7 @@ class StateStoreNearDupSpec extends AnyFunSuite with SparkTestSession {
     assert(shape.stateRows == nBuckets,
       s"state rows ${shape.stateRows} != distinct buckets $nBuckets")
     assert(shape.stateBytes > 0)
-    assert(shape.candEvents >= got.count())
+    assert(shape.events >= got.count())
   }
 
   test("rowBandBuckets equals flatBands byte-for-byte per doc, at every design") {
@@ -117,8 +117,8 @@ class StateStoreNearDupSpec extends AnyFunSuite with SparkTestSession {
     val p2 = StateStoreNearDup.foldCandEvents(c2)
     assert(p2.except(p1).isEmpty && p1.except(p2).isEmpty,
       "restarted run's candidate set differs")
-    assert(s2.candEvents == s1.candEvents,
-      s"event count changed across restart: ${s1.candEvents} -> ${s2.candEvents}")
+    assert(s2.events == s1.events,
+      s"event count changed across restart: ${s1.events} -> ${s2.events}")
     assert(s2.stateRows == s1.stateRows)
   }
 
@@ -219,8 +219,8 @@ class StateStoreNearDupSpec extends AnyFunSuite with SparkTestSession {
     val p2 = StateStoreNearDup.foldOpEvents(e2)
     assert(p2.except(p1).isEmpty && p1.except(p2).isEmpty,
       "restarted run's surviving pair set differs")
-    assert(s2.candEvents == s1.candEvents,
-      s"event count changed across restart: ${s1.candEvents} -> ${s2.candEvents}")
+    assert(s2.events == s1.events,
+      s"event count changed across restart: ${s1.events} -> ${s2.events}")
     assert(s2.stateRows == s1.stateRows)
   }
 
@@ -337,7 +337,7 @@ class StateStoreNearDupSpec extends AnyFunSuite with SparkTestSession {
     // post-poisoning arrivals of run A into it. If the r12 design were
     // still accruing membership, stateBytes would grow with the
     // arrivals; under poison + ledger the state is a constant marker
-    def shapeAfter(extra: Long): StateStoreNearDup.StateShape = {
+    def shapeAfter(extra: Long): StateStoreWaves.StateShape = {
       val (ev, shape) = StateStoreNearDup.runWaves(spark, Seq(
         mk((1L to 10L)),
         mk((100L until (100L + extra)))), cap = 3)

@@ -81,4 +81,20 @@ class StateWriterGuardSpec extends AnyFunSuite {
     assert(outside.isEmpty,
       "mock servers opened outside drainWire/drainContinuous:\n" + outside.mkString("\n"))
   }
+
+  test("RocksDB waves start in one place: MemoryStream only in StateStoreWaves, no memory sink, two stream starts") {
+    def sites(needle: String) = for {
+      (name, lines) <- sources
+      (n, l) <- code(lines) if l.contains(needle)
+    } yield s"$name:$n"
+    val memoryStreams = sites("MemoryStream").filterNot(_.startsWith("StateStoreWaves.scala:"))
+    assert(memoryStreams.isEmpty,
+      s"MemoryStream outside StateStoreWaves: ${memoryStreams.mkString(", ")}")
+    val memorySinks = sites("format(\"memory\")")
+    assert(memorySinks.isEmpty, s"memory sink at ${memorySinks.mkString(", ")}")
+    // drainWire's foreachBatch and StateStoreWaves' parquet file sink
+    val starts = sites("writeStream")
+    assert(starts.size == 2,
+      s"writeStream at ${starts.size} code lines: ${starts.mkString(", ")}")
+  }
 }
