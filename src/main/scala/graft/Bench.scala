@@ -11,14 +11,17 @@ import org.apache.spark.sql.SparkSession
   * doesn't land on the first measured query.
   */
 object Bench {
+
+  /** `spark.sql.shuffle.partitions` for a `local[cpus]` master: the
+    * core count itself. local[N] also accepts '*' (all cores), which is
+    * not a shuffle-partition count — it maps to the machine's core
+    * count instead of failing query planning. */
+  def shufflePartitions(cpus: String): String =
+    cpus.toIntOption.getOrElse(Runtime.getRuntime.availableProcessors()).toString
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // ADVICE r14: local[N] accepts '*' (all cores), which is not a
-    // shuffle-partition count — fall back to the machine's core count
-    // for the conf instead of failing query planning
-    val shufflePartitions = cpus.toIntOption.getOrElse(
-      Runtime.getRuntime.availableProcessors()).toString
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       // shuffle partitions FOLLOW the configured core count (the guide's
@@ -28,7 +31,7 @@ object Bench {
       // 4× undersized tasks. At the driver's 32-core pass this is
       // exactly the previous value — the round-over-round per-query
       // numbers stay comparable.
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.shuffle.partitions", shufflePartitions(cpus))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")

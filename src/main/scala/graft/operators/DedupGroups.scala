@@ -21,6 +21,14 @@ import org.apache.spark.sql.functions._
   */
 object DedupGroups {
 
+  /** Group sizes of a (doc_id, rep) grouping: (rep_doc, n_members) per
+    * representative, ordered by rep_doc — the report every dedup-group
+    * entry emits. */
+  def sizes(groups: DataFrame): DataFrame =
+    groups.groupBy(col("rep").as("rep_doc"))
+      .agg(count(lit(1)).as("n_members"))
+      .orderBy(col("rep_doc"))
+
   /** @param pairs undirected edges, columns (doc_a, doc_b).
     * @return (doc_id, rep) for every doc appearing in at least one
     *         pair; `rep` = min doc id of its component. Rounds scale

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.operators.DedupGroups
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -367,7 +368,7 @@ object LlmText {
 
   private[graft] def dedupComponents(s: SparkSession, d: String): DataFrame =
     compCache.getOrElseUpdate(s, d,
-      graft.operators.DedupGroups.components(bandedNearDupPairs(s, d)))
+      DedupGroups.components(bandedNearDupPairs(s, d)))
 
   /** DuckDB CTE chain ending in `pairs(doc_a, doc_b, jaccard)` —
     * mirrors [[bandedNearDupPairs]]. */
@@ -375,8 +376,8 @@ object LlmText {
 
   /** The dedup-groups oracle (q57's connected components as one
     * recursive CTE over the banded pair chain), restricted to a docs
-    * predicate — shared verbatim by q66 (no predicate), q66b and the
-    * qc7 wire composition (survivors only). Output (rep_doc,
+    * predicate — shared verbatim by q57 and q66 (no predicate), q66b
+    * and the qc7 wire composition (survivors only). Output (rep_doc,
     * n_members) ordered by rep. */
   private[graft] def dedupGroupsOracleSqlOver(docsPred: String): String =
     dedupGroupsOracleSqlOverBr(docsPred, 8, 2)
@@ -855,7 +856,7 @@ object LlmText {
           Seq(35, 50, 70).map { t => () => {
           val p = graft.util.StageAudit.record(s"q130:filter-t$t",
             pairs.where(col("jaccard") >= t / 100.0)).localCheckpoint(true)
-          val comp = graft.operators.DedupGroups.components(p)
+          val comp = DedupGroups.components(p)
           val agg = graft.util.StageAudit.record(s"q130:cluster-agg-t$t",
             comp.groupBy(col("rep")).agg(count(lit(1)).as("m"))
               .agg(count(lit(1)).as("ncl"), coalesce(sum(col("m")), lit(0L)).as("nmem")))
@@ -906,19 +907,8 @@ object LlmText {
       // same banded pair CTEs. Output: one row per dedup group — the
       // representative (min doc id) and the group size, i.e. n_members-1
       // docs would be dropped.
-      (s, d) => dedupComponents(s, d)
-        .groupBy(col("rep").as("rep_doc"))
-        .agg(count(lit(1)).as("n_members"))
-        .orderBy(col("rep_doc")),
-      Some("WITH RECURSIVE " + BandedPairsSqlCtes + ", " +
-        "edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs " +
-        "UNION SELECT doc_b, doc_a FROM pairs), " +
-        "nodes AS (SELECT DISTINCT src AS doc FROM edges), " +
-        "reach(doc, r) AS (SELECT doc, doc FROM nodes " +
-        "UNION SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.doc), " +
-        "rep AS (SELECT doc, MIN(r) AS rep_doc FROM reach GROUP BY doc) " +
-        "SELECT rep_doc, COUNT(*) AS n_members FROM rep " +
-        "GROUP BY rep_doc ORDER BY rep_doc")),
+      (s, d) => DedupGroups.sizes(dedupComponents(s, d)),
+      Some(dedupGroupsOracleSqlOver(""))),
 
     QueryDef("q49_langid_confusion",
       // n-gram-profile language-ID: per-lang top-20 token profile learned
@@ -1071,20 +1061,12 @@ object LlmText {
       // form degenerates: one partition holding millions of rows).
       // Ranking ties break on doc_id; the emitted score uses the
       // engine-portable floor(x*1e4+0.5)/1e4 rounding (q22 doctrine).
-      (s, d) => {
-        val topk = udaf(new graft.functions.TopKRows(5),
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaDouble,
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaLong))
-        qualityScored(s, d)
-          .groupBy(col("source"))
-          .agg(topk(col("score"), col("doc_id"), lit(0L)).as("top"))
-          .select(col("source"), posexplode(col("top")).as(Seq("pos", "e")))
-          .select(col("source"), (col("pos") + 1).as("rk"), col("e._2").as("doc_id"),
-            (floor(col("e._1") * 10000 + lit(0.5)) / 10000).as("score"))
-          .orderBy(col("source"), col("rk"))
-      },
+      (s, d) =>
+        graft.functions.TopKRows.ranked(qualityScored(s, d), 5, Seq("source"),
+            col("score"), col("doc_id"))
+          .select(col("source"), col("rank").as("rk"), col("id").as("doc_id"),
+            (floor(col("score") * 10000 + lit(0.5)) / 10000).as("score"))
+          .orderBy(col("source"), col("rk")),
       Some("WITH q AS (SELECT doc_id, source, len(string_split(text,' ')) AS n_tok, " +
         "len(list_filter(string_split(text,' '), x -> x IN " +
         "('the','a','of','and','to','in','is','on','for','it'))) AS n_stop, " +

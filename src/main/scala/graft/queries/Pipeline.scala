@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.operators.DedupGroups
+import graft.streaming.{IncrementalNearDup, StateStoreNearDup}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1054,7 +1056,6 @@ object Pipeline {
       // agg runs over component members only (never the full corpus — no
       // giant null-key window partition at scale).
       (s, d) => {
-        import graft.operators.DedupGroups
         val comps = DedupGroups.components(LlmText.bandedNearDupPairs(s, d))
         val base = docs(s, d)
           .withColumn("n_tok", size(split(col("text"), " ")))
@@ -1137,7 +1138,6 @@ object Pipeline {
       // deterministic; final state is arrival-order independent by
       // construction.
       (s, d) => {
-        import graft.streaming.IncrementalNearDup
         val statePath = graft.util.Scratch.dir("q66-incremental")
         val inc = new IncrementalNearDup(statePath)
         // the whole corpus is known here, so each wave gets its slice
@@ -1154,13 +1154,11 @@ object Pipeline {
         // oracle hash is the gate). The production analog is standard:
         // size shuffle partitions to the micro-batch, not the cluster
         // default.
-        graft.util.Confs.withMicroBatch(s) {
+        DedupGroups.sizes(graft.util.Confs.withMicroBatch(s) {
           inc.processState(st.where(col("doc_id") % 2 === 0), 0L)
           inc.processState(st.where(col("doc_id") % 2 === 1), 1L)
           inc.groups(s)
-        }.groupBy(col("rep").as("rep_doc"))
-          .agg(count(lit(1)).as("n_members"))
-          .orderBy(col("rep_doc"))
+        })
       },
       Some(LlmText.dedupGroupsOracleSqlOver(""))),
 
@@ -1180,7 +1178,6 @@ object Pipeline {
       // StateStoreNearDupSpec: rows = distinct touched buckets, a few
       // longs per member — the shingle sets never enter the store.
       (s, d) => {
-        import graft.streaming.StateStoreNearDup
         val st = LlmText.bigramStateCached(s, d)
         // micro-batch waves + fixture-scale fold/verify/CC tail sized to
         // MicroBatchPartitions (the q66 doctrine — see Confs.withMicroBatch)
@@ -1195,10 +1192,7 @@ object Pipeline {
         val verified = LlmText.verifyPairs(
           StateStoreNearDup.foldCandEvents(cands, recoverBudget = 0),
           st.select(col("doc_id"), col("hs"), col("nbg")))
-        graft.operators.DedupGroups.components(verified)
-          .groupBy(col("rep").as("rep_doc"))
-          .agg(count(lit(1)).as("n_members"))
-          .orderBy(col("rep_doc"))
+        DedupGroups.sizes(DedupGroups.components(verified))
         }
       },
       Some(LlmText.dedupGroupsOracleSqlOver(""))),
@@ -1220,20 +1214,17 @@ object Pipeline {
       // interleaved delete waves, rep re-election, component splits,
       // tombstone-wins re-inserts, and physical compaction.
       (s, d) => {
-        import graft.streaming.IncrementalNearDup
         val statePath = graft.util.Scratch.dir("q66b-incremental")
         val inc = new IncrementalNearDup(statePath)
         val st = LlmText.bigramStateCached(s, d)
         // same micro-batch partition sizing as q66 (see its comment)
-        graft.util.Confs.withMicroBatch(s) {
+        DedupGroups.sizes(graft.util.Confs.withMicroBatch(s) {
           inc.processState(st.where(col("doc_id") % 2 === 0), 0L)
           inc.processState(st.where(col("doc_id") % 2 === 1), 1L)
           inc.retractBatch(
             st.where(col("doc_id") % 7 === 0).select(col("doc_id")), 2L)
           inc.groups(s)
-        }.groupBy(col("rep").as("rep_doc"))
-          .agg(count(lit(1)).as("n_members"))
-          .orderBy(col("rep_doc"))
+        })
       },
       Some(LlmText.dedupGroupsOracleSqlOver("doc_id % 7 <> 0"))),
 
@@ -1255,7 +1246,6 @@ object Pipeline {
       // splits) exactly as batch q57 over the SURVIVORS — the same
       // oracle as q66b, no retraction machinery anywhere in it.
       (s, d) => {
-        import graft.streaming.StateStoreNearDup
         val st = LlmText.bigramStateCached(s, d)
         def wave(op: String, pred: org.apache.spark.sql.Column) =
           StateStoreNearDup.flatBands(st.where(pred))
@@ -1269,10 +1259,7 @@ object Pipeline {
           StateStoreNearDup.foldOpEvents(events),
           st.where(col("doc_id") % 7 =!= 0)
             .select(col("doc_id"), col("hs"), col("nbg")))
-        graft.operators.DedupGroups.components(verified)
-          .groupBy(col("rep").as("rep_doc"))
-          .agg(count(lit(1)).as("n_members"))
-          .orderBy(col("rep_doc"))
+        DedupGroups.sizes(DedupGroups.components(verified))
         }
       },
       Some(LlmText.dedupGroupsOracleSqlOverBr("doc_id % 7 <> 0", 8, 2,
@@ -1297,7 +1284,6 @@ object Pipeline {
       // bandKeys, the migration being load-bearing (a mid-jaccard
       // (8, 2)-only pair must vanish), idempotence, and sidecar heal.
       (s, d) => {
-        import graft.streaming.IncrementalNearDup
         val statePath = graft.util.Scratch.dir("q66h-reband")
         val st = LlmText.bigramStateCached(s, d)
         graft.util.Confs.withMicroBatch(s) {
@@ -1306,10 +1292,7 @@ object Pipeline {
         IncrementalNearDup.rebandMigrate(s, statePath, 4, 4)
         val inc44 = new IncrementalNearDup(statePath, nBands = 4, bandR = 4)
         inc44.processState(st.where(col("doc_id") % 2 === 1), 1L)
-        inc44.groups(s)
-          .groupBy(col("rep").as("rep_doc"))
-          .agg(count(lit(1)).as("n_members"))
-          .orderBy(col("rep_doc"))
+        DedupGroups.sizes(inc44.groups(s))
         }
       },
       Some(LlmText.dedupGroupsOracleSqlOverBr("", 4, 4))),
@@ -1347,7 +1330,6 @@ object Pipeline {
       // equivalence, new-salt byte parity, suppressed-pair
       // regeneration, and idempotence.
       (s, d) => {
-        import graft.streaming.IncrementalNearDup
         val statePath = graft.util.Scratch.dir("q66i-widen")
         val st = LlmText.bigramStateCached(s, d)
         graft.util.Confs.withMicroBatch(s) {
@@ -1356,10 +1338,7 @@ object Pipeline {
         IncrementalNearDup.widenMigrate(s, statePath, docs(s, d), 8, 4)
         val inc84 = new IncrementalNearDup(statePath, nBands = 8, bandR = 4)
         inc84.processBatch(docs(s, d).where(col("doc_id") % 2 === 1), 1L)
-        inc84.groups(s)
-          .groupBy(col("rep").as("rep_doc"))
-          .agg(count(lit(1)).as("n_members"))
-          .orderBy(col("rep_doc"))
+        DedupGroups.sizes(inc84.groups(s))
         }
       },
       Some(LlmText.dedupGroupsOracleSqlOverBr("", 8, 4))),
@@ -1378,7 +1357,6 @@ object Pipeline {
       // q66h migration is held to, certifying that the store path and
       // the migrated parquet path implement one design.
       (s, d) => {
-        import graft.streaming.StateStoreNearDup
         val st = LlmText.bigramStateCached(s, d)
         graft.util.Confs.withMicroBatch(s) {
         val (cands, _) = StateStoreNearDup.runWaves(s, Seq(
@@ -1389,10 +1367,7 @@ object Pipeline {
         val verified = LlmText.verifyPairs(
           StateStoreNearDup.foldCandEvents(cands, recoverBudget = 0),
           st.select(col("doc_id"), col("hs"), col("nbg")))
-        graft.operators.DedupGroups.components(verified)
-          .groupBy(col("rep").as("rep_doc"))
-          .agg(count(lit(1)).as("n_members"))
-          .orderBy(col("rep_doc"))
+        DedupGroups.sizes(DedupGroups.components(verified))
         }
       },
       Some(LlmText.dedupGroupsOracleSqlOverBr("", 4, 4))),
@@ -1413,7 +1388,6 @@ object Pipeline {
       // store is a REBUILD through a fresh checkpoint, which is exactly
       // what the qc14 wire composition drills from the CDC replica.
       (s, d) => {
-        import graft.streaming.StateStoreNearDup
         val st = LlmText.nearDupState(docs(s, d), nHashes = 32)
           .localCheckpoint(true)
         def wave(op: String, pred: org.apache.spark.sql.Column) =
@@ -1428,10 +1402,7 @@ object Pipeline {
           StateStoreNearDup.foldOpEvents(events),
           st.where(col("doc_id") % 7 =!= 0)
             .select(col("doc_id"), col("hs"), col("nbg")))
-        graft.operators.DedupGroups.components(verified)
-          .groupBy(col("rep").as("rep_doc"))
-          .agg(count(lit(1)).as("n_members"))
-          .orderBy(col("rep_doc"))
+        DedupGroups.sizes(DedupGroups.components(verified))
         }
       },
       Some(LlmText.dedupGroupsOracleSqlOverBr("doc_id % 7 <> 0", 8, 4,
@@ -1462,7 +1433,6 @@ object Pipeline {
       // ScaleProbe measures poisoning + recovery parity on the
       // adversarial 10-identical-copies corpus at the REAL cap.
       (s, d) => {
-        import graft.streaming.StateStoreNearDup
         val st = LlmText.bigramStateCached(s, d)
         graft.util.Confs.withMicroBatch(s) {
         val (ev, _) = StateStoreNearDup.runWaves(s, Seq(
@@ -1474,10 +1444,7 @@ object Pipeline {
         val verified = LlmText.verifyPairs(
           StateStoreNearDup.foldCandEvents(ev),
           st.select(col("doc_id"), col("hs"), col("nbg")))
-        graft.operators.DedupGroups.components(verified)
-          .groupBy(col("rep").as("rep_doc"))
-          .agg(count(lit(1)).as("n_members"))
-          .orderBy(col("rep_doc"))
+        DedupGroups.sizes(DedupGroups.components(verified))
         }
       },
       Some(LlmText.dedupGroupsOracleSqlOverBr("", 8, 2,
@@ -1507,7 +1474,6 @@ object Pipeline {
       // (sweep idempotence, divert routing, bounded over-cap state,
       // retraction through the ledger, migration reset).
       (s, d) => {
-        import graft.streaming.IncrementalNearDup
         val statePath = graft.util.Scratch.dir("q66m-incremental")
         val inc = new IncrementalNearDup(statePath, hotBucketCap = 3)
         val st = LlmText.bigramStateCached(s, d)
@@ -1516,10 +1482,7 @@ object Pipeline {
         require(inc.poisonSweep(s) > 0,
           "q66m drill is vacuous: no bucket crossed the cap in wave 0")
         inc.processState(st.where(col("doc_id") % 2 === 1), 1L)
-        inc.groupsWithRecovery(s)
-          .groupBy(col("rep").as("rep_doc"))
-          .agg(count(lit(1)).as("n_members"))
-          .orderBy(col("rep_doc"))
+        DedupGroups.sizes(inc.groupsWithRecovery(s))
         }
       },
       Some(LlmText.dedupGroupsOracleSqlOverBr("", 8, 2,
@@ -2621,17 +2584,12 @@ object Pipeline {
       // ranked through its monotone transform ln(u)/w (one ln on the
       // exact integer ratio, one IEEE division by the INTEGER weight,
       // quantized to e-6 — the q67/q97 transcendental doctrine), ties
-      // break on doc_id. Selection is a TopKRows fold (consumer #6):
+      // break on doc_id. Selection is a TopKRows fold:
       // map-side ≤ 3-entry buffers per source, no window, no sort of
       // the corpus — at 100 TB re-drawing the same sample (the
       // reproducibility a training pipeline needs for ablations) is one
       // map-only scan + a 3·sources-row shuffle.
       (s, d) => {
-        val topk = udaf(new graft.functions.TopKRows(3),
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaDouble,
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaLong))
         // n_chars > 0 guard: a zero-length document would put -Infinity
         // (ln(u)/0) through the BIGINT cast — Long.MinValue in Spark but
         // a CAST error in DuckDB. Weight-zero items can never be sampled
@@ -2645,11 +2603,10 @@ object Pipeline {
             expr("CAST(floor(ln(CAST(u_e6 AS DOUBLE) / CAST(1000000 AS DOUBLE)) " +
               "/ CAST(n_chars AS DOUBLE) * 1000000 + CAST(0.5 AS DOUBLE)) AS BIGINT)")
               .as("key_e6"))
-        keyed.groupBy(col("source"))
-          .agg(topk(col("key_e6").cast("double"), col("doc_id"), lit(0L)).as("top"))
-          .select(col("source"), posexplode(col("top")).as(Seq("pos", "e")))
-          .select(col("source"), (col("pos") + 1).as("rk"), col("e._2").as("doc_id"),
-            col("e._1").cast("long").as("key_e6"))
+        graft.functions.TopKRows.ranked(keyed, 3, Seq("source"),
+            col("key_e6").cast("double"), col("doc_id"))
+          .select(col("source"), col("rank").as("rk"), col("id").as("doc_id"),
+            col("score").cast("long").as("key_e6"))
           .orderBy(col("source"), col("rk"))
       },
       Some("WITH keyed AS (SELECT source, doc_id, " +

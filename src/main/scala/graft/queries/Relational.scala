@@ -19,6 +19,15 @@ object Relational {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
+  /** The oracle of q18 and of its scale form q18b: top-3 lineitems per
+    * return flag by price, ties to the lower (orderkey, linenumber). */
+  private val Q18Sql: String =
+    "SELECT l_returnflag, rk, l_orderkey, l_linenumber, l_extendedprice FROM (" +
+      "SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice, " +
+      "ROW_NUMBER() OVER (PARTITION BY l_returnflag " +
+      "ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rk FROM lineitem) " +
+      "WHERE rk <= 3 ORDER BY l_returnflag, rk"
+
   def defs: Seq[QueryDef] = Seq(
     // ---- scans / projections / filters -------------------------------
     QueryDef("q01_scan_count",
@@ -234,11 +243,7 @@ object Relational {
             col("l_extendedprice"))
           .orderBy(col("l_returnflag"), col("rk"))
       },
-      Some("SELECT l_returnflag, rk, l_orderkey, l_linenumber, l_extendedprice FROM (" +
-        "SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice, " +
-        "ROW_NUMBER() OVER (PARTITION BY l_returnflag " +
-        "ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rk FROM lineitem) " +
-        "WHERE rk <= 3 ORDER BY l_returnflag, rk")),
+      Some(Q18Sql)),
 
     QueryDef("q18b_topk_heap",
       // The SCALE form of q18: same result, but computed with the
@@ -249,26 +254,14 @@ object Relational {
       // most k·groups·tasks tuples and NO full sort happens (PlanSpec
       // guards the plan windowless + partial-agg). Same oracle SQL as
       // q18 — the two forms must stay hash-identical.
-      (s, d) => {
-        val topk = udaf(new graft.functions.TopKRows(3),
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaDouble,
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaLong))
-        t(s, d, "lineitem")
-          .groupBy(col("l_returnflag"))
-          .agg(topk(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")).as("top"))
-          .select(col("l_returnflag"), posexplode(col("top")).as(Seq("pos", "e")))
-          .select(col("l_returnflag"), (col("pos") + 1).as("rk"),
-            col("e._2").as("l_orderkey"), col("e._3").as("l_linenumber"),
-            col("e._1").as("l_extendedprice"))
-          .orderBy(col("l_returnflag"), col("rk"))
-      },
-      Some("SELECT l_returnflag, rk, l_orderkey, l_linenumber, l_extendedprice FROM (" +
-        "SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice, " +
-        "ROW_NUMBER() OVER (PARTITION BY l_returnflag " +
-        "ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rk FROM lineitem) " +
-        "WHERE rk <= 3 ORDER BY l_returnflag, rk")),
+      (s, d) =>
+        graft.functions.TopKRows.ranked(t(s, d, "lineitem"), 3, Seq("l_returnflag"),
+            col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
+          .select(col("l_returnflag"), col("rank").as("rk"),
+            col("id").as("l_orderkey"), col("tie").as("l_linenumber"),
+            col("score").as("l_extendedprice"))
+          .orderBy(col("l_returnflag"), col("rk")),
+      Some(Q18Sql)),
 
     QueryDef("q19_rank_windows",
       (s, d) => {

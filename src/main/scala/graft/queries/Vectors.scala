@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.functions.TopKRows
 import graft.functions.VectorFunctions._
 import graft.operators.KMeansLloyd
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -79,10 +80,12 @@ object Vectors {
       .groupBy(col("vec_id")).agg(min(col("cand")).as("dup_of"))
   }
 
-  /** DuckDB CTE chain ending in `a2(vec_id, cell)` + `dups(vec_id,
-    * dup_of)` — mirrors [[semanticDups]] (2-round deterministic Lloyd's
-    * from the 4 lowest-id seeds, then within-cell exact cosine). */
-  private[queries] val SemDedupSqlCtes: String =
+  /** The DuckDB twin of [[lloydShared]]: the CTE chain `e` … `a2`,
+    * 2-round deterministic Lloyd's over the micro-unit components
+    * `comps(vec_id, d, xi)` from the 4 lowest-id seeds, ending in the
+    * assignment `a2(vec_id, cell)` with the second round's distances
+    * `d2` and centroids `c1` still in scope. Trailing comma, no WITH. */
+  private val LloydSqlCtes: String =
     "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
       "comps AS (SELECT vec_id, i AS d, CAST(floor(v[i+1] * 1000000 + 0.5) AS BIGINT) AS xi " +
       "FROM e CROSS JOIN (SELECT UNNEST(range(0,64)) AS i) ix), " +
@@ -96,7 +99,29 @@ object Vectors {
       "d2 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
       "FROM comps c JOIN c1 k USING (d) GROUP BY 1, 2), " +
       "a2 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-      "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d2) WHERE rn = 1), " +
+      "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d2) WHERE rn = 1), "
+
+  /** The DuckDB twin of [[trainPqBooks]]: one 2-round Lloyd's per PQ
+    * subspace in a single pass over `src(vec_id, sub, sd, xi)`, seeded
+    * from the 32 lowest ids' sub-vectors — CTEs `c0` … `d2`, each name
+    * prefixed with `prefix`, ending in the second round's per-subspace
+    * distances `d2(vec_id, sub, cell, dist)`. Trailing comma. */
+  private def pqLloydSqlCtes(prefix: String, src: String): String =
+    s"${prefix}c0 AS (SELECT sub, vec_id AS cell, sd, xi AS ci FROM $src WHERE vec_id < 32), " +
+      s"${prefix}d1 AS (SELECT c.vec_id, c.sub, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
+      s"FROM $src c JOIN ${prefix}c0 k ON k.sub = c.sub AND k.sd = c.sd GROUP BY 1, 2, 3), " +
+      s"${prefix}a1 AS (SELECT vec_id, sub, cell FROM (SELECT vec_id, sub, cell, ROW_NUMBER() OVER " +
+      s"(PARTITION BY vec_id, sub ORDER BY dist, cell) AS rn FROM ${prefix}d1) WHERE rn = 1), " +
+      s"${prefix}c1 AS (SELECT a.sub, a.cell, c.sd, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
+      s"FROM $src c JOIN ${prefix}a1 a ON a.vec_id = c.vec_id AND a.sub = c.sub GROUP BY 1, 2, 3), " +
+      s"${prefix}d2 AS (SELECT c.vec_id, c.sub, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
+      s"FROM $src c JOIN ${prefix}c1 k ON k.sub = c.sub AND k.sd = c.sd GROUP BY 1, 2, 3), "
+
+  /** DuckDB CTE chain ending in `a2(vec_id, cell)` + `dups(vec_id,
+    * dup_of)` — mirrors [[semanticDups]] (2-round deterministic Lloyd's
+    * from the 4 lowest-id seeds, then within-cell exact cosine). */
+  private[queries] val SemDedupSqlCtes: String =
+    LloydSqlCtes +
       // the CellCap sub-split, mirrored exactly from
       // KMeansLloyd.subSplitCells (the r10 sf1 sweep caught that this
       // oracle silently modeled the UNSPLIT join: at fixture scale
@@ -355,7 +380,6 @@ object Vectors {
       probeCents: Seq[KMeansLloyd.Centroid],
       qLo: Int = 1, qHi: Int = 5): DataFrame = {
     import s.implicits._
-    import graft.operators.KMeansLloyd
     val vecs = Tables(s, d, "embeddings")
       .select(col("vec_id"), KMeansLloyd.quantize(col("embedding")).as("xi"))
     val probes = KMeansLloyd.probeCells(
@@ -389,35 +413,14 @@ object Vectors {
     * parameter so the 100-query serving-SLA oracle (q144) reuses the
     * chain verbatim. */
   private def q90AdcSqlCtesFor(qLo: Int, qHi: Int): String =
-    "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "comps AS (SELECT vec_id, i AS d, CAST(floor(v[i+1] * 1000000 + 0.5) AS BIGINT) AS xi " +
-        "FROM e CROSS JOIN (SELECT UNNEST(range(0,64)) AS i) ix), " +
-        "c0 AS (SELECT vec_id AS cell, d, xi AS ci FROM comps WHERE vec_id < 4), " +
-        "d1 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c0 k USING (d) GROUP BY 1, 2), " +
-        "a1 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d1) WHERE rn = 1), " +
-        "c1 AS (SELECT a.cell, c.d, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
-        "FROM comps c JOIN a1 a USING (vec_id) GROUP BY 1, 2), " +
-        "d2 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c1 k USING (d) GROUP BY 1, 2), " +
-        "a2 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d2) WHERE rn = 1), " +
+    "WITH " + LloydSqlCtes +
         "p AS (SELECT vec_id AS query_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
         s"(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d2 WHERE vec_id BETWEEN $qLo AND $qHi) " +
         "WHERE rn <= 2), " +
         "pcm AS (SELECT vec_id, CAST(i // 4 AS BIGINT) AS sub, i % 4 AS sd, " +
         "CAST(floor(v[i+1] * 1000000 + 0.5) AS BIGINT) AS xi " +
         "FROM e CROSS JOIN (SELECT UNNEST(range(0,64)) AS i) ix), " +
-        "pc0 AS (SELECT sub, vec_id AS cell, sd, xi AS ci FROM pcm WHERE vec_id < 32), " +
-        "pd1 AS (SELECT c.vec_id, c.sub, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM pcm c JOIN pc0 k ON k.sub = c.sub AND k.sd = c.sd GROUP BY 1, 2, 3), " +
-        "pa1 AS (SELECT vec_id, sub, cell FROM (SELECT vec_id, sub, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id, sub ORDER BY dist, cell) AS rn FROM pd1) WHERE rn = 1), " +
-        "pc1 AS (SELECT a.sub, a.cell, c.sd, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
-        "FROM pcm c JOIN pa1 a ON a.vec_id = c.vec_id AND a.sub = c.sub GROUP BY 1, 2, 3), " +
-        "pd2 AS (SELECT c.vec_id, c.sub, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM pcm c JOIN pc1 k ON k.sub = c.sub AND k.sd = c.sd GROUP BY 1, 2, 3), " +
+        pqLloydSqlCtes("p", "pcm") +
         "codes AS (SELECT vec_id, sub, cell AS code FROM (SELECT vec_id, sub, cell, " +
         "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cell) AS rn FROM pd2) WHERE rn = 1), " +
         s"lut AS (SELECT vec_id AS query_id, sub, cell, dist FROM pd2 WHERE vec_id BETWEEN $qLo AND $qHi), " +
@@ -485,35 +488,14 @@ object Vectors {
     * `r` — shared by q96 and q137 (rnk cut + exact re-rank over the
     * same `comps`). */
   private val Q96AdcSqlCtes: String =
-    "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "comps AS (SELECT vec_id, i AS d, CAST(floor(v[i+1] * 1000000 + 0.5) AS BIGINT) AS xi " +
-        "FROM e CROSS JOIN (SELECT UNNEST(range(0,64)) AS i) ix), " +
-        "c0 AS (SELECT vec_id AS cell, d, xi AS ci FROM comps WHERE vec_id < 4), " +
-        "d1 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c0 k USING (d) GROUP BY 1, 2), " +
-        "a1 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d1) WHERE rn = 1), " +
-        "c1 AS (SELECT a.cell, c.d, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
-        "FROM comps c JOIN a1 a USING (vec_id) GROUP BY 1, 2), " +
-        "d2 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c1 k USING (d) GROUP BY 1, 2), " +
-        "a2 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d2) WHERE rn = 1), " +
+    "WITH " + LloydSqlCtes +
         "p AS (SELECT vec_id AS query_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
         "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d2 WHERE vec_id BETWEEN 1 AND 5) " +
         "WHERE rn <= 2), " +
         "rcm AS (SELECT c.vec_id, CAST(c.d // 4 AS BIGINT) AS sub, c.d % 4 AS sd, " +
         "c.xi - k.ci AS xi FROM comps c JOIN a2 a ON a.vec_id = c.vec_id " +
         "JOIN c1 k ON k.cell = a.cell AND k.d = c.d), " +
-        "pc0 AS (SELECT sub, vec_id AS cell, sd, xi AS ci FROM rcm WHERE vec_id < 32), " +
-        "pd1 AS (SELECT c.vec_id, c.sub, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM rcm c JOIN pc0 k ON k.sub = c.sub AND k.sd = c.sd GROUP BY 1, 2, 3), " +
-        "pa1 AS (SELECT vec_id, sub, cell FROM (SELECT vec_id, sub, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id, sub ORDER BY dist, cell) AS rn FROM pd1) WHERE rn = 1), " +
-        "pc1 AS (SELECT a.sub, a.cell, c.sd, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
-        "FROM rcm c JOIN pa1 a ON a.vec_id = c.vec_id AND a.sub = c.sub GROUP BY 1, 2, 3), " +
-        "pd2 AS (SELECT c.vec_id, c.sub, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM rcm c JOIN pc1 k ON k.sub = c.sub AND k.sd = c.sd GROUP BY 1, 2, 3), " +
+        pqLloydSqlCtes("p", "rcm") +
         "codes AS (SELECT vec_id, sub, cell AS code FROM (SELECT vec_id, sub, cell, " +
         "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cell) AS rn FROM pd2) WHERE rn = 1), " +
         "qr AS (SELECT p.query_id, p.cell AS pcell, CAST(c.d // 4 AS BIGINT) AS sub, " +
@@ -548,18 +530,8 @@ object Vectors {
     * vectors, exact integer squared-distance top-3. */
   private def refineStage(s: SparkSession, d: String,
       scored: DataFrame): DataFrame = {
-    import graft.operators.KMeansLloyd
-    def topBy(k: Int) = udaf(new graft.functions.TopKRows(k),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong))
-    val shortlist = scored
-      .select(col("query_id"), col("vec_id"), (-col("adist")).cast("double").as("negd"))
-      .groupBy(col("query_id"))
-      .agg(topBy(RefineShortlist)(col("negd"), col("vec_id"), lit(0L)).as("top"))
-      .select(col("query_id"), explode(col("top")).as("e"))
-      .select(col("query_id"), col("e._2").as("vec_id"))
+    val shortlist = nearest(scored, RefineShortlist, "adist")
+      .select(col("query_id"), col("neighbor_id").as("vec_id"))
     val vecs = Tables(s, d, "embeddings")
       .select(col("vec_id"), KMeansLloyd.quantize(col("embedding")).as("xi"))
     val exact = shortlist
@@ -569,15 +541,30 @@ object Vectors {
       .select(col("query_id"), col("vec_id"),
         aggregate(zip_with(col("qx"), col("nx"), (x, y) => (x - y) * (x - y)),
           lit(0L), (a, v) => a + v).as("edist"))
-    exact
-      .select(col("query_id"), col("vec_id"), (-col("edist")).cast("double").as("negd"))
-      .groupBy(col("query_id"))
-      .agg(topBy(3)(col("negd"), col("vec_id"), lit(0L)).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("query_id"), (col("pos") + 1).as("rnk"),
-        col("e._2").as("neighbor_id"), (-col("e._1")).cast("long").as("edist"))
-      .orderBy(col("query_id"), col("rnk"))
+    nearest(exact, 3, "edist").orderBy(col("query_id"), col("rnk"))
   }
+
+  /** Per query, the `k` candidates with the smallest integer `dist`
+    * (ties to the lower vec_id): (query_id, rnk, neighbor_id, dist). */
+  private def nearest(scored: DataFrame, k: Int, dist: String): DataFrame =
+    TopKRows.ranked(scored, k, Seq("query_id"), (-col(dist)).cast("double"), col("vec_id"))
+      .select(col("query_id"), col("rank").as("rnk"), col("id").as("neighbor_id"),
+        (-col("score")).cast("long").as(dist))
+
+  /** Per query, the 3 most cosine-similar candidates (ties to the lower
+    * vec_id): (query_id, rnk, neighbor_id, sim) — q48's window form
+    * as a bounded fold. */
+  private def simTop3(scored: DataFrame): DataFrame =
+    TopKRows.ranked(scored, 3, Seq("query_id"), col("sim"), col("vec_id"))
+      .select(col("query_id"), col("rank").as("rnk"), col("id").as("neighbor_id"),
+        col("score").as("sim"))
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** The ADC top-3 ORACLE tail appended to either ADC CTE chain (q90's
+    * or q96's) — the SQL twin of [[adcTop3Stage]]. */
+  private lazy val AdcTop3SqlTail: String =
+    " SELECT query_id, rnk, vec_id AS neighbor_id, adist FROM r WHERE rnk <= 3 " +
+      "ORDER BY query_id, rnk"
 
   /** The shared refine ORACLE tail appended to either ADC CTE chain
     * (q90's or q96's — both end in `r` over the same `comps`). */
@@ -685,21 +672,8 @@ object Vectors {
 
   /** q96's ADC top-3 tail, factored so the persisted-index serve
     * (q141) and the in-session entry share it verbatim. */
-  private def adcTop3Stage(scored: DataFrame): DataFrame = {
-    val topk = udaf(new graft.functions.TopKRows(3),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong))
-    scored
-      .select(col("query_id"), col("vec_id"), (-col("adist")).cast("double").as("negd"))
-      .groupBy(col("query_id"))
-      .agg(topk(col("negd"), col("vec_id"), lit(0L)).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("query_id"), (col("pos") + 1).as("rnk"),
-        col("e._2").as("neighbor_id"), (-col("e._1")).cast("long").as("adist"))
-      .orderBy(col("query_id"), col("rnk"))
-  }
+  private def adcTop3Stage(scored: DataFrame): DataFrame =
+    nearest(scored, 3, "adist").orderBy(col("query_id"), col("rnk"))
 
   private lazy val Q139Def: QueryDef = QueryDef("q139_ivfpq_index_persist",
     // SAVE the trained index, then serve FROM THE STORE in the same
@@ -752,9 +726,7 @@ object Vectors {
         AnnIndexStore.loadBooks(fresh, dir), AnnIndexStore.loadCodes(fresh, dir),
         AnnIndexStore.loadCentroids(fresh, dir)))
     },
-    Some(Q96AdcSqlCtes +
-      " SELECT query_id, rnk, vec_id AS neighbor_id, adist FROM r WHERE rnk <= 3 " +
-      "ORDER BY query_id, rnk"))
+    Some(Q96AdcSqlCtes + AdcTop3SqlTail))
 
   private lazy val Q144Def: QueryDef = QueryDef("q144_ivfpq_serving_sla",
     // SERVING AT REQUEST SCALE from the persisted index (VERDICT r13
@@ -781,9 +753,7 @@ object Vectors {
         AnnIndexStore.loadBooks(fresh, dir), AnnIndexStore.loadCodes(fresh, dir),
         AnnIndexStore.loadCentroids(fresh, dir), qLo = 1, qHi = 100))
     },
-    Some(q90AdcSqlCtesFor(1, 100) +
-      " SELECT query_id, rnk, vec_id AS neighbor_id, adist FROM r WHERE rnk <= 3 " +
-      "ORDER BY query_id, rnk"))
+    Some(q90AdcSqlCtesFor(1, 100) + AdcTop3SqlTail))
 
   /** Per-query serving latencies (ms) against the LOADED index — the
     * Bench serving-SLA block behind q144. Load cost is paid once
@@ -852,7 +822,7 @@ object Vectors {
     * the per-query serving closure (latency in ms). */
   private def servingSlaSetup(s: SparkSession, d: String,
       nQueries: Int): (Array[(Long, Array[Long])], (Long, Array[Long]) => Double) = {
-    import graft.operators.{AnnIndexStore, KMeansLloyd}
+    import graft.operators.AnnIndexStore
     val dir = if (AnnIndexStore.committed(pqStoreDir(d))) pqStoreDir(d)
       else buildAndSavePq(s, d)
     val serve = s.newSession()
@@ -1043,11 +1013,73 @@ object Vectors {
       .collect().map(r => (r.getInt(0), r.getLong(1)))
   }
 
-  /** q116's trained permuted index — (dealt perm, permuted vectors,
-    * codebooks), memoized per (session, dir) like [[pqBooks]]: train
-    * once, serve the entry and every bench repetition. */
-  private val opqCache = new graft.SessionCache[
-    (Seq[(Int, Int, Int, Long)], DataFrame, Seq[Seq[KMeansLloyd.Centroid]])](_ => ())
+  /** A trained OPQ-P index: the deal as (sub, slot, dim, variance key)
+    * per dim, the permuted vectors and their PQ codebooks. */
+  private type OpqIndex = (Seq[(Int, Int, Int, Long)], DataFrame, Seq[Seq[KMeansLloyd.Centroid]])
+
+  /** q116's trained permuted index, memoized per (session, dir) like
+    * [[pqBooks]]: train once, serve the entry and every bench
+    * repetition. */
+  private val opqCache = new graft.SessionCache[OpqIndex](_ => ())
+
+  /** The OPQ-P deal shared by q116 and q116b: rank the dims of `vecs`
+    * by variance key, deal them round-robin (rank i → subspace i % m,
+    * slot i / m — every subspace gets one dim per variance tier),
+    * permute the vectors and train the UNCHANGED PQ codebooks on them. */
+  private def opqDeal(vecs: DataFrame): OpqIndex = {
+    // per-dimension variance keys — 64 rows, bounded driver collect;
+    // overflow-guarded past VarKeySafeN (varianceKeys)
+    val varRows = varianceKeys(vecs, vecs.count())
+    val ranked = varRows.sortBy { case (dd, vk) => (-vk, dd) }
+    val perm: Seq[(Int, Int, Int, Long)] = ranked.zipWithIndex.map {
+      case ((dd, vk), i) => (i % PqM, i / PqM, dd, vk) }.toSeq
+    val order = perm.sortBy { case (sub, sd, _, _) => (sub, sd) }
+    // repartition BEFORE the checkpoint: the parquet scan is one
+    // file → one partition, and the distortion pass evaluates
+    // 16×32 higher-order aggregate/zip_with lambdas per row
+    // (interpreted, not codegen) — single-threaded that scan is
+    // ~3 s; spread over the cores it's ~0.2 s. Result is
+    // partition-independent (pure per-row expressions + aggs).
+    val pv = vecs.select(col("vec_id"),
+      array(order.map { case (_, _, dd, _) => col("xi").getItem(dd) }: _*).as("xi"))
+      .repartition(32)
+      .localCheckpoint(true)
+    (perm, pv, trainPqBooks(pv))
+  }
+
+  /** The OPQ report q116 and q116b emit: per subspace, its dealt dims,
+    * summed variance key (/1e6) and exact integer training distortion. */
+  private def opqReport(s: SparkSession, index: OpqIndex): DataFrame = {
+    val (perm, pvecs, books) = index
+    val dists = pvecs.select(
+        posexplode(array((0 until PqM).map(sub =>
+          pqSubDist(sub, books(sub))): _*)).as(Seq("sub", "dist")))
+      .groupBy(col("sub")).agg(sum(col("dist")).as("distortion"))
+    val meta = perm.groupBy(_._1).toSeq.map { case (sub, rows) =>
+      val bySlot = rows.sortBy(_._2)
+      (sub.toLong, bySlot.map(_._3).mkString(","), bySlot.map(_._4 / 1000000L).sum)
+    }
+    val metaDf = s.createDataFrame(meta).toDF("sub", "dims", "var_scaled")
+    metaDf.join(dists, metaDf("sub") === dists("sub"))
+      .select(metaDf("sub"), col("dims"), col("var_scaled"), col("distortion"))
+      .orderBy(metaDf("sub"))
+  }
+
+  /** The oracle tail of q116/q116b over integer components
+    * `src(vec_id, dd, x)`: variance keys, the round-robin deal `pm`,
+    * the per-subspace Lloyd's and the per-subspace report. */
+  private def opqSqlTail(src: String): String =
+    vkCteSql("vk", src) +
+      "pm AS (SELECT dd, vk, CAST((rn-1) % 16 AS BIGINT) AS sub, CAST((rn-1) // 16 AS BIGINT) AS sd " +
+      "FROM (SELECT dd, vk, ROW_NUMBER() OVER (ORDER BY vk DESC, dd) AS rn FROM vk)), " +
+      s"comps AS MATERIALIZED (SELECT c.vec_id, p.sub, p.sd, c.x AS xi FROM $src c JOIN pm p USING (dd)), " +
+      pqLloydSqlCtes("", "comps") +
+      "amin AS (SELECT vec_id, sub, MIN(dist) AS dist FROM d2 GROUP BY vec_id, sub), " +
+      "dst AS (SELECT sub, CAST(SUM(dist) AS BIGINT) AS distortion FROM amin GROUP BY sub), " +
+      "meta AS (SELECT sub, STRING_AGG(dd, ',' ORDER BY sd) AS dims, " +
+      "CAST(SUM(vk // 1000000) AS BIGINT) AS var_scaled FROM pm GROUP BY sub) " +
+      "SELECT m.sub, m.dims, m.var_scaled, d.distortion FROM meta m " +
+      "JOIN dst d ON d.sub = m.sub ORDER BY m.sub"
 
   private lazy val Q116Def: QueryDef = QueryDef("q116_opq_balanced_pq",
     // OPQ, parametric form (Ge et al., CVPR 2013 "Optimized Product
@@ -1071,67 +1103,13 @@ object Vectors {
     // learned rotation (SVD) could never be. The spec pins the point:
     // balanced allocation's max-to-min subspace variance ratio must
     // collapse vs contiguous, and total distortion must not regress.
-    (s, d) => {
-      val (perm, pvecs, books) = opqCache.getOrElseUpdate(s, d, {
-        val vecs = Tables(s, d, "embeddings")
-          .select(col("vec_id"), KMeansLloyd.quantize(col("embedding")).as("xi"))
-        // per-dimension variance keys — 64 rows, bounded driver
-        // collect; overflow-guarded past VarKeySafeN (varianceKeys)
-        val varRows = varianceKeys(vecs, vecs.count())
-        // deal dims round-robin by descending variance: rank i →
-        // subspace i % m, slot i / m — every subspace gets one dim per
-        // variance tier
-        val ranked = varRows.sortBy { case (dd, vk) => (-vk, dd) }
-        val perm0: Seq[(Int, Int, Int, Long)] = ranked.zipWithIndex.map {
-          case ((dd, vk), i) => (i % PqM, i / PqM, dd, vk) }.toSeq
-        val order = perm0.sortBy { case (sub, sd, _, _) => (sub, sd) }
-        // repartition BEFORE the checkpoint: the parquet scan is one
-        // file → one partition, and the distortion pass evaluates
-        // 16×32 higher-order aggregate/zip_with lambdas per row
-        // (interpreted, not codegen) — single-threaded that scan is
-        // ~3 s; spread over the cores it's ~0.2 s. Result is
-        // partition-independent (pure per-row expressions + aggs).
-        val pv = vecs.select(col("vec_id"),
-          array(order.map { case (_, _, dd, _) => col("xi").getItem(dd) }: _*).as("xi"))
-          .repartition(32)
-          .localCheckpoint(true)
-        (perm0, pv, trainPqBooks(pv))
-      })
-      val dists = pvecs.select(
-          posexplode(array((0 until PqM).map(sub =>
-            pqSubDist(sub, books(sub))): _*)).as(Seq("sub", "dist")))
-        .groupBy(col("sub")).agg(sum(col("dist")).as("distortion"))
-      val meta = perm.groupBy(_._1).toSeq.map { case (sub, rows) =>
-        val bySlot = rows.sortBy(_._2)
-        (sub.toLong, bySlot.map(_._3).mkString(","), bySlot.map(_._4 / 1000000L).sum)
-      }
-      val metaDf = s.createDataFrame(meta).toDF("sub", "dims", "var_scaled")
-      metaDf.join(dists, metaDf("sub") === dists("sub"))
-        .select(metaDf("sub"), col("dims"), col("var_scaled"), col("distortion"))
-        .orderBy(metaDf("sub"))
-    },
+    (s, d) => opqReport(s, opqCache.getOrElseUpdate(s, d, opqDeal(
+      Tables(s, d, "embeddings")
+        .select(col("vec_id"), KMeansLloyd.quantize(col("embedding")).as("xi"))))),
     Some("WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
       "cm AS (SELECT vec_id, i AS dd, CAST(floor(v[i+1] * 1000000 + 0.5) AS BIGINT) AS x " +
       "FROM ev CROSS JOIN (SELECT UNNEST(range(0,64)) AS i) ix), " +
-      vkCteSql("vk", "cm") +
-      "pm AS (SELECT dd, vk, CAST((rn-1) % 16 AS BIGINT) AS sub, CAST((rn-1) // 16 AS BIGINT) AS sd " +
-      "FROM (SELECT dd, vk, ROW_NUMBER() OVER (ORDER BY vk DESC, dd) AS rn FROM vk)), " +
-      "comps AS MATERIALIZED (SELECT c.vec_id, p.sub, p.sd, c.x AS xi FROM cm c JOIN pm p USING (dd)), " +
-      "c0 AS (SELECT sub, vec_id AS cell, sd, xi AS ci FROM comps WHERE vec_id < 32), " +
-      "d1 AS (SELECT c.vec_id, c.sub, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-      "FROM comps c JOIN c0 k ON k.sub = c.sub AND k.sd = c.sd GROUP BY 1, 2, 3), " +
-      "a1 AS (SELECT vec_id, sub, cell FROM (SELECT vec_id, sub, cell, ROW_NUMBER() OVER " +
-      "(PARTITION BY vec_id, sub ORDER BY dist, cell) AS rn FROM d1) WHERE rn = 1), " +
-      "c1 AS (SELECT a.sub, a.cell, c.sd, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
-      "FROM comps c JOIN a1 a ON a.vec_id = c.vec_id AND a.sub = c.sub GROUP BY 1, 2, 3), " +
-      "d2 AS (SELECT c.vec_id, c.sub, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-      "FROM comps c JOIN c1 k ON k.sub = c.sub AND k.sd = c.sd GROUP BY 1, 2, 3), " +
-      "amin AS (SELECT vec_id, sub, MIN(dist) AS dist FROM d2 GROUP BY vec_id, sub), " +
-      "dst AS (SELECT sub, CAST(SUM(dist) AS BIGINT) AS distortion FROM amin GROUP BY sub), " +
-      "meta AS (SELECT sub, STRING_AGG(dd, ',' ORDER BY sd) AS dims, " +
-      "CAST(SUM(vk // 1000000) AS BIGINT) AS var_scaled FROM pm GROUP BY sub) " +
-      "SELECT m.sub, m.dims, m.var_scaled, d.distortion FROM meta m " +
-      "JOIN dst d ON d.sub = m.sub ORDER BY m.sub"))
+      opqSqlTail("cm")))
 
   /** The guarded variance-key CTE (shared by q116's `vk`, q116b's
     * `vk0`/`vk`): the SQL twin of [[varianceKeys]] — exact key within
@@ -1180,8 +1158,7 @@ object Vectors {
     (pairs, vecs.select(col("vec_id"), array(rotCols: _*).as("xi")))
   }
 
-  private val opqRotCache = new graft.SessionCache[
-    (Seq[(Int, Int, Int, Long)], DataFrame, Seq[Seq[KMeansLloyd.Centroid]])](_ => ())
+  private val opqRotCache = new graft.SessionCache[OpqIndex](_ => ())
 
   private lazy val Q116bDef: QueryDef = QueryDef("q116b_opq_rotation",
     // OPQ, deterministic ROTATION form (the r9 stretch item — the one
@@ -1208,34 +1185,10 @@ object Vectors {
     // OpqVarianceKeySpec's boundary property. Everything replays in
     // DuckDB (rk/pr/rx CTEs) — a learned rotation that is still
     // oracle-HASHED.
-    (s, d) => {
-      val (perm, pvecs, books) = opqRotCache.getOrElseUpdate(s, d, {
-        val (_, rvecs0) = opqRotationStage(s, d)
-        val rvecs = rvecs0.repartition(32).localCheckpoint(true)
-        val varRows2 = varianceKeys(rvecs, rvecs.count())
-        val ranked2 = varRows2.sortBy { case (dd, vk) => (-vk, dd) }
-        val perm0: Seq[(Int, Int, Int, Long)] = ranked2.zipWithIndex.map {
-          case ((dd, vk), i) => (i % PqM, i / PqM, dd, vk) }.toSeq
-        val order = perm0.sortBy { case (sub, sd, _, _) => (sub, sd) }
-        val pv = rvecs.select(col("vec_id"),
-          array(order.map { case (_, _, dd, _) => col("xi").getItem(dd) }: _*).as("xi"))
-          .repartition(32)
-          .localCheckpoint(true)
-        (perm0, pv, trainPqBooks(pv))
-      })
-      val dists = pvecs.select(
-          posexplode(array((0 until PqM).map(sub =>
-            pqSubDist(sub, books(sub))): _*)).as(Seq("sub", "dist")))
-        .groupBy(col("sub")).agg(sum(col("dist")).as("distortion"))
-      val meta = perm.groupBy(_._1).toSeq.map { case (sub, rows) =>
-        val bySlot = rows.sortBy(_._2)
-        (sub.toLong, bySlot.map(_._3).mkString(","), bySlot.map(_._4 / 1000000L).sum)
-      }
-      val metaDf = s.createDataFrame(meta).toDF("sub", "dims", "var_scaled")
-      metaDf.join(dists, metaDf("sub") === dists("sub"))
-        .select(metaDf("sub"), col("dims"), col("var_scaled"), col("distortion"))
-        .orderBy(metaDf("sub"))
-    },
+    (s, d) => opqReport(s, opqRotCache.getOrElseUpdate(s, d, {
+      val (_, rvecs) = opqRotationStage(s, d)
+      opqDeal(rvecs.repartition(32).localCheckpoint(true))
+    })),
     Some("WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
       "cm AS (SELECT vec_id, i AS dd, CAST(floor(v[i+1] * 1000000 + 0.5) AS BIGINT) AS x " +
       "FROM ev CROSS JOIN (SELECT UNNEST(range(0,64)) AS i) ix), " +
@@ -1250,25 +1203,7 @@ object Vectors {
       "SELECT ch.vec_id, p.ld AS dd, " +
       s"CAST(floor((CAST(ch.x AS DOUBLE) + CAST(cl.x AS DOUBLE)) * $GivensC + 0.5) AS BIGINT) AS x " +
       "FROM pr p JOIN cm ch ON ch.dd = p.hd JOIN cm cl ON cl.dd = p.ld AND cl.vec_id = ch.vec_id), " +
-      vkCteSql("vk", "rx") +
-      "pm AS (SELECT dd, vk, CAST((rn-1) % 16 AS BIGINT) AS sub, CAST((rn-1) // 16 AS BIGINT) AS sd " +
-      "FROM (SELECT dd, vk, ROW_NUMBER() OVER (ORDER BY vk DESC, dd) AS rn FROM vk)), " +
-      "comps AS MATERIALIZED (SELECT c.vec_id, p.sub, p.sd, c.x AS xi FROM rx c JOIN pm p USING (dd)), " +
-      "c0 AS (SELECT sub, vec_id AS cell, sd, xi AS ci FROM comps WHERE vec_id < 32), " +
-      "d1 AS (SELECT c.vec_id, c.sub, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-      "FROM comps c JOIN c0 k ON k.sub = c.sub AND k.sd = c.sd GROUP BY 1, 2, 3), " +
-      "a1 AS (SELECT vec_id, sub, cell FROM (SELECT vec_id, sub, cell, ROW_NUMBER() OVER " +
-      "(PARTITION BY vec_id, sub ORDER BY dist, cell) AS rn FROM d1) WHERE rn = 1), " +
-      "c1 AS (SELECT a.sub, a.cell, c.sd, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
-      "FROM comps c JOIN a1 a ON a.vec_id = c.vec_id AND a.sub = c.sub GROUP BY 1, 2, 3), " +
-      "d2 AS (SELECT c.vec_id, c.sub, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-      "FROM comps c JOIN c1 k ON k.sub = c.sub AND k.sd = c.sd GROUP BY 1, 2, 3), " +
-      "amin AS (SELECT vec_id, sub, MIN(dist) AS dist FROM d2 GROUP BY vec_id, sub), " +
-      "dst AS (SELECT sub, CAST(SUM(dist) AS BIGINT) AS distortion FROM amin GROUP BY sub), " +
-      "meta AS (SELECT sub, STRING_AGG(dd, ',' ORDER BY sd) AS dims, " +
-      "CAST(SUM(vk // 1000000) AS BIGINT) AS var_scaled FROM pm GROUP BY sub) " +
-      "SELECT m.sub, m.dims, m.var_scaled, d.distortion FROM meta m " +
-      "JOIN dst d ON d.sub = m.sub ORDER BY m.sub"))
+      opqSqlTail("rx")))
 
   /** q115 margin threshold (ratio × 1e4): pairs must beat their two
     * endpoints' average retrieved-top-4 similarity by ≥ 2%. */
@@ -1364,72 +1299,55 @@ object Vectors {
       "FROM best a JOIN best b ON b.node = a.other AND b.other = a.node " +
       "WHERE a.node < a.other AND a.margin_e4 >= 10200 ORDER BY src_id"))
 
+  /** Brute-force scoring of q48/q48b: every vector against the 5
+    * queries (vec_id 1..5), cosine similarity rounded to 4 places. */
+  private def bruteScored(s: SparkSession, d: String): DataFrame = {
+    val e = embUnit(s, d).repartition(s.sparkContext.defaultParallelism)
+    val q = broadcast(e.where(col("vec_id").between(1, 5))
+      .select(col("vec_id").as("query_id"), col("u").as("qu")))
+    e.join(q, col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), round(dot(col("u"), col("qu")), 4).as("sim"))
+  }
+
+  /** The oracle of q48 and of its scale form q48b: the window top-3 of
+    * [[bruteScored]]. */
+  private val BruteTop3Sql: String =
+    "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
+      "q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id BETWEEN 1 AND 5), " +
+      "c AS (SELECT q.query_id, e.vec_id, ROUND(list_cosine_similarity(e.v, q.qv), 4) AS sim " +
+      "FROM e JOIN q ON e.vec_id <> q.query_id), " +
+      "r AS (SELECT query_id, vec_id, sim, ROW_NUMBER() OVER (PARTITION BY query_id " +
+      "ORDER BY sim DESC, vec_id) AS rnk FROM c) " +
+      "SELECT query_id, rnk, vec_id AS neighbor_id, sim FROM r WHERE rnk <= 3 " +
+      "ORDER BY query_id, rnk"
+
   private lazy val tailDefs: Seq[QueryDef] = Seq(
     QueryDef("q48_ann_topk",
       (s, d) => {
-        val e = embUnit(s, d).repartition(s.sparkContext.defaultParallelism)
-        val q = broadcast(e.where(col("vec_id").between(1, 5))
-          .select(col("vec_id").as("query_id"), col("u").as("qu")))
-        val scored = e.join(q, col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id"),
-            round(dot(col("u"), col("qu")), 4).as("sim"))
         val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
-        scored.withColumn("rnk", row_number().over(w))
+        bruteScored(s, d).withColumn("rnk", row_number().over(w))
           .where(col("rnk") <= 3)
           .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"), col("sim"))
           .orderBy(col("query_id"), col("rnk"))
       },
-      Some("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id BETWEEN 1 AND 5), " +
-        "c AS (SELECT q.query_id, e.vec_id, ROUND(list_cosine_similarity(e.v, q.qv), 4) AS sim " +
-        "FROM e JOIN q ON e.vec_id <> q.query_id), " +
-        "r AS (SELECT query_id, vec_id, sim, ROW_NUMBER() OVER (PARTITION BY query_id " +
-        "ORDER BY sim DESC, vec_id) AS rnk FROM c) " +
-        "SELECT query_id, rnk, vec_id AS neighbor_id, sim FROM r WHERE rnk <= 3 " +
-        "ORDER BY query_id, rnk")),
+      Some(BruteTop3Sql)),
 
     QueryDef("q48b_ann_topk_heap",
-      // The SCALE form of q48's per-query top-k, and the second consumer
-      // of the mergeable bounded-buffer Aggregator (functions/TopKRows —
-      // q18b introduced it for grouped table rows; this proves it
-      // generalizes to ANN scoring). q48's window form shuffles EVERY
-      // scored (query, candidate, sim) row to its query's partition and
-      // sorts the whole group to keep 3; here each task folds its scores
-      // into a ≤ 3-entry buffer per query, so the shuffle carries at
-      // most k·queries·tasks tuples and no sort of the score stream ever
-      // happens — for ANN that matters even more than for q18, because
+      // The SCALE form of q48's per-query top-k through the mergeable
+      // bounded-buffer stage (TopKRows.ranked — q18b uses it for grouped
+      // table rows; this proves it generalizes to ANN scoring). q48's
+      // window form shuffles EVERY scored (query, candidate, sim) row to
+      // its query's partition and sorts the whole group to keep 3; here
+      // each task folds its scores into a ≤ 3-entry buffer per query, so
+      // the shuffle carries at most k·queries·tasks tuples and no sort
+      // of the score stream ever happens — for ANN that matters even more than for q18, because
       // the scored stream is |queries|·n rows (bigger than the input
       // table). PlanSpec guards the plan windowless with a partial
       // (map-side) ObjectHashAggregate. Same oracle SQL as q48 — the
       // two forms must stay hash-identical. Tie order is total: TopKRows
       // orders (sim DESC, vec_id ASC), matching the window's ORDER BY.
-      (s, d) => {
-        val e = embUnit(s, d).repartition(s.sparkContext.defaultParallelism)
-        val q = broadcast(e.where(col("vec_id").between(1, 5))
-          .select(col("vec_id").as("query_id"), col("u").as("qu")))
-        val scored = e.join(q, col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id"),
-            round(dot(col("u"), col("qu")), 4).as("sim"))
-        val topk = udaf(new graft.functions.TopKRows(3),
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaDouble,
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaLong))
-        scored.groupBy(col("query_id"))
-          .agg(topk(col("sim"), col("vec_id"), lit(0L)).as("top"))
-          .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-          .select(col("query_id"), (col("pos") + 1).as("rnk"),
-            col("e._2").as("neighbor_id"), col("e._1").as("sim"))
-          .orderBy(col("query_id"), col("rnk"))
-      },
-      Some("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id BETWEEN 1 AND 5), " +
-        "c AS (SELECT q.query_id, e.vec_id, ROUND(list_cosine_similarity(e.v, q.qv), 4) AS sim " +
-        "FROM e JOIN q ON e.vec_id <> q.query_id), " +
-        "r AS (SELECT query_id, vec_id, sim, ROW_NUMBER() OVER (PARTITION BY query_id " +
-        "ORDER BY sim DESC, vec_id) AS rnk FROM c) " +
-        "SELECT query_id, rnk, vec_id AS neighbor_id, sim FROM r WHERE rnk <= 3 " +
-        "ORDER BY query_id, rnk")),
+      (s, d) => simTop3(bruteScored(s, d)),
+      Some(BruteTop3Sql)),
 
     QueryDef("q76_int8_quant",
       // Per-vector int8 quantization (the storage/bandwidth lever for a
@@ -1491,20 +1409,7 @@ object Vectors {
           .select(col("cell").cast("long").as("cell"), col("n_members"), col("centroid_norm2"))
           .orderBy(col("cell"))
       },
-      Some("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "comps AS (SELECT vec_id, i AS d, CAST(floor(v[i+1] * 1000000 + 0.5) AS BIGINT) AS xi " +
-        "FROM e CROSS JOIN (SELECT UNNEST(range(0,64)) AS i) ix), " +
-        "c0 AS (SELECT vec_id AS cell, d, xi AS ci FROM comps WHERE vec_id < 4), " +
-        "d1 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c0 k USING (d) GROUP BY 1, 2), " +
-        "a1 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d1) WHERE rn = 1), " +
-        "c1 AS (SELECT a.cell, c.d, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
-        "FROM comps c JOIN a1 a USING (vec_id) GROUP BY 1, 2), " +
-        "d2 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c1 k USING (d) GROUP BY 1, 2), " +
-        "a2 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d2) WHERE rn = 1), " +
+      Some("WITH " + LloydSqlCtes +
         "c2 AS (SELECT a.cell, c.d, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
         "FROM comps c JOIN a2 a USING (vec_id) GROUP BY 1, 2), " +
         "n AS (SELECT cell, COUNT(*) AS n_members FROM a2 GROUP BY cell), " +
@@ -1543,20 +1448,7 @@ object Vectors {
           .select(col("query_id"), col("rnk"), col("vec_id").as("neighbor_id"), col("sim"))
           .orderBy(col("query_id"), col("rnk"))
       },
-      Some("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "comps AS (SELECT vec_id, i AS d, CAST(floor(v[i+1] * 1000000 + 0.5) AS BIGINT) AS xi " +
-        "FROM e CROSS JOIN (SELECT UNNEST(range(0,64)) AS i) ix), " +
-        "c0 AS (SELECT vec_id AS cell, d, xi AS ci FROM comps WHERE vec_id < 4), " +
-        "d1 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c0 k USING (d) GROUP BY 1, 2), " +
-        "a1 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d1) WHERE rn = 1), " +
-        "c1 AS (SELECT a.cell, c.d, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
-        "FROM comps c JOIN a1 a USING (vec_id) GROUP BY 1, 2), " +
-        "d2 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c1 k USING (d) GROUP BY 1, 2), " +
-        "a2 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d2) WHERE rn = 1), " +
+      Some("WITH " + LloydSqlCtes +
         "q AS (SELECT vec_id AS query_id, cell FROM a2 WHERE vec_id BETWEEN 1 AND 5), " +
         "c AS (SELECT q.query_id, m.vec_id, " +
         "ROUND(list_cosine_similarity(ev.v, eq.v), 4) AS sim " +
@@ -1587,7 +1479,6 @@ object Vectors {
       // scores ~nProbe·n/k candidates. Recall vs brute q48 is pinned in
       // AnnIvfSpec ABOVE q73's single-probe floor.
       (s, d) => {
-        import graft.operators.KMeansLloyd
         val vecs = Tables(s, d, "embeddings")
           .select(col("vec_id"), KMeansLloyd.quantize(col("embedding")).as("xi"))
         val (assigned, probeCents, _) = lloydShared(s, d)
@@ -1604,32 +1495,9 @@ object Vectors {
             member("cell") === q("cell") && col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id"),
             round(dot(col("u"), col("qu")), 4).as("sim"))
-        val topk = udaf(new graft.functions.TopKRows(3),
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaDouble,
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaLong))
-        scored.groupBy(col("query_id"))
-          .agg(topk(col("sim"), col("vec_id"), lit(0L)).as("top"))
-          .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-          .select(col("query_id"), (col("pos") + 1).as("rnk"),
-            col("e._2").as("neighbor_id"), col("e._1").as("sim"))
-          .orderBy(col("query_id"), col("rnk"))
+        simTop3(scored)
       },
-      Some("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "comps AS (SELECT vec_id, i AS d, CAST(floor(v[i+1] * 1000000 + 0.5) AS BIGINT) AS xi " +
-        "FROM e CROSS JOIN (SELECT UNNEST(range(0,64)) AS i) ix), " +
-        "c0 AS (SELECT vec_id AS cell, d, xi AS ci FROM comps WHERE vec_id < 4), " +
-        "d1 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c0 k USING (d) GROUP BY 1, 2), " +
-        "a1 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d1) WHERE rn = 1), " +
-        "c1 AS (SELECT a.cell, c.d, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
-        "FROM comps c JOIN a1 a USING (vec_id) GROUP BY 1, 2), " +
-        "d2 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c1 k USING (d) GROUP BY 1, 2), " +
-        "a2 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d2) WHERE rn = 1), " +
+      Some("WITH " + LloydSqlCtes +
         "p AS (SELECT vec_id AS query_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
         "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d2 WHERE vec_id BETWEEN 1 AND 5) " +
         "WHERE rn <= 2), " +
@@ -1659,7 +1527,6 @@ object Vectors {
       // oracle-hashable. Per-query top-3 via TopKRows (windowless,
       // plan-guarded); probes broadcast, member scan never shuffles.
       (s, d) => {
-        import graft.operators.KMeansLloyd
         val vecs = Tables(s, d, "embeddings")
           .select(col("vec_id"), KMeansLloyd.quantize(col("embedding")).as("xi"))
         val (assigned, probeCents, _) = lloydShared(s, d)
@@ -1682,32 +1549,13 @@ object Vectors {
           .select(col("query_id"), col("vec_id"),
             expr("CAST(floor((qscale * scale) * CAST(aggregate(zip_with(qq, q, (a, b) -> a * b), " +
               "0L, (acc, x) -> acc + x) AS DOUBLE) * 1000000 + 0.5) AS BIGINT)").as("score_e6"))
-        val topk = udaf(new graft.functions.TopKRows(3),
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaDouble,
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaLong))
-        scored.groupBy(col("query_id"))
-          .agg(topk(col("score_e6").cast("double"), col("vec_id"), lit(0L)).as("top"))
-          .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-          .select(col("query_id"), (col("pos") + 1).as("rnk"),
-            col("e._2").as("neighbor_id"), col("e._1").cast("long").as("score_e6"))
+        TopKRows.ranked(scored, 3, Seq("query_id"), col("score_e6").cast("double"),
+            col("vec_id"))
+          .select(col("query_id"), col("rank").as("rnk"), col("id").as("neighbor_id"),
+            col("score").cast("long").as("score_e6"))
           .orderBy(col("query_id"), col("rnk"))
       },
-      Some("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "comps AS (SELECT vec_id, i AS d, CAST(floor(v[i+1] * 1000000 + 0.5) AS BIGINT) AS xi " +
-        "FROM e CROSS JOIN (SELECT UNNEST(range(0,64)) AS i) ix), " +
-        "c0 AS (SELECT vec_id AS cell, d, xi AS ci FROM comps WHERE vec_id < 4), " +
-        "d1 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c0 k USING (d) GROUP BY 1, 2), " +
-        "a1 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d1) WHERE rn = 1), " +
-        "c1 AS (SELECT a.cell, c.d, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
-        "FROM comps c JOIN a1 a USING (vec_id) GROUP BY 1, 2), " +
-        "d2 AS (SELECT c.vec_id, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c1 k USING (d) GROUP BY 1, 2), " +
-        "a2 AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d2) WHERE rn = 1), " +
+      Some("WITH " + LloydSqlCtes +
         "p AS (SELECT vec_id AS query_id, cell FROM (SELECT vec_id, cell, ROW_NUMBER() OVER " +
         "(PARTITION BY vec_id ORDER BY dist, cell) AS rn FROM d2 WHERE vec_id BETWEEN 1 AND 5) " +
         "WHERE rn <= 2), " +
@@ -1775,11 +1623,11 @@ object Vectors {
       // pipeline): every 25th vector is a query, its 10 nearest
       // neighbors by cosine vote with majority (ties broken by smaller
       // label), and the output is the (true_label, pred_label)
-      // confusion matrix. Third consumer of the mergeable bounded-
-      // buffer Aggregator (functions/TopKRows): neighbor labels ride
-      // the payload slot, so each task folds scores into a ≤ 10-entry
-      // buffer per query and the shuffle carries k·queries·tasks
-      // tuples — never the |queries|·n scored stream, and no sort.
+      // confusion matrix. The mergeable bounded-buffer stage
+      // (TopKRows.ranked) carries neighbor labels in its tie slot, so
+      // each task folds scores into a ≤ 10-entry buffer per query and
+      // the shuffle carries k·queries·tasks tuples — never the
+      // |queries|·n scored stream, and no sort.
       // At 100 TB: queries broadcast, scoring stays in the scan stage,
       // and the vote/confusion aggs are queries-sized.
       (s, d) => {
@@ -1796,15 +1644,9 @@ object Vectors {
           .select(col("query_id"), col("true_label"), col("vec_id"),
             col("label").cast("long").as("nb_label"),
             round(dot(col("u"), col("qu")), 4).as("sim"))
-        val topk = udaf(new graft.functions.TopKRows(10),
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaDouble,
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaLong))
-        val votes = scored.groupBy(col("query_id"), col("true_label"))
-          .agg(topk(col("sim"), col("vec_id"), col("nb_label")).as("top"))
-          .select(col("query_id"), col("true_label"), explode(col("top")).as("e"))
-          .groupBy(col("query_id"), col("true_label"), col("e._3").as("nb_label"))
+        val votes = TopKRows.ranked(scored, 10, Seq("query_id", "true_label"),
+            col("sim"), col("vec_id"), col("nb_label"))
+          .groupBy(col("query_id"), col("true_label"), col("tie").as("nb_label"))
           .agg(count(lit(1)).as("cnt"))
         val vw = Window.partitionBy(col("query_id"))
           .orderBy(col("cnt").desc, col("nb_label"))
@@ -1841,7 +1683,6 @@ object Vectors {
       // 0.10 random-label floor, so the fixture labels carry real
       // geometric signal and the query discriminates.
       (s, d) => {
-        import graft.operators.KMeansLloyd
         val vecs = Tables(s, d, "embeddings")
           .select(col("vec_id"), col("label"),
             KMeansLloyd.quantize(col("embedding")).as("xi"))
@@ -1885,7 +1726,6 @@ object Vectors {
       // (IncrementalIvfSpec adds shuffled multi-wave arrival, replay
       // idempotence, and the retrainDue boundary).
       (s, d) => {
-        import graft.operators.KMeansLloyd
         import graft.streaming.IncrementalIvf
         val all = Tables(s, d, "embeddings")
         val vecs = all.select(col("vec_id"), KMeansLloyd.quantize(col("embedding")).as("xi"))
@@ -1924,7 +1764,6 @@ object Vectors {
       // nothing else. Base-vector deletion is the REBUILD case and
       // stays out of the per-batch path (documented on the class).
       (s, d) => {
-        import graft.operators.KMeansLloyd
         import graft.streaming.IncrementalIvf
         val all = Tables(s, d, "embeddings")
         val vecs = all.select(col("vec_id"), KMeansLloyd.quantize(col("embedding")).as("xi"))
@@ -2009,22 +1848,9 @@ object Vectors {
               col("vec_id") =!= col("query_id"))
           .groupBy(col("query_id"), col("vec_id"))
           .agg(sum(col("dist")).as("adist"))
-        // per-query top-3 by ASCENDING distance: TopKRows keeps the
-        // largest sims, so rank on the negated distance (exact — ADC
-        // sums stay far below 2^53)
-        val topk = udaf(new graft.functions.TopKRows(3),
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaDouble,
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaLong))
-        scored
-          .select(col("query_id"), col("vec_id"), (-col("adist")).cast("double").as("negd"))
-          .groupBy(col("query_id"))
-          .agg(topk(col("negd"), col("vec_id"), lit(0L)).as("top"))
-          .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-          .select(col("query_id"), (col("pos") + 1).as("rnk"),
-            col("e._2").as("neighbor_id"), (-col("e._1")).cast("long").as("adist"))
-          .orderBy(col("query_id"), col("rnk"))
+        // per-query top-3 by ASCENDING distance (negated in [[nearest]];
+        // exact — ADC sums stay far below 2^53)
+        adcTop3Stage(scored)
       },
       // the oracle threads `sub` through the q68 CTE chain (one Lloyd's
       // per subspace in a single pass), encodes via the d2 argmin, and
@@ -2034,15 +1860,7 @@ object Vectors {
         "comps AS (SELECT vec_id, CAST(i // 4 AS BIGINT) AS sub, i % 4 AS sd, " +
         "CAST(floor(v[i+1] * 1000000 + 0.5) AS BIGINT) AS xi " +
         "FROM e CROSS JOIN (SELECT UNNEST(range(0,64)) AS i) ix), " +
-        "c0 AS (SELECT sub, vec_id AS cell, sd, xi AS ci FROM comps WHERE vec_id < 32), " +
-        "d1 AS (SELECT c.vec_id, c.sub, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c0 k ON k.sub = c.sub AND k.sd = c.sd GROUP BY 1, 2, 3), " +
-        "a1 AS (SELECT vec_id, sub, cell FROM (SELECT vec_id, sub, cell, ROW_NUMBER() OVER " +
-        "(PARTITION BY vec_id, sub ORDER BY dist, cell) AS rn FROM d1) WHERE rn = 1), " +
-        "c1 AS (SELECT a.sub, a.cell, c.sd, CAST(floor(CAST(SUM(c.xi) AS DOUBLE)/COUNT(*) + 0.5) AS BIGINT) AS ci " +
-        "FROM comps c JOIN a1 a ON a.vec_id = c.vec_id AND a.sub = c.sub GROUP BY 1, 2, 3), " +
-        "d2 AS (SELECT c.vec_id, c.sub, k.cell, SUM((c.xi - k.ci)*(c.xi - k.ci)) AS dist " +
-        "FROM comps c JOIN c1 k ON k.sub = c.sub AND k.sd = c.sd GROUP BY 1, 2, 3), " +
+        pqLloydSqlCtes("", "comps") +
         "codes AS (SELECT vec_id, sub, cell AS code FROM (SELECT vec_id, sub, cell, " +
         "ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cell) AS rn FROM d2) WHERE rn = 1), " +
         "lut AS (SELECT vec_id AS query_id, sub, cell, dist FROM d2 WHERE vec_id BETWEEN 1 AND 5), " +
@@ -2082,17 +1900,7 @@ object Vectors {
         val scored = member.join(q, col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id"),
             round(dot(col("u"), col("qu")), 4).as("sim"))
-        val topk = udaf(new graft.functions.TopKRows(3),
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaDouble,
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaLong))
-        scored.groupBy(col("query_id"))
-          .agg(topk(col("sim"), col("vec_id"), lit(0L)).as("top"))
-          .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-          .select(col("query_id"), (col("pos") + 1).as("rnk"),
-            col("e._2").as("neighbor_id"), col("e._1").as("sim"))
-          .orderBy(col("query_id"), col("rnk"))
+        simTop3(scored)
       },
       Some("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
         "f AS (SELECT e.vec_id, e.v FROM e JOIN documents d ON d.doc_id = e.vec_id " +
@@ -2130,28 +1938,11 @@ object Vectors {
       // three). AnnIvfSpec pins the ADC kernel's consistency: q90's
       // distances agree exactly with full-scan q89 on every
       // (query, neighbor) it emits.
-      (s, d) => {
-        val scored = ivfpqAdcScored(s, d)
-        val topk = udaf(new graft.functions.TopKRows(3),
-          org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.scalaDouble,
-            org.apache.spark.sql.Encoders.scalaLong,
-            org.apache.spark.sql.Encoders.scalaLong))
-        scored
-          .select(col("query_id"), col("vec_id"), (-col("adist")).cast("double").as("negd"))
-          .groupBy(col("query_id"))
-          .agg(topk(col("negd"), col("vec_id"), lit(0L)).as("top"))
-          .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-          .select(col("query_id"), (col("pos") + 1).as("rnk"),
-            col("e._2").as("neighbor_id"), (-col("e._1")).cast("long").as("adist"))
-          .orderBy(col("query_id"), col("rnk"))
-      },
+      (s, d) => adcTop3Stage(ivfpqAdcScored(s, d)),
       // oracle = q73b's coarse chain (cells a2, probes p) + q89's PQ
       // chain (prefixed pcm/pc0/pd1/pa1/pc1/pd2 → codes, lut), joined in
       // the scoring CTE: a candidate scores iff its cell is probed
-      Some(Q90AdcSqlCtes +
-        " SELECT query_id, rnk, vec_id AS neighbor_id, adist FROM r WHERE rnk <= 3 " +
-        "ORDER BY query_id, rnk")),
+      Some(Q90AdcSqlCtes + AdcTop3SqlTail)),
 
     QueryDef("q96_ivfpq_residual",
       // RESIDUAL product quantization — FAISS IndexIVFPQ's actual
@@ -2180,9 +1971,7 @@ object Vectors {
       // cell); the LUT is built per (query, probed cell) from the
       // query's per-cell residual qr scored against the pc1 codebook —
       // the same codewords the encode argmin (pd2) ran on
-      Some(Q96AdcSqlCtes +
-        " SELECT query_id, rnk, vec_id AS neighbor_id, adist FROM r WHERE rnk <= 3 " +
-        "ORDER BY query_id, rnk")),
+      Some(Q96AdcSqlCtes + AdcTop3SqlTail)),
 
     Q137Def,
 
@@ -2479,7 +2268,6 @@ object Vectors {
       // aggregates (bounded: 7 rows × 2 counts — the manifest
       // pattern, not a data-plane collect).
       (s, d) => {
-        import graft.operators.KMeansLloyd
         val e = embUnit(s, d).localCheckpoint(true)
         val n = e.count()
         val qv = broadcast(e.where(col("vec_id").between(1, 5))
@@ -2663,7 +2451,6 @@ object Vectors {
       // concentration-around-1 evidence, plus the exact pair count
       // per bucket. Output is bucket rows — bounded, hash-exact.
       (s, d) => {
-        import graft.operators.KMeansLloyd
         val k = 16
         val dims = 64
         def sign(i: Int, j: Int): Long = {
@@ -2825,17 +2612,7 @@ object Vectors {
         member("cell") === q("cell") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(dot(col("u"), col("qu")), 4).as("sim"))
-    val topk = udaf(new graft.functions.TopKRows(3),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong))
-    scored.groupBy(col("query_id"))
-      .agg(topk(col("sim"), col("vec_id"), lit(0L)).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("query_id"), (col("pos") + 1).as("rnk"),
-        col("e._2").as("neighbor_id"), col("e._1").as("sim"))
-      .orderBy(col("query_id"), col("rnk"))
+    simTop3(scored)
   }
 
   /** DuckDB oracle shared by q88 and qc3 (the CDC-fed twin): train on
@@ -2963,23 +2740,14 @@ object Vectors {
       .select(col("src"), col("dst"),
         round(dot(col("ea.u"), col("eb.u")), 4).as("sim"))
 
-  // windowless bounded top-K (TopKRows consumer #7 — the q48b form):
-  // each task folds scores into a <= K-entry buffer per node, so the
-  // shuffle carries K*nodes*tasks tuples and the scored pair stream is
-  // never sorted; tie order (sim DESC, dst ASC) matches the oracle's
-  // window exactly (the q48/q48b hash-identity claim)
-  private def nnTopK(K: Int)(scored: DataFrame): DataFrame = {
-    val topk = udaf(new graft.functions.TopKRows(K),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong))
-    scored.groupBy(col("src"))
-      .agg(topk(col("sim"), col("dst"), lit(0L)).as("top"))
-      .select(col("src"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("src"), col("e._2").as("dst"), col("e._1").as("sim"),
-        (col("pos") + 1).as("rnk"))
-  }
+  // windowless bounded top-K (the q48b form): each task folds scores
+  // into a <= K-entry buffer per node, so the shuffle carries
+  // K*nodes*tasks tuples and the scored pair stream is never sorted;
+  // tie order (sim DESC, dst ASC) matches the oracle's window exactly
+  // (the q48/q48b hash-identity claim)
+  private def nnTopK(K: Int)(scored: DataFrame): DataFrame =
+    TopKRows.ranked(scored, K, Seq("src"), col("sim"), col("dst"))
+      .select(col("src"), col("id").as("dst"), col("score").as("sim"), col("rank").as("rnk"))
 
   /** The NN-Descent co-neighbor refinement loop, shared by the base
     * (q113) and upper-HNSW-layer (q128) builds — member set enters only

@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.Tables
+import graft.operators.DedupGroups
 import graft.sources.cdc.{CdcEvent, CdcProjection, DdlEvent, SchemaRegistry}
 import graft.sources.cdc.testkit.MockMaxScaleServer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -506,10 +507,7 @@ object CdcAnalytics {
     val tmp = graft.util.Scratch.dir("qc7-cdc")
     val inc = runNearDupRetractPipeline(s, events, s"$tmp/state", s"$tmp/ckpt",
       events.size.toLong)
-    inc.groups(s)
-      .groupBy(col("rep").as("rep_doc"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("rep_doc"))
+    DedupGroups.sizes(inc.groups(s))
   }
 
   /** qc21's query body: the CDC-fed MATERIALIZED CURATION VIEW — the
@@ -591,10 +589,7 @@ object CdcAnalytics {
     IncrementalNearDup.rebandMigrate(s, s"$tmp/state", 4, 4)
     val inc = runNearDupRetractPipeline(s, w2, s"$tmp/state", s"$tmp/ckpt2",
       w2.size.toLong, nBands = 4, bandR = 4)
-    inc.groups(s)
-      .groupBy(col("rep").as("rep_doc"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("rep_doc"))
+    DedupGroups.sizes(inc.groups(s))
   }
 
   /** The documents-feed payload as a replica table schema (doc analog
@@ -638,10 +633,7 @@ object CdcAnalytics {
       replica.snapshot(s).select(col("doc_id"), col("text")), 8, 4)
     val inc = runNearDupRetractPipeline(s, w2, s"$tmp/state", s"$tmp/ckpt2",
       w2.size.toLong, nBands = 8, bandR = 4)
-    inc.groups(s)
-      .groupBy(col("rep").as("rep_doc"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("rep_doc"))
+    DedupGroups.sizes(inc.groups(s))
   }
 
   /** qc14's query body: standing up a RE-DESIGNED RocksDB state-store
@@ -698,10 +690,7 @@ object CdcAnalytics {
       StateStoreNearDup.foldOpEvents(events),
       st32full.where(col("doc_id") % RetractMod =!= 0)
         .select(col("doc_id"), col("hs"), col("nbg")))
-    graft.operators.DedupGroups.components(verified)
-      .groupBy(col("rep").as("rep_doc"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("rep_doc"))
+    DedupGroups.sizes(DedupGroups.components(verified))
   }
 
   // ---- qc8: the wire feeding the STATE-STORE near-dup as ONE
@@ -794,10 +783,7 @@ object CdcAnalytics {
     val st = LlmText.bigramStateCached(s, dir)
     val verified = LlmText.verifyPairs(cands,
       st.select(col("doc_id"), col("hs"), col("nbg")))
-    graft.operators.DedupGroups.components(verified)
-      .groupBy(col("rep").as("rep_doc"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("rep_doc"))
+    DedupGroups.sizes(DedupGroups.components(verified))
   }
 
   // ---- qc9: the wire feeding the STATE-STORE line dedup as ONE
@@ -890,10 +876,7 @@ object CdcAnalytics {
     val verified = LlmText.verifyPairs(StateStoreNearDup.foldOpEvents(ev),
       st.where(col("doc_id") % RetractMod =!= 0)
         .select(col("doc_id"), col("hs"), col("nbg")))
-    graft.operators.DedupGroups.components(verified)
-      .groupBy(col("rep").as("rep_doc"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("rep_doc"))
+    DedupGroups.sizes(DedupGroups.components(verified))
   }
 
   // ---- qc11: batch BOOTSTRAP → GTID handoff (the 100 TB deployment
@@ -978,10 +961,7 @@ object CdcAnalytics {
       expectRows = 1L + (nDocs - k), // DDL + the live half
       frontierGtid = s"0-1-$k", frontierKey = frontierShuffleKey(events, k),
       bootstrap = true)
-    inc.groups(s)
-      .groupBy(col("rep").as("rep_doc"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("rep_doc"))
+    DedupGroups.sizes(inc.groups(s))
   }
 
   /** The frontier doc's shuffle key: the k-th DML in the scripted

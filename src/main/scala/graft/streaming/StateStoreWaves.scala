@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -23,7 +23,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Every run writes its events to a parquet file sink: the sink that
   * recovers from a checkpoint, and the realistic production one — its
   * `_spark_metadata` commit log keeps the read-back exactly-once even
-  * if a crash leaves orphan files. */
+  * if a crash leaves orphan files.
+  *
+  * Under [[graft.util.StageAudit.capturing]] each drained wave's
+  * micro-batch plan is recorded as `<tag>:wave<i>`. */
 object StateStoreWaves {
 
   val RocksDbProvider =
@@ -87,6 +90,8 @@ object StateStoreWaves {
         waves.zipWithIndex.foreach { case (w, i) =>
           mem.addData(w.select(cols: _*).collect().toSeq)
           q.processAllAvailable()
+          graft.util.StageAudit.record(s"$tag:wave$i",
+            q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution)
           if (restartAfterWave.contains(i) && i < waves.size - 1) {
             q.stop()
             q = startParquetSink(events, evDir, ckpt)

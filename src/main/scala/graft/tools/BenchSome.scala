@@ -13,7 +13,7 @@ object BenchSome {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", graft.Bench.shufflePartitions(cpus))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")

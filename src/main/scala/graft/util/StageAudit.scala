@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 
 /** Capture hook for CONSTITUENT stage plans of driver-composed entries
   * (ADVICE r9 / VERDICT r11 item 6): the registry-wide plan audit
@@ -34,6 +35,13 @@ object StageAudit {
     if (enabled) buf.add(label -> df.queryExecution.executedPlan.toString)
     df
   }
+
+  /** Under capture, snapshots `label` → the executed plan of an
+    * execution that has already run (a streaming micro-batch's
+    * `lastExecution`); a no-op otherwise, `qe` not even evaluated. A
+    * null execution (no batch has run) records nothing. */
+  def record(label: String, qe: => QueryExecution): Unit =
+    if (enabled) Option(qe).foreach(e => buf.add(label -> e.executedPlan.toString))
 
   /** Run `body` with capture on; returns (body result, captured plans
     * in record order). Not reentrant — the audit spec is the only

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * entry end-to-end under [[graft.util.StageAudit.capturing]] and writes
   * (1) the entry's final `.explain("formatted")` plan and (2) every
   * captured constituent stage plan (the per-batch state appends /
-  * compactions a driver-composed entry's final plan never shows) to a
-  * file. The shuffle-partition counts inside `Exchange hashpartitioning
+  * compactions a driver-composed entry's final plan never shows, and
+  * each wave's micro-batch plan of the RocksDB state-store entries) to
+  * a file. The shuffle-partition counts inside `Exchange hashpartitioning
   * (..., N)` nodes are the before/after evidence for the micro-batch
   * partition sizing work — run with `SPARK_GRAFT_MICROBATCH_PARTITIONS=32`
   * to reproduce the pre-change plans on the same code.
@@ -29,31 +30,6 @@ object PlanDump {
       .foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // VERDICT r14 item 7: pure state-STORE entries (q119f/g, q66f–l)
-    // run their per-batch work inside a streaming query — StageAudit
-    // never sees those plans (no StateLayout append in them), so the
-    // before/after dumps differed only in the header. Capture every
-    // micro-batch execution that carries a state-store operator via
-    // the session's QueryExecutionListener (micro-batches invoke it
-    // like any other action); the partition count of the
-    // StateStoreRestore/Save exchange is the evidence the partition-
-    // sizing claims rest on.
-    val mbPlans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
-    spark.listenerManager.register(
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = {
-          val p = qe.executedPlan.toString
-          if (p.contains("StateStoreSave") || p.contains("StateStoreRestore") ||
-              p.contains("FlatMapGroupsWithState") ||
-              p.contains("TransformWithState"))
-            mbPlans.add(funcName -> p)
-        }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = ()
-      })
     val q = SparkEntry.allDefs.find(_.name == name).getOrElse(
       sys.error(s"no entry named $name"))
     val ((df, formatted), stages) = graft.util.StageAudit.capturing {
@@ -71,34 +47,9 @@ object PlanDump {
     sb.append(formatted).append("\n")
     if (stages.nonEmpty) {
       sb.append("\n---- constituent stage plans (StageAudit captures; " +
-        "per-batch state appends/compactions) ----\n")
+        "per-batch state appends/compactions, state-store micro-batches) ----\n")
     stages.foreach { case (label, plan) =>
         sb.append(s"\n-- stage: $label --\n").append(plan).append("\n")
-      }
-    }
-    // the ExecutionListenerBus delivers asynchronously — give the tail
-    // micro-batch events a moment to drain before reading the buffer
-    Thread.sleep(2000)
-    if (!mbPlans.isEmpty) {
-      sb.append("\n---- micro-batch state-store plans " +
-        "(QueryExecutionListener captures; DEDUPLICATED by plan shape — " +
-        "one representative per distinct plan string modulo ids) ----\n")
-      val seen = collection.mutable.Set[String]()
-      val it = mbPlans.iterator()
-      var kept = 0
-      while (it.hasNext) {
-        val (fn, p) = it.next()
-        // normalize expression ids / batch dirs so identical per-batch
-        // shapes collapse to one representative
-        val shape = p.replaceAll("#\\d+", "#x")
-          .replaceAll("state-\\d+", "state-N")
-          .replaceAll("batchId = \\d+", "batchId = N")
-          .replaceAll("/batch-\\d+", "/batch-N")
-        if (seen.add(shape)) {
-          kept += 1
-          sb.append(s"\n-- micro-batch plan $kept ($fn) --\n")
-            .append(p).append("\n")
-        }
       }
     }
     val p = java.nio.file.Paths.get(out)

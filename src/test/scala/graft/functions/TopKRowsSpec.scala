@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkTestSession
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +9,9 @@ import scala.util.Random
 
 /** The bounded top-k Aggregator must be a pure function of the input
   * multiset: identical to the sort-based answer and independent of how
-  * rows are partitioned (merge is associative + commutative). */
+  * rows are partitioned (merge is associative + commutative). Its
+  * ranked stage [[TopKRows.ranked]] must keep exactly the rows of the
+  * window form it replaces. */
 class TopKRowsSpec extends AnyFunSuite with SparkTestSession {
 
   private def refTopK(rows: Seq[(Double, Long, Long)], k: Int): Seq[(Double, Long, Long)] =
@@ -48,5 +51,41 @@ class TopKRowsSpec extends AnyFunSuite with SparkTestSession {
     val merged = agg.merge(buf, other)
     assert(merged.items.size <= 3)
     assert(merged.items == merged.items.sortBy { case (s, a, b) => (-s, a, b) })
+  }
+
+  /** A seeded frame with two group columns and many score ties: scores
+    * take 6 values, so `id` and then `tie` decide most ranks. */
+  private def tiedFrame = {
+    import spark.implicits._
+    val rnd = new Random(11)
+    Seq.fill(400)((rnd.nextInt(3).toLong, rnd.nextInt(2).toLong, rnd.nextInt(6).toDouble,
+        rnd.nextInt(30).toLong, rnd.nextInt(4).toLong))
+      .toDF("g1", "g2", "score", "id", "tie").repartition(5)
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+
+  test("ranked keeps the rows of row_number() OVER (PARTITION BY g ORDER BY score DESC, id, tie) <= k") {
+    val df = tiedFrame
+    for (k <- Seq(1, 4, 500)) {
+      val w = Window.partitionBy(col("g1"), col("g2"))
+        .orderBy(col("score").desc, col("id"), col("tie"))
+      val window = df.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+        .select(col("g1"), col("g2"), col("rank"), col("score"), col("id"), col("tie"))
+      val got = TopKRows.ranked(df, k, Seq("g1", "g2"), col("score"), col("id"), col("tie"))
+      assert(got.columns.toSeq == Seq("g1", "g2", "rank", "score", "id", "tie"))
+      assert(rows(got) == rows(window), s"k=$k")
+    }
+  }
+
+  test("ranked numbers ranks from 1 and ranks a negated score ascending") {
+    import spark.implicits._
+    val df = Seq((7L, 1L), (3L, 2L), (3L, 0L), (9L, 4L), (5L, 5L)).toDF("dist", "vec_id")
+    val got = TopKRows.ranked(df, 3, Nil, (-col("dist")).cast("double"), col("vec_id"))
+      .orderBy(col("rank"))
+      .select(col("rank"), (-col("score")).cast("long"), col("id"), col("tie"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(got == Seq((1, 3L, 0L, 0L), (2, 3L, 2L, 0L), (3, 5L, 5L, 0L)))
   }
 }
